@@ -22,7 +22,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // VARIANCE DISCIPLINE (VERDICT r12 #2): every query gets `reps`
     // timed repetitions (median reported); then the TOP-20 slowest plus
     // any query whose median regressed ≥2× and ≥0.5 s against the
@@ -40,15 +39,7 @@ object Bench {
     val loadGate = sys.env.getOrElse("SPARK_GRAFT_BENCH_LOAD_GATE", "4.0").toDouble
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json")
     val baseline = baselineMedians(sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE", "BENCH_DETAIL.json"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.fromEnv(4)
     // optional comma-separated allowlist for profiling single queries —
     // trimmed, and unknown names fail loudly (a typo must not silently
     // bench nothing)

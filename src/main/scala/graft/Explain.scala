@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection utility: prints the formatted physical plan and timed
   * count for one named query. Usage:
   *   sbt "runMain graft.Explain <queryName> [sfDir]"  */
@@ -9,26 +7,12 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm the JVM exactly like Bench does: the first Spark job in a
-    // session pays ~3-4 s of classloading/codegen that would otherwise be
-    // charged to whichever phase runs the first job (BUILD for queries
-    // with in-builder actions like zipWithIndex's partition-size count)
-    locally {
-      import org.apache.spark.sql.functions._
-      spark.range(200000)
-        .select(col("id"), md5(col("id").cast("string")).as("h"))
-        .groupBy(pmod(xxhash64(col("h")), lit(16))).count().count()
-    }
+    val spark = LocalSession.fromEnv(8)
+    // warm the JVM like Bench does: the first Spark job in a session pays
+    // ~3-4 s of classloading/codegen that would otherwise be charged to
+    // whichever phase runs the first job (BUILD for queries with
+    // in-builder actions like zipWithIndex's partition-size count)
+    graft.tools.Warmup.warmJvm(spark)
     // time construction + execution: queries with eager lineage cuts do
     // real work inside the builder fn, so timing count() alone lies
     val t0 = System.nanoTime()

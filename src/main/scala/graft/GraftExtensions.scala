@@ -7,12 +7,9 @@ import graft.functions._
 
 /**
  * SparkSessionExtensions entry point: registers the engine's native
- * Catalyst expressions as SQL functions, so any session created with
- *
- *   SparkSession.builder().withExtensions(new GraftExtensions) ...
- *   // or: spark.sql.extensions=graft.GraftExtensions
- *
- * can call `vec_dot`, `vec_cosine`, `vec_lsh_bucket`, `simhash64`,
+ * Catalyst expressions as SQL functions, so any session built with
+ * `withExtensions(new GraftExtensions)` (or with
+ * `spark.sql.extensions=graft.GraftExtensions`) can call `vec_dot`, `vec_cosine`, `vec_lsh_bucket`, `simhash64`,
  * `hamming64`, `min_window_hash` from SQL as first-class, codegen'd
  * functions.
  */

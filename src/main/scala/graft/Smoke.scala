@@ -1,20 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local analog of the driver's t1 smoke: SparkEntry.entry must return >0
   * rows on sf0.001. Run: sbt "runMain graft.Smoke". */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(8)
     val n = SparkEntry.entry(spark).count()
     println(s"ENTRY_ROWS=$n")
     assert(n > 0, "entry returned zero rows")

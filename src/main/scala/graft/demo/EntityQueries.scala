@@ -1345,11 +1345,10 @@ object EntityQueries {
            |c AS (SELECT node, count(*) AS n FROM m GROUP BY 1)
            |SELECT dg.src AS node, CAST(COALESCE(c.n, 0) AS BIGINT) AS n_triangles
            |FROM dg LEFT JOIN c ON c.node = dg.src""".stripMargin) { (s, d) =>
-      // symmetric form: the r16 paired probe (TriProbe, quiet 32c mins)
-      // measured the canonical half-list variant 1.08× slower here at
-      // sf0.1 (1.22 vs 1.13 s) — the halved degree-join volume doesn't
-      // pay for the extra orientation swap until the dedup shuffle is
-      // data-bound; triangleCountsCanonical stays available for that tier
+      // symmetric form: a paired in-session A/B (quiet 32c mins) measured
+      // a canonical half-list variant 1.08× slower here at sf0.1 (1.22 vs
+      // 1.13 s) — the halved degree-join volume doesn't pay for the extra
+      // orientation swap until the dedup shuffle is data-bound
       graft.ops.Graph.triangleCounts(
         graft.ops.Graph.coOccurrenceEdges(lineitem(s, d),
           "l_orderkey", "l_partkey"))
@@ -1944,8 +1943,8 @@ object EntityQueries {
            |    THEN (2000 * COALESCE(c.n, 0)) // (dg.deg * (dg.deg - 1))
            |    ELSE 0 END AS BIGINT) AS coeff_milli
            |FROM dg LEFT JOIN c ON c.node = dg.src""".stripMargin) { (s, d) =>
-      // symmetric form, same adjudication as graph_triangles (TriProbe
-      // paired mins: canonical 1.14× slower at sf0.1)
+      // symmetric form, same adjudication as graph_triangles (paired
+      // mins: canonical 1.14× slower at sf0.1)
       graft.ops.Graph.clusteringCoefficients(
         graft.ops.Graph.coOccurrenceEdges(lineitem(s, d),
           "l_orderkey", "l_partkey"))

@@ -21,9 +21,7 @@ import org.apache.spark.sql.SparkSession
  * never exceeds the session setting — a cluster run with a properly
  * sized `spark.sql.shuffle.partitions` is unaffected until a frame is
  * genuinely small, which is when coalescing is correct at any scale
- * (AQE would do the same where it is allowed to run). Rows-per-partition
- * is a conf so the trade can be re-timed per deployment without a
- * rebuild.
+ * (AQE would do the same where it is allowed to run).
  */
 object Adaptive {
 
@@ -32,16 +30,15 @@ object Adaptive {
     * vectors, candidate pairs) — 250k such rows is roughly a 15–30 MB
     * in-memory block, small enough to keep per-task state trivial and
     * large enough that per-task overhead stays amortized. */
-  final val RowsPerPartitionConf = "spark.graft.shuffleRowsPerPartition"
   final val DefaultRowsPerPartition = 250000L
 
-  /** Partition count for a frame of `rows` rows: `ceil(rows / target)`,
-    * clamped to [1, session shuffle partitions]. */
+  /** Partition count for a frame of `rows` rows:
+    * `ceil(rows / DefaultRowsPerPartition)`, clamped to [1, session
+    * shuffle partitions]. */
   def parts(spark: SparkSession, rows: Long): Int = {
-    val target = spark.conf.getOption(RowsPerPartitionConf)
-      .flatMap(_.toLongOption).filter(_ > 0).getOrElse(DefaultRowsPerPartition)
     val session = spark.sessionState.conf.numShufflePartitions
-    math.max(1L, math.min(session.toLong, (rows + target - 1) / target)).toInt
+    val wanted = (rows + DefaultRowsPerPartition - 1) / DefaultRowsPerPartition
+    math.max(1L, math.min(session.toLong, wanted)).toInt
   }
 
   /** Run `body` (plan CONSTRUCTION — the wrapped region may also span
@@ -52,7 +49,7 @@ object Adaptive {
     * AQE toggle. */
   def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.getOption(key)
+    val prev = Option.when(spark.sessionState.conf.contains(key))(spark.conf.get(key))
     spark.conf.set(key, n.toString)
     try body
     finally prev match {

@@ -40,27 +40,12 @@ object Graph {
     // a narrow op; the output row set is identical (each unordered pair
     // appears exactly once canonically, so symmetrizing after the dedup
     // reproduces the symmetric distinct edge list bit for bit).
-    // measurement escape hatch (ConfAB pairs the two shapes in-session;
-    // the shared host's load bands make cross-JVM timing incomparable)
-    if (df.sparkSession.conf.getOption("spark.graft.edgesLegacy").contains("true"))
-      return coOccurrencePairs(df, basketCol, itemCol).distinct()
     val canon = coOccurrenceCanonicalPairs(df, basketCol, itemCol).distinct()
     canon.select(explode(array(
         struct(col("src").as("src"), col("dst").as("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
   }
-
-  /** The DISTINCT undirected co-occurrence edge list in canonical
-    * `src < dst` orientation — one row per edge, half of
-    * [[coOccurrenceEdges]]' rows. The preferred input for consumers
-    * that re-orient edges anyway ([[triangleCountsCanonical]],
-    * [[clusteringCoefficientsCanonical]]): the symmetrizing explode
-    * (and its per-reference recompute in uncut fan-out plans) never
-    * happens, and every downstream join moves half the rows. */
-  def coOccurrenceCanonicalEdges(df: DataFrame, basketCol: String,
-      itemCol: String): DataFrame =
-    coOccurrenceCanonicalPairs(df, basketCol, itemCol).distinct()
 
   /** One row per basket-sharing item pair in canonical `src < dst`
     * orientation — half of [[coOccurrencePairs]]' fan-out; may repeat
@@ -381,56 +366,6 @@ object Graph {
     deg.select(col("src").as("node"))
       .join(counts, Seq("node"), "left")
       .select(col("node"), coalesce(col("__n"), lit(0L)).as("n_triangles"))
-  }
-
-  /** [[triangleCounts]] over the CANONICAL `src < dst` distinct edge
-    * list (one row per undirected edge, e.g.
-    * [[coOccurrenceCanonicalEdges]]): identical output, half the input —
-    * degrees come from one explode of the half-list, and the orientation
-    * join re-orients every canonical row by (degree, id) instead of
-    * filtering the symmetric list down to the same set (the symmetric
-    * form moved 2m rows through the two degree joins to keep m). */
-  def triangleCountsCanonical(canon: DataFrame): DataFrame = {
-    val deg = canon
-      .select(explode(array(col("src"), col("dst"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("__deg"))
-    val da = deg.select(col("node").as("__ua"), col("__deg").as("__da"))
-    val db = deg.select(col("node").as("__ub"), col("__deg").as("__db"))
-    // (degree, id) forward orientation as a SWAP, not a filter: src < dst
-    // already, so the tie case keeps (src, dst) — the same strict total
-    // order as [[triangleCounts]]
-    val fwd = col("__da") < col("__db") ||
-      (col("__da") === col("__db") && col("src") < col("dst"))
-    val f = canon
-      .join(da, col("src") === col("__ua"))
-      .join(db, col("dst") === col("__ub"))
-      .select(when(fwd, col("src")).otherwise(col("dst")).as("a"),
-        when(fwd, col("dst")).otherwise(col("src")).as("b"))
-    val e1 = f.select(col("a"), col("b").as("y"))
-    val e2 = f.select(col("a"), col("b").as("z"))
-    val tri = e1.join(e2, Seq("a")).where(col("y") =!= col("z"))
-      .join(f.select(col("a").as("y"), col("b").as("z")), Seq("y", "z"))
-      .select(col("a").as("x"), col("y"), col("z"))
-    val members = tri.select(col("x").as("node"))
-      .unionAll(tri.select(col("y").as("node")))
-      .unionAll(tri.select(col("z").as("node")))
-    val counts = members.groupBy("node").agg(count(lit(1)).as("__n"))
-    deg.select(col("node"))
-      .join(counts, Seq("node"), "left")
-      .select(col("node"), coalesce(col("__n"), lit(0L)).as("n_triangles"))
-  }
-
-  /** [[clusteringCoefficients]] over the canonical edge list — see
-    * [[triangleCountsCanonical]]. */
-  def clusteringCoefficientsCanonical(canon: DataFrame): DataFrame = {
-    val deg = canon
-      .select(explode(array(col("src"), col("dst"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-    triangleCountsCanonical(canon).join(deg, Seq("node"))
-      .select(col("node"), col("deg"), col("n_triangles"),
-        when(col("deg") >= 2,
-          expr("(2000 * n_triangles) div (deg * (deg - 1))"))
-          .otherwise(0L).as("coeff_milli"))
   }
 
   /**

@@ -1,5 +1,6 @@
 package graft.recon
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
 /**
@@ -28,11 +29,6 @@ object Checkpoints {
 
   final val DirConf = "spark.graft.checkpointDir"
 
-  /** Storage level for local-checkpoint cut blocks (a
-    * `StorageLevel.fromString` name, e.g. `MEMORY_AND_DISK_SER`);
-    * unset → Spark's local-checkpoint default (`MEMORY_AND_DISK`). */
-  final val CutStorageConf = "spark.graft.cutStorageLevel"
-
   private val cleanupHooked = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** Delete the per-app checkpoint subdir when the application ends. */
@@ -42,7 +38,7 @@ object Checkpoints {
         override def onApplicationEnd(
             end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
           sc.getCheckpointDir.foreach { d =>
-            val p = new org.apache.hadoop.fs.Path(d)
+            val p = new Path(d)
             try p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
             catch { case _: java.io.IOException => () } // best-effort
           }
@@ -97,7 +93,8 @@ object Checkpoints {
     def planned[T](body: => T): T =
       if (eager) body
       else {
-        val prev = spark.conf.getOption(AqeKey)
+        // an unset key is restored UNSET, not pinned to its default
+        val prev = Option.when(spark.sessionState.conf.contains(AqeKey))(spark.conf.get(AqeKey))
         spark.conf.set(AqeKey, "false")
         try body
         finally prev match {
@@ -108,28 +105,18 @@ object Checkpoints {
     spark.conf.getOption(DirConf) match {
       case Some(dir) if dir.nonEmpty =>
         val sc = spark.sparkContext
-        // setCheckpointDir stores a fully-QUALIFIED path ("file:/…",
+        // setCheckpointDir installs a fully-QUALIFIED path ("file:/…",
         // "hdfs://…") plus a per-app UUID subdir — qualify the configured
-        // dir the same way before the prefix check, or every cut would
-        // install a fresh subdir
-        val p = new org.apache.hadoop.fs.Path(dir)
-        val qualified = p.getFileSystem(sc.hadoopConfiguration)
-          .makeQualified(p).toString
-        if (!sc.getCheckpointDir.exists(_.startsWith(qualified))) sc.setCheckpointDir(dir)
+        // dir the same way and compare it with the installed dir's PARENT,
+        // or every cut would install a fresh subdir (and a string-prefix
+        // test would take `/x/ck` for the installed `/x/ck2/<uuid>`)
+        val p = new Path(dir)
+        val qualified = p.getFileSystem(sc.hadoopConfiguration).makeQualified(p)
+        if (!sc.getCheckpointDir.exists(cur => new Path(cur).getParent == qualified))
+          sc.setCheckpointDir(dir)
         hookCleanup(sc)
         planned(df.checkpoint(eager = eager))
-      case _ =>
-        // optional storage-level override for the local-checkpoint blocks
-        // (e.g. MEMORY_AND_DISK_SER): cut frames are re-read by several
-        // consumers, so block size vs decode cost is a measurable trade —
-        // keep it a conf so the A/B harness can pair-time it in-session.
-        // Always keep a disk tier: a truncated-lineage block that gets
-        // evicted without one cannot be recomputed.
-        spark.conf.getOption(CutStorageConf).filter(_.nonEmpty) match {
-          case Some(lvl) => planned(df.localCheckpoint(eager = eager,
-            org.apache.spark.storage.StorageLevel.fromString(lvl)))
-          case None => planned(df.localCheckpoint(eager = eager))
-        }
+      case _ => planned(df.localCheckpoint(eager = eager))
     }
   }
 }

@@ -24,10 +24,6 @@ object ExprBuilder {
   def typedProjection(fields: Seq[String], types: FieldTypes): Seq[Column] =
     fields.map(f => col(f).cast(types.sparkTypeOf(f)).as(f))
 
-  /** Arrow-schema analog (reference: src/expression_builder.py:29-43). */
-  def schemaFor(fields: Seq[String], types: FieldTypes): StructType =
-    StructType(fields.map(f => StructField(f, types.sparkTypeOf(f))))
-
   /**
    * Casts applied to the all-string external CSV so join-key columns match
    * internal types (reference: src/expression_builder.py:49-64, applied at
@@ -44,42 +40,6 @@ object ExprBuilder {
   def applyExternalKeyCasts(df: DataFrame, conf: ReconConfig): DataFrame =
     externalKeyCasts(conf).foldLeft(df) { case (d, (name, c)) =>
       d.withColumn(name, c)
-    }
-
-  /**
-   * Multi-key equi-join condition across two *aliased* sides
-   * (reference: left_on/right_on lists at src/reconciliatior.py:67-72).
-   * Null keys never match — same semantics as Polars and Mongo.
-   */
-  def joinCond(aAlias: String, bAlias: String, pairs: Seq[KeyPair]): Column =
-    pairs
-      .map(kp => col(s"$aAlias.${kp.internal}") === col(s"$bAlias.${kp.external}"))
-      .reduce(_ && _)
-
-  /** AND-fold of arbitrary predicates (reference `all_horizontal`,
-    * src/reconciliatior.py:97-100). */
-  def allOf(preds: Seq[Column]): Column =
-    preds.reduceOption(_ && _).getOrElse(lit(true))
-
-  /**
-   * `ext_`-prefix rename map for the external side
-   * (reference: src/data_extractor.py:104-110).
-   */
-  def prefixRenames(columns: Seq[String], prefix: String): Map[String, String] =
-    columns.map(c => c -> s"$prefix$c").toMap
-
-  def withPrefix(df: DataFrame, prefix: String): DataFrame =
-    df.toDF(df.columns.map(c => s"$prefix$c").toIndexedSeq: _*)
-
-  /**
-   * Shadow copies of join keys (`exd_` columns) so key values survive any
-   * downstream coalescing (reference: src/expression_builder.py:66-69).
-   * Spark joins on distinct names never coalesce, so this is only for
-   * output-schema parity with the reference.
-   */
-  def shadowKeyCopies(conf: ReconConfig, fromPrefix: String, toPrefix: String): Seq[Column] =
-    conf.keys.map { kp =>
-      col(s"$fromPrefix${kp.external}").as(s"$toPrefix${kp.external}")
     }
 
   /** Prefix-selector projection (reference: `cs.starts_with("ext_")`,

@@ -85,7 +85,6 @@ final case class ReconConfig(
 
   require(keys.nonEmpty, "reconciliation needs at least one key pair")
 
-  def externalKeys: Seq[String] = keys.map(_.external)
   def internalKeys: Seq[String] = keys.map(_.internal)
 
   /** Key pairs minus the tolerance field — the equi-key set of the tolerance

@@ -17,11 +17,9 @@ object Sinks {
 
   /** CSV result sink (S6, reference: df.write_csv at
     * src/reconciliatior.py:61-64). Single file to mirror the reference's
-    * one-file-per-result-set layout; drop the coalesce for scale-out. */
-  def writeCsv(df: DataFrame, path: String, singleFile: Boolean = true): Unit = {
-    val out = if (singleFile) df.coalesce(1) else df
-    out.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
-  }
+    * one-file-per-result-set layout. */
+  def writeCsv(df: DataFrame, path: String): Unit =
+    df.coalesce(1).write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
 
   /** JSON-Lines sink — the interchange format LLM data pipelines speak
     * (one JSON object per line, so the files stay splittable and a scan

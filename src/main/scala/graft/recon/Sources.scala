@@ -177,18 +177,6 @@ object Sources {
   }
 
   /**
-   * Row index via a global `row_number()` window. CAUTION: with no
-   * partition column Spark moves every row through ONE task for the
-   * stamping — fine for post-aggregation frames that are already small,
-   * a scale-killer on raw inputs. Prefer [[withRowIndexRanged]] there.
-   */
-  def withRowIndexBy(df: DataFrame, name: String, order: Seq[Column], offset: Long = 1L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    df.withColumn(name,
-      row_number().over(Window.orderBy(order: _*)).cast(LongType) + lit(offset - 1))
-  }
-
-  /**
    * Normalize MongoDB extended-JSON wrapper structs to scalar columns:
    * `{"$numberLong": "123"}` → long, `{"$oid": "..."}` → string,
    * `{"$numberInt"|"$numberDouble"|"$numberDecimal": ...}` → numeric,

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 
 /** Paired A/B timing of session-conf overrides on named registry queries.
   *
@@ -21,16 +21,7 @@ object ConfAB {
     }.toSeq
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val reps = if (args.length > 3) args(3).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.fromEnv(32)
     val unknown = names.filterNot(graft.SparkEntry.queries.contains)
     require(unknown.isEmpty, s"not in registry: ${unknown.mkString(", ")}")
     Warmup.warmJvm(spark)

@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 
 /** Job-grain profile of one registry query: every Spark job's wall time
   * and summed task time, plus the driver-side GAPS between jobs (plan,
@@ -15,16 +15,7 @@ object JobTrace {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.fromEnv(32)
     Warmup.warmJvm(spark)
 
     case class J(id: Int, submit: Long, var done: Long = 0L,

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 
 /**
  * Scale red-flag scan over every registered query's physical plan:
@@ -78,18 +78,11 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE OFF: AdaptiveSparkPlanExec is a leaf node — collect() would
-      // never see inside it and every audit would be vacuously green. The
-      // un-adapted plan is exactly the shape we need to inspect.
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.fromEnv(8)
+    // AQE OFF: AdaptiveSparkPlanExec is a leaf node — collect() would
+    // never see inside it and every audit would be vacuously green. The
+    // un-adapted plan is exactly the shape we need to inspect.
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("ERROR")
 
     // iteration aid, mirrors Verify's SPARK_GRAFT_VERIFY_ONLY: audit a

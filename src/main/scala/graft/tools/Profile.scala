@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 import org.apache.spark.sql.functions._
 import graft.ops.Dedup
 
@@ -9,13 +9,7 @@ import graft.ops.Dedup
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(32)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
 
     def time(tag: String)(f: => Long): Unit = (1 to 2).foreach { i =>

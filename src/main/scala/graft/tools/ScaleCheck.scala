@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 
 /**
  * Scale-GROWTH guard: measures the flagship composite queries at two
@@ -86,15 +86,7 @@ object ScaleCheck {
     val bigDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_BIG", "/root/testdata/sf0.1")
     val maxRatio = sys.env.getOrElse("SPARK_GRAFT_SCALE_MAX_RATIO", "15.0").toDouble
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "3").toInt.max(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.fromEnv(8)
     spark.sparkContext.setLogLevel("ERROR")
     Warmup.warmJvm(spark)
 

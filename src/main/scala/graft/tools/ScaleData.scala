@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.LocalSession
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
@@ -45,15 +46,7 @@ object ScaleData {
     val outDir = if (args.nonEmpty) args(0) else "target/testdata-sf1"
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALEDATA_COPIES", "10").toInt
     require(copies >= 1, s"copies must be >= 1: $copies")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.fromEnv(16)
 
     def read(t: String) = spark.read.parquet(s"$srcDir/$t.parquet")
     def write(t: String, df: DataFrame): Unit = {

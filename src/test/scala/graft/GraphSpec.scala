@@ -130,35 +130,6 @@ class GraphSpec extends SparkSuite {
     assert(r.where($"n_triangles" =!= 0L).count() == 0L)
   }
 
-  test("canonical edge list and canonical triangle/clustering variants " +
-      "match the symmetric originals") {
-    // irregular graph: two bridged triangles + a pendant + a square with
-    // a diagonal — exercises ties, bridges, and degree-2 corners
-    val und = Seq((0L, 1L), (1L, 2L), (2L, 0L), (2L, 3L), (3L, 4L),
-      (4L, 5L), (5L, 3L), (5L, 6L), (6L, 7L), (7L, 8L), (8L, 6L), (6L, 8L))
-    val sym = und.flatMap(e => Seq(e, e.swap)).distinct.toDF("src", "dst")
-    val canon = und.map { case (a, b) => (math.min(a, b), math.max(a, b)) }
-      .distinct.toDF("src", "dst")
-    val tSym = Graph.triangleCounts(sym).as[(Long, Long)].collect().toMap
-    val tCan = Graph.triangleCountsCanonical(canon).as[(Long, Long)].collect().toMap
-    assert(tSym == tCan, s"triangle variants diverge: $tSym vs $tCan")
-    val cSym = Graph.clusteringCoefficients(sym)
-      .as[(Long, Long, Long, Long)].collect().toSet
-    val cCan = Graph.clusteringCoefficientsCanonical(canon)
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(cSym == cCan, s"clustering variants diverge")
-    // and the canonical co-occurrence list is exactly the a<b half of the
-    // symmetric one
-    val baskets = Seq((1L, 10L), (1L, 20L), (1L, 30L), (2L, 10L), (2L, 20L),
-      (3L, 7L), (3L, 10L), (3L, 20L), (3L, 30L)).toDF("basket", "item")
-    val full = Graph.coOccurrenceEdges(baskets, "basket", "item")
-      .as[(Long, Long)].collect().toSet
-    val half = Graph.coOccurrenceCanonicalEdges(baskets, "basket", "item")
-      .as[(Long, Long)].collect().toSet
-    assert(half == full.filter { case (a, b) => a < b })
-    assert(full == half ++ half.map(_.swap))
-  }
-
   test("propagateLabels: majority vote per component, singleton and unseeded behavior") {
     import graft.ops.{Dedup, Graph}
     // component {1,2,3} seeded x,x,y -> x wins; {4,5} unseeded -> null;

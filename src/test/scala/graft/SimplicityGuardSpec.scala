@@ -1,0 +1,41 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source-tree guards, no Spark session: every session is built by
+  * [[LocalSession]], and `spark.graft.checkpointDir` is the engine's only
+  * own conf key — so a removed builder copy or settled conf-gated arm
+  * cannot come back one file at a time. */
+class SimplicityGuardSpec extends AnyFunSuite {
+
+  private val root = Paths.get("src/main/scala")
+
+  private def sources: Seq[(Path, Seq[String])] = {
+    assert(Files.isDirectory(root), s"run from the repository root: $root missing")
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .map(p => p -> Files.readAllLines(p).asScala.toSeq)
+    finally walk.close()
+  }
+
+  /** `file:line` of every line matching `re`, outside files named in `except`. */
+  private def hits(re: scala.util.matching.Regex, except: Set[String] = Set.empty): Seq[String] =
+    for {
+      (p, lines) <- sources if !except(p.getFileName.toString)
+      (line, i) <- lines.zipWithIndex if re.findFirstIn(line).nonEmpty
+    } yield s"$p:${i + 1}: ${line.trim}"
+
+  test("SparkSession.builder appears only in LocalSession.scala") {
+    assert(sources.exists(_._1.getFileName.toString == "LocalSession.scala"))
+    val found = hits("""SparkSession\s*\.\s*builder""".r, except = Set("LocalSession.scala"))
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("spark.graft.checkpointDir is the only spark.graft.* conf key") {
+    val found = hits(""""spark\.graft\.(?!checkpointDir")""".r)
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+    assert(hits(""""spark\.graft\.checkpointDir"""".r).size == 1)
+  }
+}

@@ -254,4 +254,23 @@ class SourcesSinksSpec extends SparkSuite {
       spark.conf.unset(graft.recon.Checkpoints.DirConf)
     }
   }
+
+  test("Checkpoints.cut moves to a newly configured dir that is a string prefix of the installed one") {
+    // the installed dir is `file:/…/ck2/<uuid>`; `/…/ck` is a prefix of
+    // that string but a different directory — later cuts must land there
+    val root = Files.createTempDirectory("graft_ckdirs").toFile
+    val (ck2, ck) = (new java.io.File(root, "ck2"), new java.io.File(root, "ck"))
+    def files(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f).filter(_.isFile)
+    try {
+      Seq(ck2, ck).foreach { dir =>
+        spark.conf.set(Checkpoints.DirConf, dir.getAbsolutePath)
+        assert(Checkpoints.cut(spark.range(0, 10).toDF("id")).count() == 10L)
+      }
+      assert(files(ck2).nonEmpty, "expected checkpoint files under ck2")
+      assert(files(ck).nonEmpty, "cuts kept writing under ck2 after the dir moved to ck")
+    } finally {
+      spark.conf.unset(Checkpoints.DirConf)
+    }
+  }
 }

@@ -3,17 +3,11 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs — one per suite (lazy), UTC, small
-  * shuffle fan-out to keep unit tests fast. */
+/** Shared local session for specs — one per suite (lazy), the
+  * [[LocalSession]] policy at a small shuffle fan-out to keep unit tests
+  * fast. */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .appName(getClass.getSimpleName)
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession(4)
 
   def rowsOf(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq.toVector).toSet
