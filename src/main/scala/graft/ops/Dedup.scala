@@ -777,23 +777,25 @@ object Dedup {
     // near-dup pair graphs are usually FAR smaller than the corpus that
     // produced them, and every round below is a cut subtree (planned
     // AQE-off — no runtime coalescing): size the loop's partitions from
-    // the measured edge count (Adaptive; guide §2.2). The count triggers
+    // the measured edge count (`rows`; guide §2.2). The count triggers
     // the edge materialization that round 1 would have paid anyway; when
     // the adaptive width is below the session's, the static edge frame is
-    // re-cut once at that width so the per-round join stays co-partitioned
+    // re-cut once at that width so the per-round join stays
+    // co-partitioned — eagerly, so the session-width copy's blocks are
+    // released before the loop instead of staying stored to its end
     val m = edges0.count()
-    val p = graft.ops.Adaptive.parts(spark, m)
+    val p = graft.recon.Checkpoints.parts(spark, m)
     val edges =
-      if (p < spark.sessionState.conf.numShufflePartitions)
-        graft.ops.Adaptive.withShufflePartitions(spark, p) {
-          cut(edges0.repartition(p, col("dst")))
-        }
-      else edges0
+      if (p < spark.sessionState.conf.numShufflePartitions) {
+        val narrow = cut(edges0.repartition(p, col("dst")), eager = true, rows = Some(m))
+        graft.recon.Checkpoints.release(edges0)
+        narrow
+      } else edges0
     note("edges", tEdges)
-    graft.ops.Adaptive.withShufflePartitions(spark, p) {
     val tLabels = System.nanoTime()
     var labels = cut(
-      edges.select(col("src").as("node")).distinct().withColumn("component", col("node")))
+      edges.select(col("src").as("node")).distinct().withColumn("component", col("node")),
+      rows = Some(m))
     note("labels0", tLabels)
     var done = false
     var i = 0
@@ -822,7 +824,8 @@ object Dedup {
               lit(null).cast(compType).as("__old")))
       val next = cut(
         contributions.groupBy("node")
-          .agg(min("component").as("component"), min("__old").as("__old")))
+          .agg(min("component").as("component"), min("__old").as("__old")),
+        rows = Some(m))
       done = next.where(col("component") =!= col("__old")).isEmpty
       labels = next.select("node", "component")
       i += 1
@@ -834,7 +837,6 @@ object Dedup {
       s"connectedComponents did not converge within maxIter=$maxIter rounds " +
         "(component diameter exceeds the budget); raise maxIter")
     labels
-    }
   }
 
   /**
@@ -878,7 +880,6 @@ object Dedup {
   private[graft] def alternatingComponentsWithRounds(pairs: DataFrame, aCol: String,
       bCol: String, maxIter: Int): (DataFrame, Int) = {
     import graft.recon.Checkpoints.cut
-    val spark = pairs.sparkSession
     val nodes = cut(pairs
       .select(explode(array(col(aCol), col(bCol))).as("node")).distinct())
     var edges = cut(pairs
@@ -887,39 +888,37 @@ object Dedup {
       .where(col("u") =!= col("v")).distinct())
     // the convergence probe already counts the edge set every round —
     // carry the count along and size each round's (cut, AQE-off) plan
-    // from it (Adaptive; guide §2.2). Star alternation CONTRACTS the
+    // from it (`rows`; guide §2.2). Star alternation CONTRACTS the
     // edge set round over round, so the width shrinks with it.
     var m = edges.count()
     var converged = false
     var rounds = 0
     while (!converged && rounds < maxIter) {
-      val roundParts = graft.ops.Adaptive.parts(spark, 2L * m)
-      val next = graft.ops.Adaptive.withShufflePartitions(spark, roundParts) {
-        // large-star over the symmetrized neighborhoods: ONE pass explode
-        // (the union-of-two-selects form would re-read the cut frame twice,
-        // which is free here but keeps the one-consumer discipline)
-        val sym = edges.select(explode(array(
-            struct(col("u").as("c"), col("v").as("n")),
-            struct(col("v").as("c"), col("u").as("n")))).as("e"))
-          .select(col("e.c").as("c"), col("e.n").as("n"))
-        val minsL = sym.groupBy("c")
-          .agg(least(min(col("n")), first(col("c"))).as("m"))
-        val large = sym.join(minsL, Seq("c"))
-          .where(col("n") > col("c"))
-          .select(col("n").as("u"), col("m").as("v"))
-          .distinct()
-        // small-star over the canonical orientation: every neighbor of u is
-        // already < u, so the min aggregate needs no self fold-in
-        val minsS = large.groupBy("u").agg(min(col("v")).as("m"))
-        cut(
-          large.join(minsS, Seq("u"))
-            .select(explode(array(
-              struct(col("u").as("a"), col("m").as("b")),
-              struct(col("v").as("a"), col("m").as("b")))).as("e"))
-            .select(col("e.a").as("u"), col("e.b").as("v"))
-            .where(col("u") =!= col("v"))
-            .distinct())
-      }
+      // large-star over the symmetrized neighborhoods: ONE pass explode
+      // (the union-of-two-selects form would re-read the cut frame twice,
+      // which is free here but keeps the one-consumer discipline)
+      val sym = edges.select(explode(array(
+          struct(col("u").as("c"), col("v").as("n")),
+          struct(col("v").as("c"), col("u").as("n")))).as("e"))
+        .select(col("e.c").as("c"), col("e.n").as("n"))
+      val minsL = sym.groupBy("c")
+        .agg(least(min(col("n")), first(col("c"))).as("m"))
+      val large = sym.join(minsL, Seq("c"))
+        .where(col("n") > col("c"))
+        .select(col("n").as("u"), col("m").as("v"))
+        .distinct()
+      // small-star over the canonical orientation: every neighbor of u is
+      // already < u, so the min aggregate needs no self fold-in
+      val minsS = large.groupBy("u").agg(min(col("v")).as("m"))
+      val next = cut(
+        large.join(minsS, Seq("u"))
+          .select(explode(array(
+            struct(col("u").as("a"), col("m").as("b")),
+            struct(col("v").as("a"), col("m").as("b")))).as("e"))
+          .select(col("e.a").as("u"), col("e.b").as("v"))
+          .where(col("u") =!= col("v"))
+          .distinct(),
+        rows = Some(2L * m))
       // fixpoint: next ⊆ edges and |next| = |edges| ⇒ equal sets (both
       // distinct) — one anti-join probe + one count over cut frames (the
       // previous round's count is carried in `m`, not re-run)

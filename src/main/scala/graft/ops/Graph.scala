@@ -503,9 +503,9 @@ object Graph {
     // the sweep's shuffles all carry ≤ |directed edges| = e2n rows, and
     // every round is cut (planned AQE-off, so no runtime coalescing):
     // size their partitions from the measured edge count instead of the
-    // session width ([[Adaptive]]; guide §2.2)
-    val sweepParts = Adaptive.parts(edges.sparkSession, e2n)
-    Adaptive.withShufflePartitions(edges.sparkSession, sweepParts) {
+    // session width (the cuts' `rows`, and the same width on the explicit
+    // candidate repartition; guide §2.2)
+    val sweepParts = graft.recon.Checkpoints.parts(edges.sparkSession, e2n)
     val deg = edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("__k"))
     def movers(df: DataFrame, keyCol: String, r: Int) =
       df.where(pmod(col(keyCol), lit(2)) === lit(r % 2))
@@ -521,7 +521,7 @@ object Graph {
       .select(col("src"), col("dst").as("label"), lit(1L).as("__w"))
       .unionByName(movers(deg, "node", 1).select(col("node").as("src"),
         col("node").as("label"), lit(0L).as("__w")))
-      .repartition(col("src"))
+      .repartition(sweepParts, col("src"))
       .groupBy(col("src"), col("label")).agg(sum(col("__w")).as("__w"))
     val scored1 = cand1
       .join(broadcast(deg.select(col("node").as("src"), col("__k"))), Seq("src"))
@@ -529,7 +529,7 @@ object Graph {
         Seq("label"))
       .withColumn("__score", score(col("label") === col("src")))
     var labels = cut(louvainPickApply(scored1,
-      deg.withColumn("label", col("node")), r = 1))
+      deg.withColumn("label", col("node")), r = 1), rows = Some(e2n))
     for (r <- 2 to rounds) {
       val tot = labels.groupBy(col("label")).agg(sum(col("__k")).as("__tot"))
       // edges from a MOVING i into each neighbor community, PLUS the
@@ -541,7 +541,7 @@ object Graph {
         .select(col("src"), col("label"), lit(1L).as("__w"))
         .unionByName(movers(labels, "node", r).select(col("node").as("src"),
           col("label"), lit(0L).as("__w")))
-        .repartition(col("src"))
+        .repartition(sweepParts, col("src"))
         .groupBy(col("src"), col("label")).agg(sum(col("__w")).as("__w"))
       val cur = labels.select(col("node").as("src"), col("label").as("__cur"),
         col("__k"))
@@ -549,10 +549,9 @@ object Graph {
         .join(broadcast(cur), Seq("src"))
         .join(broadcast(tot), Seq("label"))
         .withColumn("__score", score(col("label") === col("__cur")))
-      labels = cut(louvainPickApply(scored, labels, r))
+      labels = cut(louvainPickApply(scored, labels, r), rows = Some(e2n))
     }
     labels.select(col("node"), col("label"))
-    }
   }
 
   /** Largest Σw (= 2|E| unweighted) at which the Long sweep score is
@@ -728,11 +727,8 @@ object Graph {
               .subtract(r.getDecimal(2))
           }.toMap
       // the contraction subtree is edge-sized — size its partitions from
-      // the measured edge count like the sweeps ([[Adaptive]])
-      var contracted = Adaptive.withShufflePartitions(edges.sparkSession,
-        Adaptive.parts(edges.sparkSession, e2)) {
-        cut(contractGraph(edges, flat))
-      }
+      // the measured edge count like the sweeps
+      var contracted = cut(contractGraph(edges, flat), rows = Some(e2))
       lap("level1 contraction cut")
       // materialize the contraction now (it materializes either way at
       // the level's first action) and take its ROW count — the exact
@@ -747,13 +743,12 @@ object Graph {
       var q: java.math.BigDecimal = null
       var stopped = false
       for (level <- 2 to maxLevels if !stopped) {
-        val levelParts = Adaptive.parts(edges.sparkSession, supRows)
         // per-round cuts unconditionally: even on a broadcast-scale
         // super-graph, planning the UNCUT two-round sweep as one deep
         // AQE-off tree measured slower (~4.8 s vs ~3.7 s at sf0.1 L3)
         // than two shallow round cuts whose execution is trivial
         val lv = louvainMoveWeighted(contracted, roundsPerLevel,
-          cutRounds = true, sumW = Some(e2), partsHint = Some(levelParts))
+          cutRounds = true, sumW = Some(e2), rows = Some(supRows))
         lap(s"level$level weighted sweep")
         // ONE cut frame per level carries ALL the level's products — the
         // contraction (__slice 1), the node-space relabel (__slice 2),
@@ -764,19 +759,17 @@ object Graph {
         // level wastes one node-sized broadcast join inside the
         // materialization — cheaper than the cut it replaces, and it
         // happens at most once (rejection stops the loop).
-        val combined = Adaptive.withShufflePartitions(edges.sparkSession,
-            levelParts) {
-          val con = contractGraphWeighted(contracted, lv)
-          val base = tagged(con)
-            .unionByName(flat
-              .join(broadcast(lv.select(col("node").as("label"),
-                col("label").as("__next"))), Seq("label"))
-              .select(lit(2).as("__slice"), col("node").as("__a"),
-                col("__next").as("__b"), lit(0L).as("__w"), decZ.as("__sk2")))
-            .unionByName(gateRow(con, 3))
-          cut(
-            if (level == 2) base.unionByName(gateRow(contracted, 4)) else base)
-        }
+        val con = contractGraphWeighted(contracted, lv)
+        val base = tagged(con)
+          .unionByName(flat
+            .join(broadcast(lv.select(col("node").as("label"),
+              col("label").as("__next"))), Seq("label"))
+            .select(lit(2).as("__slice"), col("node").as("__a"),
+              col("__next").as("__b"), lit(0L).as("__w"), decZ.as("__sk2")))
+          .unionByName(gateRow(con, 3))
+        val combined = cut(
+          if (level == 2) base.unionByName(gateRow(contracted, 4)) else base,
+          rows = Some(supRows))
         lap(s"level$level combined cut")
         val gates = readGates(combined)
         lap(s"level$level readGates")
@@ -852,10 +845,9 @@ object Graph {
    */
   def louvainMoveWeighted(wEdges: DataFrame, rounds: Int,
       cutRounds: Boolean = true, scoreDecimal: Boolean = false,
-      sumW: Option[Long] = None, partsHint: Option[Int] = None): DataFrame = {
+      sumW: Option[Long] = None, rows: Option[Long] = None): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     import graft.recon.Checkpoints.cut
-    def maybeCut(df: DataFrame): DataFrame = if (cutRounds) cut(df) else df
     // one action for Σw (see [[louvainMove]] — a per-round broadcast
     // aggregate is serial wall time under the eager broadcast chain);
     // callers that KNOW Σw pass it via `sumW` and skip even that one job
@@ -866,12 +858,13 @@ object Graph {
     val e2 = lit(e2n)
     val score = sweepScore(e2, scoreDecimal || e2n > SweepScoreLongSafeE2) _
     // partition sizing like [[louvainMove]]: callers that know the
-    // super-edge ROW count pass it via `partsHint` ([[louvainLevels]]
-    // counts each materialized contraction); otherwise Σw — an upper
-    // bound on the rows (integer weights ≥ 1) — is the free proxy
-    val sweepParts = partsHint.getOrElse(
-      Adaptive.parts(wEdges.sparkSession, e2n))
-    Adaptive.withShufflePartitions(wEdges.sparkSession, sweepParts) {
+    // super-edge ROW count pass it via `rows` ([[louvainLevels]] counts
+    // each materialized contraction); otherwise Σw — an upper bound on
+    // the rows (integer weights ≥ 1) — is the free proxy
+    val sweepRows = rows.getOrElse(e2n)
+    val sweepParts = graft.recon.Checkpoints.parts(wEdges.sparkSession, sweepRows)
+    def maybeCut(df: DataFrame): DataFrame =
+      if (cutRounds) cut(df, rows = Some(sweepRows)) else df
     // round 1 specialized exactly like [[louvainMove]]: singleton labels
     // ARE the weighted-degree frame (self-loops ride the degree and Σtot
     // but can't be candidates — a singleton's neighbor labels are the
@@ -885,7 +878,7 @@ object Graph {
       .select(col("src"), col("dst").as("label"), col("w").as("__w"))
       .unionByName(movers(wd, "node", 1).select(col("node").as("src"),
         col("node").as("label"), lit(0L).as("__w")))
-      .repartition(col("src"))
+      .repartition(sweepParts, col("src"))
       .groupBy(col("src"), col("label")).agg(sum(col("__w")).as("__w"))
     val scored1 = cand1
       .join(broadcast(wd.select(col("node").as("src"), col("__k"))), Seq("src"))
@@ -901,7 +894,7 @@ object Graph {
         .select(col("src"), col("label"), col("w").as("__w"))
         .unionByName(movers(labels, "node", r).select(col("node").as("src"),
           col("label"), lit(0L).as("__w")))
-        .repartition(col("src"))
+        .repartition(sweepParts, col("src"))
         .groupBy(col("src"), col("label")).agg(sum(col("__w")).as("__w"))
       val cur = labels.select(col("node").as("src"), col("label").as("__cur"),
         col("__k"))
@@ -912,7 +905,6 @@ object Graph {
       labels = maybeCut(louvainPickApply(scored, labels, r))
     }
     labels.select(col("node"), col("label"))
-    }
   }
 
   /**
@@ -988,13 +980,11 @@ object Graph {
     // aggregate), and ReuseExchange only dedups the exchanges, not the
     // derivation maps between them — for a co-occurrence self-join input
     // that re-executed the fan-out map stages per reference. The count
-    // (a scan of the just-materialized blocks) feeds the adaptive width
-    // for every round's cut plans ([[Adaptive]]; rounds only shrink the
-    // edge set, so the initial count is a sound upper bound).
+    // (a scan of the just-materialized blocks) sizes every round's cut
+    // plans (`rows`; rounds only shrink the edge set, so the initial
+    // count is a sound upper bound).
     var cur = cut(edges.select(col("src"), col("dst")))
     val m = cur.count()
-    Adaptive.withShufflePartitions(edges.sparkSession,
-      Adaptive.parts(edges.sparkSession, m)) {
     var kept: DataFrame = null
     for (_ <- 1 to rounds) {
       val deg = cur.groupBy("src").agg(count(lit(1)).as("__deg"))
@@ -1006,13 +996,13 @@ object Graph {
           col("dst") === col("__ub"))
         .where(col("__da") < col("__db") ||
           (col("__da") === col("__db") && col("src") < col("dst")))
-        .select(col("src").as("a"), col("dst").as("b")))
+        .select(col("src").as("a"), col("dst").as("b")), rows = Some(m))
       // triangle list consumed by three support projections
       val tri = cut(f.select(col("a"), col("b").as("y"))
         .join(f.select(col("a"), col("b").as("z")), Seq("a"))
         .where(col("y") =!= col("z"))
         .join(f.select(col("a").as("y"), col("b").as("z")), Seq("y", "z"))
-        .select(col("a").as("x"), col("y"), col("z")))
+        .select(col("a").as("x"), col("y"), col("z")), rows = Some(m))
       val sup = tri.select(col("x").as("a"), col("y").as("b"))
         .unionAll(tri.select(col("x").as("a"), col("z").as("b")))
         .unionAll(tri.select(col("y").as("a"), col("z").as("b")))
@@ -1021,13 +1011,12 @@ object Graph {
       kept = cut(f.join(sup, Seq("a", "b"), "left")
         .select(col("a"), col("b"),
           coalesce(col("support"), lit(0L)).as("support"))
-        .where(col("support") >= (k - 2).toLong))
+        .where(col("support") >= (k - 2).toLong), rows = Some(m))
       cur = kept.select(col("a").as("src"), col("b").as("dst"))
         .unionAll(kept.select(col("b").as("src"), col("a").as("dst")))
     }
     kept.select(least(col("a"), col("b")).as("src"),
       greatest(col("a"), col("b")).as("dst"), col("support"))
-    }
   }
 
   /**

@@ -92,7 +92,10 @@ object SetSimilarity {
     // hash(doc) partitioning, the entire compute-bound tail of the query
     // inherited those few tasks (measured at sf0.1: a 4-task stage with
     // 13-20 s of CPU was the whole tail of dedup_lsh_planner). Session
-    // width = the cluster's configured parallelism — right at any scale.
+    // width = the cluster's configured parallelism — right at any scale;
+    // it is read from the caller's conf, which cut planning never
+    // overrides (a cut sizes its own shuffles in a child session), so no
+    // temporary width can leak into the pin.
     val ranked = sh.join(dfreq, Seq("shingle"))
       .repartition(sh.sparkSession.sessionState.conf.numShufflePartitions,
         col("doc"))
@@ -161,8 +164,9 @@ object SetSimilarity {
       Dedup.shingleTable(df, textCol, idCol, shingleN)) // (doc, shingle), distinct
     val sizes = sh.groupBy(col("doc")).agg(count(lit(1)).as("n"))
     val dfreq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-    // pinned rank-window exchange width — the whole compute-bound tail
-    // rides this partitioning; see [[prefixJaccardCore]]
+    // pinned rank-window exchange width (the caller's own session width)
+    // — the whole compute-bound tail rides this partitioning; see
+    // [[prefixJaccardCore]]
     val ranked = sh.join(dfreq, Seq("shingle"))
       .repartition(sh.sparkSession.sessionState.conf.numShufflePartitions,
         col("doc"))

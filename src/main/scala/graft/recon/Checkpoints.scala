@@ -1,7 +1,8 @@
 package graft.recon
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftInternals, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /**
  * Lineage-cut policy for the engine's load-bearing materialization points
@@ -10,7 +11,12 @@ import org.apache.spark.sql.DataFrame
  * ReuseExchange only dedups identical exchanges, so these cuts are
  * correctness-of-cost, not correctness-of-result.
  *
- * Two modes:
+ * [[cut]] is the one place that decides how a cut subtree is planned
+ * (AQE, shuffle width): it plans in a child of the caller's session and
+ * never writes the caller's conf, so concurrent planners on one session
+ * cannot see each other's settings.
+ *
+ * Two storage modes:
  *  - default: `localCheckpoint(eager)` — blocks stay on executor local
  *    storage. Fastest, but non-replicated: on a real cluster an executor
  *    loss past the cut fails the job.
@@ -45,22 +51,62 @@ object Checkpoints {
       })
     }
 
+  /** Target rows per shuffle partition in a `rows`-sized cut subtree.
+    * The frames this governs are a few long/int columns wide (edge
+    * lists, label vectors, candidate pairs) — 250k such rows is roughly
+    * a 15–30 MB in-memory block, small enough to keep per-task state
+    * trivial and large enough that per-task overhead stays amortized. */
+  final val DefaultRowsPerPartition = 250000L
+
+  /** Shuffle width for a frame of `rows` rows:
+    * `ceil(rows / DefaultRowsPerPartition)`, clamped to [1, `spark`'s
+    * shuffle partitions] — a cluster run with a properly sized
+    * `spark.sql.shuffle.partitions` is unaffected until a frame is
+    * genuinely small, which is when coalescing is right at any scale. */
+  def parts(spark: SparkSession, rows: Long): Int = {
+    val session = spark.sessionState.conf.numShufflePartitions
+    val wanted = (rows + DefaultRowsPerPartition - 1) / DefaultRowsPerPartition
+    math.max(1L, math.min(session.toLong, wanted)).toInt
+  }
+
   /** Cut `df`'s lineage, per the session's checkpoint policy.
     *
-    * LAZY (`eager = false`) in both modes: the returned frame's plan is a
-    * `LogicalRDD` either way — the lineage cut and single-materialization
-    * guarantee are identical — but materialization happens on the first
-    * ACTION, not here at plan-construction time. Eager cuts charged query
-    * BUILD with the whole upstream execution (r7 measured 11.7 s BUILD vs
-    * 1.9 s RUN on the flagship multi-pass query) and materialized frames
-    * the caller might never consume. For the reliable mode, lazy is
-    * strictly cheaper: the checkpoint-write job recomputes partitions
-    * regardless, so eager's extra `count()` job bought nothing.
+    * The subtree is planned in a CHILD of `df`'s session
+    * (`cloneSession`: same SparkContext, a private copy of the conf), and
+    * the checkpointed plan is handed back to `df`'s session — so how a
+    * cut is planned never touches the caller's conf, and any number of
+    * threads may cut on one session at once. The child runs its jobs
+    * under the caller's classloader (see `GraftInternals.cloneSession`)
+    * and differs from the caller in at most two keys:
+    *  - LAZY (`eager = false`) cuts plan with AQE off. `checkpoint()`
+    *    calls `queryExecution.toRdd` up front, and an
+    *    `AdaptiveSparkPlanExec` EXECUTES its intermediate stages inside
+    *    `execute()` — with AQE on, a "lazy" cut would run its shuffles at
+    *    construction (measured: recon_pass_full BUILD 8.6 s AQE-lazy vs
+    *    11.7 s eager). Materialization happens on the first ACTION, not
+    *    here: eager cuts charged query BUILD with the whole upstream
+    *    execution and materialized frames the caller might never consume;
+    *    in the reliable mode the checkpoint-write job recomputes
+    *    partitions regardless, so eager's extra `count()` job bought
+    *    nothing. The returned plan is a `LogicalRDD` either way, and the
+    *    enclosing query still runs under AQE.
+    *  - `rows` (a measured or bounding row count of the subtree's frames)
+    *    sets its shuffle width to [[parts]]`(rows)`, with AQE off even
+    *    when eager: AQE would re-size the chosen width, and an AQE-planned
+    *    cut reports no output partitioning, so a consumer keyed on the
+    *    cut's hash key would re-shuffle it. Without AQE nothing coalesces
+    *    a cut's shuffles, and pushing a handful of rows through
+    *    session-width stages is pure scheduling tax (guide §2.2; an
+    *    in-session paired A/B of 32 → 8 partitions measured 0.35–0.59× on
+    *    the louvain/components families). An implicit-width
+    *    `repartition(col)` fixes its width when the frame is BUILT, in
+    *    the caller's session — pass the width explicitly there.
     *
     * Pass `eager = true` ONLY when the caller is about to invalidate the
-    * frame's INPUTS (e.g. delete the temp files it reads) — then the data
-    * must be pinned before this call returns. */
-  def cut(df: DataFrame, eager: Boolean = false): DataFrame = {
+    * frame's INPUTS (e.g. delete the temp files it reads) or release an
+    * upstream cut — then the data must be pinned before this call
+    * returns. */
+  def cut(df: DataFrame, eager: Boolean = false, rows: Option[Long] = None): DataFrame = {
     val spark = df.sparkSession
     // scratch diagnostics: cut subtrees are LogicalRDD leaves downstream,
     // so Explain/PlanAudit never see inside them — this env-gated dump is
@@ -69,40 +115,12 @@ object Checkpoints {
       println(s"==== CUT SUBTREE (${df.schema.fieldNames.mkString(",")}) ====\n" +
         df.queryExecution.executedPlan.toString.take(
           sys.env.get("GRAFT_CUT_EXPLAIN").flatMap(_.toIntOption).getOrElse(8000)))
-    // Lazy is only real if the subtree is planned WITHOUT AQE: checkpoint()
-    // calls queryExecution.toRdd up front, and an AdaptiveSparkPlanExec
-    // EXECUTES all its intermediate query stages inside execute() — i.e. at
-    // plan-construction time, which is exactly the eager cost this mode
-    // exists to avoid (measured: recon_pass_full BUILD 8.6 s with AQE-lazy
-    // vs 11.7 s eager). Cut subtrees trade AQE's runtime re-planning for
-    // laziness; the enclosing query (and the cluster-level skew/coalesce
-    // handling that matters at 100 TB) still runs under AQE, and a cut is
-    // by definition a boundary we've already chosen to materialize whole.
-    // CONCURRENCY: this set/restore mutates the shared session RuntimeConfig
-    // and assumes the driver plans one query at a time on this session (true
-    // for every entry point in this repo — Verify, Bench, PlanAudit and the
-    // specs are all sequential). A host application planning concurrently on
-    // the SAME session (streaming microbatch thread, parallel query builders)
-    // could have an unrelated query planned with AQE off, or its own conf
-    // change clobbered by the restore; such callers should give each thread
-    // its own `spark.newSession()` (separate SQLConf, shared context) and
-    // build the frame there. Scoping the override per-plan instead would
-    // need internal APIs (planning reads `sessionState.conf` directly, so
-    // `SQLConf.withExistingConf`'s thread-local does not cover it).
-    val AqeKey = "spark.sql.adaptive.enabled"
-    def planned[T](body: => T): T =
-      if (eager) body
-      else {
-        // an unset key is restored UNSET, not pinned to its default
-        val prev = Option.when(spark.sessionState.conf.contains(AqeKey))(spark.conf.get(AqeKey))
-        spark.conf.set(AqeKey, "false")
-        try body
-        finally prev match {
-          case Some(v) => spark.conf.set(AqeKey, v)
-          case None => spark.conf.unset(AqeKey)
-        }
-      }
-    spark.conf.getOption(DirConf) match {
+    val overrides =
+      Option.when(!eager || rows.nonEmpty)("spark.sql.adaptive.enabled" -> "false") ++
+        rows.map(r => "spark.sql.shuffle.partitions" -> parts(spark, r).toString)
+    val planned = GraftInternals.ofRows(
+      GraftInternals.cloneSession(spark, overrides.toSeq: _*), df)
+    val checkpointed = spark.conf.getOption(DirConf) match {
       case Some(dir) if dir.nonEmpty =>
         val sc = spark.sparkContext
         // setCheckpointDir installs a fully-QUALIFIED path ("file:/…",
@@ -115,8 +133,19 @@ object Checkpoints {
         if (!sc.getCheckpointDir.exists(cur => new Path(cur).getParent == qualified))
           sc.setCheckpointDir(dir)
         hookCleanup(sc)
-        planned(df.checkpoint(eager = eager))
-      case _ => planned(df.localCheckpoint(eager = eager))
+        planned.checkpoint(eager = eager)
+      case _ => planned.localCheckpoint(eager = eager)
     }
+    GraftInternals.ofRows(spark, checkpointed)
   }
+
+  /** Drop the stored blocks of every cut `df` reads directly. Only for a
+    * cut nothing will read again — e.g. once an eager re-cut of it has
+    * materialized: local-checkpoint blocks are otherwise reclaimed only
+    * when the frame is garbage-collected. */
+  def release(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 }

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.LocalSession
+import org.apache.spark.sql.GraftInternals
 
 /**
  * Scale-GROWTH guard: measures the flagship composite queries at two
@@ -103,12 +104,11 @@ object ScaleCheck {
     def run(name: String, dir: String): (Double, Seq[String]) = {
       val fn = queries(name)
       // plan flags with AQE off (PlanAudit contract: AdaptiveSparkPlanExec
-      // hides its subtree from collect); restore before timing so the
-      // timed runs see the production conf
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val flags =
-        try PlanAudit.flagsOf(fn(spark, dir).queryExecution.executedPlan)
-        finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+      // hides its subtree from collect) — in a child session, so the
+      // timed runs see the production conf untouched
+      val flags = PlanAudit.flagsOf(GraftInternals.ofRows(
+        GraftInternals.cloneSession(spark, "spark.sql.adaptive.enabled" -> "false"),
+        fn(spark, dir)).queryExecution.executedPlan)
       val times = (0 until reps).map { _ =>
         val t0 = System.nanoTime()
         fn(spark, dir).count()

@@ -1,32 +1,19 @@
 package graft
 
-import graft.ops.Adaptive
 import graft.recon.Checkpoints
 
-/** The session-conf set/restore contract of the two planning-time
-  * overrides: a lazy `Checkpoints.cut` (AQE off while the cut is planned)
-  * and `Adaptive.withShufflePartitions` (shuffle width while the body
-  * builds) leave `spark.sql.adaptive.enabled` and
-  * `spark.sql.shuffle.partitions` exactly as they found them — the same
-  * value, and explicitly set only if they were explicitly set before. */
+/** A lazy `Checkpoints.cut` leaves `spark.sql.adaptive.enabled` and
+  * `spark.sql.shuffle.partitions` exactly as it found them — the same
+  * value, and explicitly set only if they were explicitly set before
+  * (the cut plans in a child session; [[CutPlanningSpec]] covers the
+  * other cut forms and concurrent cuts). */
 class ConfRestoreSpec extends SparkSuite {
 
   private val keys = Seq("spark.sql.adaptive.enabled" -> "true",
     "spark.sql.shuffle.partitions" -> "7")
 
   private val calls: Seq[(String, () => Unit)] = Seq(
-    "Checkpoints.cut (lazy)" -> (() => { Checkpoints.cut(spark.range(0, 10).toDF("id")); () }),
-    "Adaptive.withShufflePartitions" -> (() => {
-      Adaptive.withShufflePartitions(spark, 3) {
-        assert(spark.conf.get("spark.sql.shuffle.partitions") == "3")
-      }
-    }),
-    "Adaptive.withShufflePartitions, throwing body" -> (() => {
-      intercept[IllegalStateException] {
-        Adaptive.withShufflePartitions(spark, 3)(throw new IllegalStateException("body failed"))
-      }
-      ()
-    }))
+    "Checkpoints.cut (lazy)" -> (() => { Checkpoints.cut(spark.range(0, 10).toDF("id")); () }))
 
   /** `(explicit setting, effective value)` of `key`. */
   private def state(key: String): (Option[String], String) =

@@ -277,6 +277,21 @@ class DedupSpec extends SparkSuite {
       30L -> 30L, 31L -> 30L, 32L -> 30L))
   }
 
+  test("connectedComponents stores only the narrow edge copy when the adaptive width is below the session's") {
+    // 6 directed edges ⇒ width 1 < the suite's 4: the session-width edge
+    // cut is re-cut at width 1, and its blocks must not outlive the re-cut
+    val sc = spark.sparkContext
+    val sessionWidth = spark.sessionState.conf.numShufflePartitions
+    assert(graft.recon.Checkpoints.parts(spark, 6) < sessionWidth)
+    val before = sc.getPersistentRDDs.keySet
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc1", "doc2")
+    val comps = Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap
+    assert(comps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+    val stored = (sc.getPersistentRDDs -- before).values.map(_.getNumPartitions).toSeq
+    assert(stored.nonEmpty && stored.forall(_ == 1),
+      s"persisted cut widths after the run: $stored (session width $sessionWidth)")
+  }
+
   test("alternatingComponents matches hash-min on mixed shapes") {
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (30L, 31L), (31L, 32L), (30L, 32L))
       .toDF("doc1", "doc2")

@@ -5,9 +5,11 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-tree guards, no Spark session: every session is built by
-  * [[LocalSession]], and `spark.graft.checkpointDir` is the engine's only
-  * own conf key — so a removed builder copy or settled conf-gated arm
-  * cannot come back one file at a time. */
+  * [[LocalSession]], `spark.graft.checkpointDir` is the engine's only
+  * own conf key, and no operator writes a session's conf (a cut plans its
+  * subtree in a child session) — so a removed builder copy, settled
+  * conf-gated arm or session-wide set/restore cannot come back one file
+  * at a time. */
 class SimplicityGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -20,10 +22,13 @@ class SimplicityGuardSpec extends AnyFunSuite {
     finally walk.close()
   }
 
-  /** `file:line` of every line matching `re`, outside files named in `except`. */
-  private def hits(re: scala.util.matching.Regex, except: Set[String] = Set.empty): Seq[String] =
+  /** `file:line` of every line matching `re` in files under `under`,
+    * outside files named in `except`. */
+  private def hits(re: scala.util.matching.Regex, except: Set[String] = Set.empty,
+      under: Seq[String] = Seq("")): Seq[String] =
     for {
-      (p, lines) <- sources if !except(p.getFileName.toString)
+      (p, lines) <- sources
+      if !except(p.getFileName.toString) && under.exists(d => p.startsWith(root.resolve(d)))
       (line, i) <- lines.zipWithIndex if re.findFirstIn(line).nonEmpty
     } yield s"$p:${i + 1}: ${line.trim}"
 
@@ -37,5 +42,17 @@ class SimplicityGuardSpec extends AnyFunSuite {
     val found = hits(""""spark\.graft\.(?!checkpointDir")""".r)
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
     assert(hits(""""spark\.graft\.checkpointDir"""".r).size == 1)
+  }
+
+  test("graft.ops and graft.recon never write a session's conf") {
+    assert(sources.exists(_._1.startsWith(root.resolve("graft/recon"))))
+    val found = hits("""conf\s*\.\s*(set|unset)\s*\(""".r,
+      under = Seq("graft/ops", "graft/recon"))
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("no withShufflePartitions scope anywhere") {
+    val found = hits("""withShufflePartitions""".r)
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }
