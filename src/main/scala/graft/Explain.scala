@@ -1,7 +1,8 @@
 package graft
 
-/** Plan-inspection utility: prints the formatted physical plan and timed
-  * count for one named query. Usage:
+/** Plan-inspection utility: prints the formatted physical plan, the
+  * executed plan of each lineage cut the query makes, and a timed count
+  * for one named query. Usage:
   *   sbt "runMain graft.Explain <queryName> [sfDir]"  */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -16,9 +17,11 @@ object Explain {
     // time construction + execution: queries with eager lineage cuts do
     // real work inside the builder fn, so timing count() alone lies
     val t0 = System.nanoTime()
-    val df = SparkEntry.queries(name)(spark, sfDir)
+    val (df, cuts) =
+      graft.tools.PlanAudit.cutPlans(spark)(SparkEntry.queries(name)(spark, sfDir))
     val tBuild = (System.nanoTime() - t0) / 1e9
     df.explain("formatted")
+    for ((plan, i) <- cuts.zipWithIndex) println(s"== Cut ${i + 1}/${cuts.size} ==\n$plan")
     val t1 = System.nanoTime()
     val n = df.count()
     val tRun = (System.nanoTime() - t1) / 1e9

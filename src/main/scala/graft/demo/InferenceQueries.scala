@@ -634,11 +634,7 @@ object InferenceQueries {
         s.read.parquet(s"$d/lineitem.parquet"), "l_orderkey", "l_partkey"))
       val l1 = Graph.louvainMove(edges, rounds = 2)
       val wE = graft.recon.Checkpoints.cut(Graph.contractGraph(edges, l1))
-      // cutRounds = true: after a 2-round level 1 the contracted
-      // multigraph still has ~10³ supernodes and up to millions of
-      // super-edges — the uncut plan's 4×-per-round fan-out re-aggregated
-      // it ~12× (measured ~35 s vs ~12 s cut at sf0.1)
-      val l2s = Graph.louvainMoveWeighted(wE, rounds = 2, cutRounds = true)
+      val l2s = Graph.louvainMoveWeighted(wE, rounds = 2)
         .select(col("node").as("label"), col("label").as("__final"))
       // no cut on fin: with the weighted rounds cut, this is a join of
       // two already-materialized node-sized frames — re-executing it for

@@ -739,33 +739,21 @@ object Dedup {
    * plan doubles every iteration). The driver loop with a cheap
    * convergence probe is the standard Pregel-style shape; the fixpoint is
    * independent of iteration order, so the result is deterministic on any
-   * cluster layout.
-   *
-   * `jump = true` adds POINTER JUMPING — each node also adopts its
-   * label's label, so covered distance doubles per round (O(log
-   * diameter) rounds). MEASURED trade on the sf0.1 near-dup graph
-   * (diameter ~6): 7 plain rounds → 6 jumped rounds at +60% per-round
-   * cost (the extra label self-join) — a net LOSS, so plain is the
-   * default; turn it on for edge-dominated deep graphs where every saved
-   * round is a saved join of the FULL edge set and the label self-join is
-   * comparatively free. For extreme diameters with edge contraction, see
-   * [[alternatingComponents]].
+   * cluster layout. For high-diameter graphs, where O(diameter) rounds
+   * exceed the budget, use [[alternatingComponents]].
    *
    * Returns (node, component) for every node appearing in a pair, where
    * component = the minimum reachable node id.
    */
   def connectedComponents(pairs: DataFrame, aCol: String = "doc1", bCol: String = "doc2",
-      maxIter: Int = 25, verbose: Boolean = false, jump: Boolean = false): DataFrame = {
+      maxIter: Int = 25): DataFrame = {
     import graft.recon.Checkpoints.cut
-    def note(tag: String, t0: Long): Unit = if (verbose)
-      println(f"CC STAGE=$tag SECONDS=${(System.nanoTime() - t0) / 1e9}%.2f")
     // symmetrize with ONE pass over `pairs` (an explode of both
     // directions) — a union of two selects would consume `pairs` twice
     // and re-execute its whole upstream sketch pipeline per consumer.
     // Pre-partition the (static) edge set by the join key before the cut:
     // localCheckpoint preserves the partitioning, so the per-round join
     // reshuffles only the (changing) label frame, not the edges
-    val tEdges = System.nanoTime()
     val spark = pairs.sparkSession
     val edges0 = cut(
       pairs.select(explode(array(
@@ -791,16 +779,12 @@ object Dedup {
         graft.recon.Checkpoints.release(edges0)
         narrow
       } else edges0
-    note("edges", tEdges)
-    val tLabels = System.nanoTime()
     var labels = cut(
       edges.select(col("src").as("node")).distinct().withColumn("component", col("node")),
       rows = Some(m))
-    note("labels0", tLabels)
     var done = false
     var i = 0
     while (!done && i < maxIter) {
-      val tRound = System.nanoTime()
       // the self row is flagged so the SAME aggregate that computes the new
       // label also carries the old one out — the convergence probe is then
       // a shuffle-free filter over the checkpointed frame, not a second
@@ -808,28 +792,15 @@ object Dedup {
       val compType = labels.schema("component").dataType
       val viaNbr = edges.join(labels, edges("dst") === labels("node"))
         .select(edges("src").as("node"), col("component"), lit(null).cast(compType).as("__old"))
-      // pointer jump: node → label(label(node)). A label is always a node
-      // of the graph (it starts as a node id and min() only ever picks
-      // node ids), so the inner self-join is total; the shortcut label is
-      // a reachable node's id, hence still an upper bound on the true min.
-      // `jump = false` keeps the plain one-hop propagation (the spec uses
-      // it to pin the O(diameter) vs O(log diameter) contrast)
-      val self = labels.select(col("node"), col("component"), col("component").as("__old"))
-      val contributions =
-        if (!jump) self.unionByName(viaNbr)
-        else self.unionByName(viaNbr).unionByName(
-          labels.alias("x")
-            .join(labels.alias("y"), col("x.component") === col("y.node"))
-            .select(col("x.node").as("node"), col("y.component").as("component"),
-              lit(null).cast(compType).as("__old")))
       val next = cut(
-        contributions.groupBy("node")
+        labels.select(col("node"), col("component"), col("component").as("__old"))
+          .unionByName(viaNbr)
+          .groupBy("node")
           .agg(min("component").as("component"), min("__old").as("__old")),
         rows = Some(m))
       done = next.where(col("component") =!= col("__old")).isEmpty
       labels = next.select("node", "component")
       i += 1
-      note(s"round$i", tRound)
     }
     // silent non-convergence would split one cluster into several and let
     // extra "survivors" through downstream — fail loudly instead
@@ -844,9 +815,8 @@ object Dedup {
    * Kiveris et al. SOCC'14 "Connected Components in MapReduce and
    * Beyond" scheme, re-derived) — the HIGH-DIAMETER / EDGE-DOMINATED
    * complement of [[connectedComponents]]: plain hash-min needs
-   * O(diameter) rounds (the pointer jump brings it to O(log diameter),
-   * but every round still joins the FULL edge set against the labels);
-   * star alternation converges in O(log² n) rounds regardless of
+   * O(diameter) rounds, and every round joins the FULL edge set against
+   * the labels; star alternation converges in O(log² n) rounds regardless of
    * diameter AND its edge set CONTRACTS toward stars round over round —
    * on a 100 TB link graph the shrinking join input is the difference,
    * not just the round count.

@@ -662,14 +662,6 @@ object Graph {
       roundsPerLevel: Int = 2): DataFrame = {
     require(maxLevels >= 1, s"maxLevels must be >= 1, got $maxLevels")
     import graft.recon.Checkpoints.cut
-    // scratch profiling hook (HierProfile): laps only when the env asks
-    val lapOn = sys.env.contains("GRAFT_LOUVAIN_LAPS")
-    var lapT0 = System.nanoTime()
-    def lap(tag: String): Unit = if (lapOn) {
-      val t = System.nanoTime()
-      println(f"LL LAP $tag%-28s ${(t - lapT0) / 1e9}%6.2f s")
-      lapT0 = t
-    }
     // NO extra cut on the level-1 state: louvainMove's final round
     // already lineage-cut its label frame, so every consumer below (the
     // contraction broadcasts, the out slice, the level-2 relabel join)
@@ -677,7 +669,6 @@ object Graph {
     // second cut here re-copied node-sized data and paid one more
     // AQE-off plan+codegen charge (~1.3 s) for nothing.
     var flat = louvainMove(edges, roundsPerLevel) // node space
-    lap("level1 louvainMove build")
     val out = scala.collection.mutable.ArrayBuffer(
       flat.select(lit(1).as("level"), col("node"), col("label")))
     if (maxLevels > 1) {
@@ -691,7 +682,6 @@ object Graph {
       // pays that one broadcast join inside the materialization — the
       // documented trade at the `combined` cut below.)
       val e2 = edges.count() // Σw is contraction-invariant — compute once
-      lap("e2 count")
       val decZ = lit(null).cast("decimal(38,0)")
       // slice 1: super-edge rows of a contraction
       def tagged(con: DataFrame): DataFrame =
@@ -729,13 +719,11 @@ object Graph {
       // the contraction subtree is edge-sized — size its partitions from
       // the measured edge count like the sweeps
       var contracted = cut(contractGraph(edges, flat), rows = Some(e2))
-      lap("level1 contraction cut")
       // materialize the contraction now (it materializes either way at
       // the level's first action) and take its ROW count — the exact
       // partition-sizing input for everything the next level plans,
       // which Σw can only bound from above
       var supRows = contracted.count()
-      lap("level1 contraction count")
       // level 1's own Qnum is DEFERRED into level 2's cut (slice 4, an
       // aggregate over the already-cut level-1 contraction) — probing it
       // here would cost a whole extra planned action for a scalar the
@@ -748,8 +736,7 @@ object Graph {
         // AQE-off tree measured slower (~4.8 s vs ~3.7 s at sf0.1 L3)
         // than two shallow round cuts whose execution is trivial
         val lv = louvainMoveWeighted(contracted, roundsPerLevel,
-          cutRounds = true, sumW = Some(e2), rows = Some(supRows))
-        lap(s"level$level weighted sweep")
+          sumW = Some(e2), rows = Some(supRows))
         // ONE cut frame per level carries ALL the level's products — the
         // contraction (__slice 1), the node-space relabel (__slice 2),
         // and the gate scalars (__slice 3; plus, at level 2 only, the
@@ -770,9 +757,7 @@ object Graph {
         val combined = cut(
           if (level == 2) base.unionByName(gateRow(contracted, 4)) else base,
           rows = Some(supRows))
-        lap(s"level$level combined cut")
         val gates = readGates(combined)
-        lap(s"level$level readGates")
         if (level == 2) q = gates(4)
         val qNext = gates(3)
         // exact integer compare — the level survives only if it RAISES Q
@@ -836,15 +821,11 @@ object Graph {
    * internal edges move with it): the level-2 sweep run on
    * [[contractGraph]]'s output, same exact-integer gain
    * `Σw·e_{i→c} − k_i·(Σtot_c − [stay]·k_i)` and the same
-   * parity-alternating mover subsets as [[louvainMove]].
-   *
-   * `cutRounds = false` skips the per-round lineage cuts — right when
-   * the input is an already-materialized community-sized graph, where
-   * re-executing the small per-round aggregates costs less than each
-   * cut's plan+codegen; leave it on for node-scale inputs.
+   * parity-alternating mover subsets as [[louvainMove]]. Each round's
+   * labels are lineage-cut at the `rows`-sized width.
    */
   def louvainMoveWeighted(wEdges: DataFrame, rounds: Int,
-      cutRounds: Boolean = true, scoreDecimal: Boolean = false,
+      scoreDecimal: Boolean = false,
       sumW: Option[Long] = None, rows: Option[Long] = None): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     import graft.recon.Checkpoints.cut
@@ -863,8 +844,6 @@ object Graph {
     // the rows (integer weights ≥ 1) — is the free proxy
     val sweepRows = rows.getOrElse(e2n)
     val sweepParts = graft.recon.Checkpoints.parts(wEdges.sparkSession, sweepRows)
-    def maybeCut(df: DataFrame): DataFrame =
-      if (cutRounds) cut(df, rows = Some(sweepRows)) else df
     // round 1 specialized exactly like [[louvainMove]]: singleton labels
     // ARE the weighted-degree frame (self-loops ride the degree and Σtot
     // but can't be candidates — a singleton's neighbor labels are the
@@ -885,8 +864,8 @@ object Graph {
       .join(broadcast(wd.select(col("node").as("label"), col("__k").as("__tot"))),
         Seq("label"))
       .withColumn("__score", score(col("label") === col("src")))
-    var labels = maybeCut(louvainPickApply(scored1,
-      wd.withColumn("label", col("node")), r = 1))
+    var labels = cut(louvainPickApply(scored1,
+      wd.withColumn("label", col("node")), r = 1), rows = Some(sweepRows))
     for (r <- 2 to rounds) {
       val tot = labels.groupBy(col("label")).agg(sum(col("__k")).as("__tot"))
       val cand = movers(wEdges.where(col("src") =!= col("dst")), "src", r)
@@ -902,7 +881,7 @@ object Graph {
         .join(broadcast(cur), Seq("src"))
         .join(broadcast(tot), Seq("label"))
         .withColumn("__score", score(col("label") === col("__cur")))
-      labels = maybeCut(louvainPickApply(scored, labels, r))
+      labels = cut(louvainPickApply(scored, labels, r), rows = Some(sweepRows))
     }
     labels.select(col("node"), col("label"))
   }

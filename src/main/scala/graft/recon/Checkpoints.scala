@@ -108,13 +108,6 @@ object Checkpoints {
     * returns. */
   def cut(df: DataFrame, eager: Boolean = false, rows: Option[Long] = None): DataFrame = {
     val spark = df.sparkSession
-    // scratch diagnostics: cut subtrees are LogicalRDD leaves downstream,
-    // so Explain/PlanAudit never see inside them — this env-gated dump is
-    // the only window into the plans that actually run
-    if (sys.env.contains("GRAFT_CUT_EXPLAIN"))
-      println(s"==== CUT SUBTREE (${df.schema.fieldNames.mkString(",")}) ====\n" +
-        df.queryExecution.executedPlan.toString.take(
-          sys.env.get("GRAFT_CUT_EXPLAIN").flatMap(_.toIntOption).getOrElse(8000)))
     val overrides =
       Option.when(!eager || rows.nonEmpty)("spark.sql.adaptive.enabled" -> "false") ++
         rows.map(r => "spark.sql.shuffle.partitions" -> parts(spark, r).toString)

@@ -287,9 +287,12 @@ final class Reconciler(val conf: ReconConfig) extends Serializable {
    *   large inputs, where the accumulated anti-join-of-anti-join plan
    *   re-executes pass 1..N-1 inside pass N and the diagonal-union lineage
    *   grows unboundedly (SURVEY §7.3-6).
+   * @throws IllegalArgumentException on empty `passes`: with no pass there
+   *   is no matched frame, and no `ext_*` schema to give an empty one
    */
   def iterate(a: DataFrame, b: DataFrame, extOrder: Column,
       passes: Seq[ReconConfig], truncateLineage: Boolean = false): ReconResult = {
+    require(passes.nonEmpty, "iterate needs at least one pass")
     def cut(df: DataFrame): DataFrame =
       if (truncateLineage) Checkpoints.cut(df) else df
     // materialize the base frames too: pass 1 consumes each side in three
@@ -310,7 +313,7 @@ final class Reconciler(val conf: ReconConfig) extends Serializable {
       aCur = if (last) r.internalRemanent else cut(r.internalRemanent)
       bCur = if (last) r.externalRemanent else cut(r.externalRemanent)
     }
-    ReconResult(acc.getOrElse(a.limit(0)), aCur, bCur)
+    ReconResult(acc.get, aCur, bCur)
   }
 }
 

@@ -1,19 +1,50 @@
 package graft.tools
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, GraftInternals, SparkSession}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.LocalSession
 
 /**
- * Scale red-flag scan over every registered query's physical plan:
- * cartesian products, single-partition exchanges (global windows /
- * unpartitioned sorts funneling all rows through one task), and
- * interpreted non-codegen stages are exactly the patterns that pass a
- * small-SF correctness check and then die at 100×. Run ad hoc:
+ * Scale red-flag scan over every registered query's physical plan and
+ * the plan of every lineage cut the query makes: cartesian products,
+ * single-partition exchanges (global windows / unpartitioned sorts
+ * funneling all rows through one task), and interpreted non-codegen
+ * stages are exactly the patterns that pass a small-SF correctness check
+ * and then die at 100×. Run ad hoc:
  *
  *   sbt "runMain graft.tools.PlanAudit [sfDir]"
  *
- * Prints one line per query; FLAG lines name the offending pattern.
+ * Prints one line per query; FLAG lines name the offending pattern, with
+ * `(in cut)` when it sits in a cut subtree. The closing `AUDIT` line
+ * counts the flagged queries and the cut plans audited.
  */
 object PlanAudit {
+
+  /** Builds `query` and returns it with the executed plan of every
+    * lineage cut ([[graft.recon.Checkpoints.cut]]) made while building
+    * it, in cut order. Downstream a cut subtree is a `LogicalRDD` leaf,
+    * so these are the only view of what a cut runs. They come from a
+    * listener on `spark`: a cut checkpoints under a `localCheckpoint` or
+    * `checkpoint` action in a child session, which inherits the caller's
+    * listeners. Delivery is asynchronous, so the listener bus is drained
+    * before the listener is removed. */
+  def cutPlans(spark: SparkSession)(query: => DataFrame): (DataFrame, Seq[SparkPlan]) = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint" || funcName == "checkpoint") plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val df = query
+      GraftInternals.drainListenerBus(spark.sparkContext)
+      (df, plans.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
 
   /** The red-flag patterns for one executed plan — shared with
     * [[ScaleCheck]], which asserts the flag set stays IDENTICAL across
@@ -90,11 +121,15 @@ object PlanAudit {
     val only = sys.env.get("SPARK_GRAFT_AUDIT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     var flagged = 0
+    var cutsAudited = 0
     graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
       try {
-        val flags = flagsOf(fn(spark, sfDir).queryExecution.executedPlan)
+        val (df, cuts) = cutPlans(spark)(fn(spark, sfDir))
+        cutsAudited += cuts.size
+        val flags = (flagsOf(df.queryExecution.executedPlan) ++
+          cuts.flatMap(flagsOf).map(f => s"$f (in cut)")).distinct
         if (flags.nonEmpty) { flagged += 1; println(s"FLAG  $name: ${flags.mkString(", ")}") }
         else println(s"ok    $name")
       } catch {
@@ -103,7 +138,7 @@ object PlanAudit {
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       }
     }
-    println(s"AUDIT flagged=$flagged")
+    println(s"AUDIT flagged=$flagged cuts=$cutsAudited")
     spark.stop()
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Shared JVM warm-up for every timing tool (Bench, Explain, ConfAB,
-  * ScaleCheck, HierProfile, JobTrace): one hash-aggregate job exercises
+  * ScaleCheck): one hash-aggregate job exercises
   * classloading, codegen, and the shuffle machinery outside any timed
   * window, so the first real query isn't charged ~3 s of JIT. One
   * definition — a tuned warm-up that diverged across tools would

@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 
@@ -11,7 +12,9 @@ import org.apache.spark.sql.classic.ClassicConversions.castToImpl
  *    expressions as user-facing Columns on Spark 4's split Column API;
  *  - `cloneSession` and `Dataset.ofRows`, to plan a frame under a
  *    private copy of its session's conf and hand the result back to the
- *    caller's session ([[graft.recon.Checkpoints.cut]]).
+ *    caller's session ([[graft.recon.Checkpoints.cut]]);
+ *  - the listener bus drain, to wait for asynchronously delivered
+ *    listener events ([[graft.tools.PlanAudit.cutPlans]]).
  */
 object GraftInternals {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -34,6 +37,9 @@ object GraftInternals {
     artifacts.set(child.sessionState, spark.sessionState.artifactManager)
     child
   }
+
+  /** Block until every event posted so far has reached every listener. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
   /** `df`'s analyzed plan as a frame of `spark`: optimized, planned and
     * executed under `spark`'s conf. */

@@ -8,9 +8,12 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ops.Dedup
 import graft.recon.{Checkpoints, KeyPair, FieldTypes, ReconConfig, Reconciler, ToleranceRule}
+import graft.tools.PlanAudit
 
 /** How `Checkpoints.cut` plans a cut subtree: in a child session of the
   * caller's, with AQE off for a lazy cut and the shuffle width sized from
@@ -121,6 +124,29 @@ class CutPlanningSpec extends SparkSuite {
       assert(Await.result(session, 5.minutes).forall(_ == 4))
       assert(explicitConf == before)
     } finally pool.shutdown()
+  }
+
+  test("PlanAudit.cutPlans returns each cut's plan, so a flag inside a cut is seen") {
+    // audited like PlanAudit: AQE off, or the outer plan is one opaque
+    // AdaptiveSparkPlanExec and hides nothing to begin with
+    val audit = spark.newSession()
+    audit.conf.set("spark.sql.adaptive.enabled", "false")
+    val (df, cuts) = PlanAudit.cutPlans(audit) {
+      val numbered = Checkpoints.cut(audit.range(0, 1000)
+        .withColumn("rn", row_number().over(Window.orderBy(col("id")))))
+      val sized = Checkpoints.cut(audit.range(0, 1000)
+        .groupBy((col("id") % 97).as("k")).agg(count(lit(1)).as("c")), rows = Some(1000))
+      numbered.join(sized, col("id") === col("k"))
+    }
+    // the unpartitioned window is the query's only red flag, and it sits
+    // in a LogicalRDD leaf of the outer plan
+    assert(PlanAudit.flagsOf(df.queryExecution.executedPlan).isEmpty)
+    assert(cuts.size == 2)
+    assert(cuts.flatMap(PlanAudit.flagsOf) == Seq("global window over all rows"))
+    // the plan that ran: the rows-sized cut shuffles into ceil(1000 / 250k) = 1 partition
+    assert(cuts(1).collect { case e: ShuffleExchangeExec => e.outputPartitioning.numPartitions }
+      == Seq(1))
+    assert(df.count() == 97)
   }
 
   test("concurrent connectedComponents and Reconciler.iterate return their single-thread rows") {

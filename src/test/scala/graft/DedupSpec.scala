@@ -304,8 +304,7 @@ class DedupSpec extends SparkSuite {
     // a diameter-99 path: PLAIN hash-min propagates the min ONE hop per
     // round (99 rounds — its default maxIter=25 budget throws); star
     // alternation halves path structure per round and must land well
-    // inside a log-scale budget; hash-min WITH the pointer jump doubles
-    // covered distance per round and converges inside the same budget
+    // inside a log-scale budget
     val path = (0L until 99L).map(i => (i, i + 1)).toDF("doc1", "doc2")
     intercept[IllegalStateException](Dedup.connectedComponents(path).count())
     val (labels, rounds) =
@@ -313,11 +312,7 @@ class DedupSpec extends SparkSuite {
     assert(rounds <= 12, s"expected O(log n) rounds on a path-100, got $rounds")
     val got = labels.as[(Long, Long)].collect().toMap
     assert(got == (0L to 99L).map(_ -> 0L).toMap)
-    // hash-min agrees: WITH the pointer jump inside the default budget,
-    // and without it once the budget covers the diameter
-    val jumped = Dedup.connectedComponents(path, jump = true)
-      .as[(Long, Long)].collect().toMap
-    assert(got == jumped)
+    // hash-min agrees once the budget covers the diameter
     val plain = Dedup.connectedComponents(path, maxIter = 120)
       .as[(Long, Long)].collect().toMap
     assert(got == plain)

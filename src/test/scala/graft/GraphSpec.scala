@@ -238,7 +238,7 @@ class GraphSpec extends SparkSuite {
     // modularity (score(2->c6) = 14·1 − 7·7 = −35 < stay 0), so both stay
     val wE = Seq((2L, 2L, 6L), (6L, 6L, 6L), (2L, 6L, 1L), (6L, 2L, 1L))
       .toDF("src", "dst", "w")
-    val l2 = Graph.louvainMoveWeighted(wE, rounds = 2, cutRounds = false)
+    val l2 = Graph.louvainMoveWeighted(wE, rounds = 2)
       .as[(Long, Long)].collect().toMap
     assert(l2 == Map(2L -> 2L, 6L -> 6L))
     // a strongly-bridged pair with OPPOSITE parity merges: supernodes 3
@@ -246,11 +246,11 @@ class GraphSpec extends SparkSuite {
     // into the even one (score 14·5 − 7·7 = 21 > stay 0)
     val wE2 = Seq((3L, 3L, 2L), (6L, 6L, 2L), (3L, 6L, 5L), (6L, 3L, 5L))
       .toDF("src", "dst", "w")
-    val m = Graph.louvainMoveWeighted(wE2, rounds = 2, cutRounds = false)
+    val m = Graph.louvainMoveWeighted(wE2, rounds = 2)
       .as[(Long, Long)].collect().toMap
     assert(m(3L) == 6L && m(6L) == 6L, s"expected a merge into 6, got $m")
     intercept[IllegalArgumentException](
-      Graph.louvainMoveWeighted(wE, rounds = 0, cutRounds = false))
+      Graph.louvainMoveWeighted(wE, rounds = 0))
   }
 
   test("louvain DECIMAL(38,0) score path (the >2·10⁹-Σw auto-upgrade) picks identically") {
@@ -265,9 +265,9 @@ class GraphSpec extends SparkSuite {
     assert(decPath == longPath)
     val wE = Seq((3L, 3L, 2L), (6L, 6L, 2L), (3L, 6L, 5L), (6L, 3L, 5L))
       .toDF("src", "dst", "w")
-    val wLong = Graph.louvainMoveWeighted(wE, rounds = 2, cutRounds = false)
+    val wLong = Graph.louvainMoveWeighted(wE, rounds = 2)
       .as[(Long, Long)].collect().toMap
-    val wDec = Graph.louvainMoveWeighted(wE, rounds = 2, cutRounds = false,
+    val wDec = Graph.louvainMoveWeighted(wE, rounds = 2,
       scoreDecimal = true).as[(Long, Long)].collect().toMap
     assert(wDec == wLong)
   }

@@ -136,6 +136,13 @@ class ReconcilerSpec extends SparkSuite {
     assert(res.internalRemanent.select("_id").as[String].collect().toSet == Set("a3", "a4"))
   }
 
+  test("iterate rejects an empty pass list") {
+    // with no pass there is no matched frame to return: an empty stand-in
+    // would carry the internal side's schema, without ext_* or tolerance_diff
+    intercept[IllegalArgumentException](
+      recon.iterate(internal, external, col("ext_row"), Seq.empty))
+  }
+
   test("empty sides: all operators degrade to empty/identity, no failures") {
     val emptyA = internal.limit(0)
     val emptyB = external.limit(0)

@@ -6,10 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-tree guards, no Spark session: every session is built by
   * [[LocalSession]], `spark.graft.checkpointDir` is the engine's only
-  * own conf key, and no operator writes a session's conf (a cut plans its
-  * subtree in a child session) — so a removed builder copy, settled
-  * conf-gated arm or session-wide set/restore cannot come back one file
-  * at a time. */
+  * own conf key, no operator writes a session's conf (a cut plans its
+  * subtree in a child session), and no operator reads the environment or
+  * prints (diagnostics live in the tools) — so a removed builder copy,
+  * settled conf-gated arm, session-wide set/restore or env-gated print
+  * cannot come back one file at a time. */
 class SimplicityGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -47,6 +48,12 @@ class SimplicityGuardSpec extends AnyFunSuite {
   test("graft.ops and graft.recon never write a session's conf") {
     assert(sources.exists(_._1.startsWith(root.resolve("graft/recon"))))
     val found = hits("""conf\s*\.\s*(set|unset)\s*\(""".r,
+      under = Seq("graft/ops", "graft/recon"))
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("graft.ops and graft.recon never read the environment or print") {
+    val found = hits("""sys\s*\.\s*env\b|System\s*\.\s*getenv\b|\bprintln\s*\(""".r,
       under = Seq("graft/ops", "graft/recon"))
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
