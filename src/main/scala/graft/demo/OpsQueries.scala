@@ -454,7 +454,7 @@ object OpsQueries {
         |        row_number() OVER (PARTITION BY lang, source ORDER BY doc_id) AS rn
         |      FROM documents)
         |WHERE rn = 1""".stripMargin) { (s, d) =>
-      Dedup.keyedKeepFirst(docs(s, d), Seq("lang", "source"), Seq(col("doc_id")))
+      graft.recon.Reconciler.keepFirstBy(docs(s, d), Seq("lang", "source"), Seq(col("doc_id")))
         .select(col("doc_id"), col("lang"), col("source"))
     },
 
@@ -1170,7 +1170,7 @@ object OpsQueries {
         |        row_number() OVER (PARTITION BY event_id ORDER BY ts, user_id) AS rn
         |      FROM events)
         |WHERE rn = 1""".stripMargin) { (s, d) =>
-      Dedup.keyedKeepFirst(events(s, d), Seq("event_id"), Seq(col("ts"), col("user_id")))
+      graft.recon.Reconciler.keepFirstBy(events(s, d), Seq("event_id"), Seq(col("ts"), col("user_id")))
         .select(col("event_id"), col("user_id"), col("event_type"))
     },
 

@@ -88,7 +88,7 @@ object Dedup {
 
   /** Exact dedup: keep one row per distinct content (the min-id row). */
   def exactDedup(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    keepFirstGrouped(df.withColumn("__ch", contentHash(col(textCol))),
+    graft.recon.Reconciler.keepFirstBy(df.withColumn("__ch", contentHash(col(textCol))),
       Seq("__ch"), Seq(col(idCol))).drop("__ch")
 
   /** The persisted state for cross-run (incremental) exact dedup: one
@@ -138,24 +138,6 @@ object Dedup {
     newDf.withColumn("__ch", contentHash(col(textCol)))
       .join(seen, col("__ch") === seen("content_hash"), "left_anti")
       .drop("__ch")
-
-  /** Keyed keep-first: one row per key set, by explicit deterministic order.
-    * `min_by(wholeRow, orderTuple)` aggregation, not a `row_number()`
-    * window: map-side partial combine (the shuffle carries one candidate
-    * per key per partition) and no per-key sort. Order columns must form a
-    * total order per key for determinism — same contract the window form
-    * has (see graft.recon.Reconciler.keepFirstBy). */
-  def keyedKeepFirst(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame =
-    keepFirstGrouped(df, keys, order)
-
-  private def keepFirstGrouped(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame = {
-    val others = df.columns.filterNot(keys.contains)
-    val picked = min_by(struct(others.map(col).toIndexedSeq: _*), struct(order: _*))
-    df.groupBy(keys.map(col): _*)
-      .agg(picked.as("__row"))
-      .select(keys.map(col) ++ others.map(c => col(s"__row.$c").as(c)): _*)
-      .select(df.columns.map(col).toIndexedSeq: _*)
-  }
 
   /**
    * Word n-gram shingles of a token-array column — the native codegen
@@ -533,20 +515,15 @@ object Dedup {
   }
 
   /**
-   * MinHash + LSH banding candidate pairs: `bands` band hashes per doc
-   * (xxhash64 of that band's slot values); docs sharing any band hash are
-   * candidates. Only shuffles: the signature groupBy and the bucket
-   * groupBy on (band, bandHash). `maxBucket` skips degenerate hub buckets
-   * (boilerplate-heavy corpora collapse into giant buckets whose pair
-   * expansion is quadratic — the standard cap at scale; recall for pairs
-   * inside a skipped bucket is recovered by the other bands).
+   * MinHash + LSH banding candidate pairs from a pre-built (doc, shingle)
+   * table ([[shingleTable]]): `bands` band hashes per doc (xxhash64 of
+   * that band's slot values); docs sharing any band hash are candidates.
+   * Only shuffles: the signature groupBy and the bucket groupBy on (band,
+   * bandHash). `maxBucket` skips degenerate hub buckets (boilerplate-heavy
+   * corpora collapse into giant buckets whose pair expansion is quadratic
+   * — the standard cap at scale; recall for pairs inside a skipped bucket
+   * is recovered by the other bands).
    */
-  def minHashCandidates(df: DataFrame, textCol: String, idCol: String,
-      shingleN: Int = 3, k: Int = 64, bands: Int = 16, maxBucket: Int = 100,
-      hash: SketchHash = SketchHash.Portable): DataFrame =
-    minHashCandidatesOf(shingleTable(df, textCol, idCol, shingleN), k, bands, maxBucket, hash)
-
-  /** LSH banding candidates from a pre-built (doc, shingle) table. */
   def minHashCandidatesOf(shingled: DataFrame,
       k: Int, bands: Int, maxBucket: Int,
       hash: SketchHash = SketchHash.Portable): DataFrame = {

@@ -102,18 +102,17 @@ object Graph {
    * a dead end (inner join) — impossible on symmetric co-occurrence
    * graphs, where every node has degree ≥ 1.
    *
+   * `symmetric = true` asserts every dst also appears as a src (true by
+   * construction for co-occurrence graphs), letting the start set come
+   * straight from the adjacency's rank-0 rows — one per src, already
+   * distinct — instead of a union-and-dedup shuffle over the full edge
+   * set.
+   *
    * Output: `(start, walk, step, node)` — step 0 is the start node;
    * one row per visited position.
    */
-  def randomWalks(edges: DataFrame, nWalks: Int, len: Int): DataFrame =
-    randomWalks(edges, nWalks, len, symmetric = false)
-
-  /** As [[randomWalks]]; `symmetric = true` asserts every dst also
-    * appears as a src (true by construction for co-occurrence graphs),
-    * letting the start set come straight from the adjacency's rank-0
-    * rows — one per src, already distinct — instead of a
-    * union-and-dedup shuffle over the full edge set. */
-  def randomWalks(edges: DataFrame, nWalks: Int, len: Int, symmetric: Boolean): DataFrame =
+  def randomWalks(edges: DataFrame, nWalks: Int, len: Int,
+      symmetric: Boolean = false): DataFrame =
     randomWalkPaths(edges, nWalks, len, symmetric)
       .select(col("start"), col("walk"),
         posexplode(col("path")).as(Seq("step", "node")))
@@ -426,28 +425,42 @@ object Graph {
     labels
   }
 
+  /** [[louvainMoveWeighted]] on unit weights (`w = 1` per directed edge):
+    * Σw = 2|E| and every weighted degree is the plain degree. A self-loop
+    * rides its node's degree but is never a move candidate — the standard
+    * Louvain treatment, since a node's internal edges move with it.
+    * Output: `(node, label)`. */
+  def louvainMove(edges: DataFrame, rounds: Int): DataFrame =
+    louvainMoveWeighted(unitWeights(edges), rounds)
+
+  /** `(src, dst)` edges as `(src, dst, w = 1)` — the unweighted graph the
+    * weighted Louvain sweep and contraction run on. */
+  private def unitWeights(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst"), lit(1L).as("w"))
+
   /**
-   * Synchronous Louvain local-move rounds — modularity-GUIDED community
-   * detection, one step up from [[labelPropagation]]'s frequency vote:
-   * every node simultaneously adopts the neighbor community with the
-   * best exact modularity gain, or stays put. This is the parallel
-   * local-move sweep distributed Louvain implementations run (the
-   * sequential original visits nodes one at a time — inherently serial
-   * and irreproducible under reordering; the synchronous sweep is
-   * deterministic on any cluster layout and oracle-mirrorable).
+   * Synchronous Louvain local-move rounds over WEIGHTED `(src, dst, w)`
+   * edges — modularity-GUIDED community detection, one step up from
+   * [[labelPropagation]]'s frequency vote: every node simultaneously
+   * adopts the neighbor community with the best exact modularity gain, or
+   * stays put. This is the parallel local-move sweep distributed Louvain
+   * implementations run (the sequential original visits nodes one at a
+   * time — inherently serial and irreproducible under reordering; the
+   * synchronous sweep is deterministic on any cluster layout and
+   * oracle-mirrorable). The one sweep: [[louvainMove]] runs it on unit
+   * weights, [[louvainLevels]] on each level's contraction.
    *
-   * Exactness: with e2 = |directed edges| = 2m, the classical gain of
+   * Exactness: with e2 = Σw (2|E| unweighted), the classical gain of
    * placing node i in community c is, up to the positive factor 2m²,
    *   score(i, c) = e2·e_{i→c} − k_i·(Σtot_c − [c = cur]·k_i)
-   * — all integers (the [c = cur] correction removes i's own degree
-   * from its current community's total, the standard "gain of staying"
-   * normalization). Argmax over the neighbor communities plus the
-   * current one; ties break to the smaller community id. Both engines
-   * compute identical bits. Scores ride Long up to Σw =
-   * [[SweepScoreLongSafeE2]] (|score| ≤ 2·e2² < 2^63 there) and
-   * auto-upgrade to DECIMAL(38,0) past it — the 10¹³-edge tier where
-   * k_i·Σtot_c would wrap a Long silently; `scoreDecimal = true`
-   * forces the decimal path (spec'd identical on small graphs).
+   * — all integers (e_{i→c} is i's edge weight into c, self-loops
+   * excluded; k_i is i's weighted degree, self-loops included; the
+   * [c = cur] correction removes i's own degree from its current
+   * community's total, the standard "gain of staying" normalization).
+   * Argmax over the neighbor communities plus the current one; ties break
+   * to the smaller community id. Both engines compute identical bits.
+   * Scores ride Long up to Σw = [[SweepScoreLongSafeE2]] and auto-upgrade
+   * to DECIMAL(38,0) past it ([[sweepScore]]).
    *
    * Oscillation control: a FULLY synchronous sweep 2-cycles on
    * symmetric structures (two tied nodes adopt each other's community
@@ -455,11 +468,10 @@ object Graph {
    * nodes with `pmod(node, 2) = r % 2` (pmod, not `%`: Spark's `%`
    * keeps the dividend's sign, so a negative odd id would never match
    * either parity and silently never move), the rest hold their label.
-   * This is
-   * the deterministic version of the mover-subset trick distributed
-   * Louvain uses (random subsets / coloring); two rounds together make
-   * one full sweep, and the alternation provably breaks 2-cycles on
-   * bipartite-symmetric ties.
+   * This is the deterministic version of the mover-subset trick
+   * distributed Louvain uses (random subsets / coloring); two rounds
+   * together make one full sweep, and the alternation provably breaks
+   * 2-cycles on bipartite-symmetric ties.
    *
    * Scale shape per round: ONE shuffle of edge-sized data (the grouped
    * e_{i→c} candidate build — the stay candidate rides the same
@@ -469,14 +481,14 @@ object Graph {
    * argmax is a partial-aggregable `max(struct(score, −label))` — no
    * window sort, no per-node collect. The label frame feeds four
    * consumers per round and the next round compounds that fan-out, so
-   * each round's node-sized result is lineage-cut. `rounds` is explicit
-   * and bounded like [[labelPropagation]].
+   * each round's node-sized result is lineage-cut at the `rows`-sized
+   * width. `rounds` is explicit and bounded like [[labelPropagation]].
    *
    * Output: `(node, label)` — the community assignment after `rounds`
    * alternating sweeps from singleton communities.
    */
-  def louvainMove(edges: DataFrame, rounds: Int,
-      scoreDecimal: Boolean = false): DataFrame = {
+  def louvainMoveWeighted(wEdges: DataFrame, rounds: Int,
+      sumW: Option[Long] = None, rows: Option[Long] = None): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     import graft.recon.Checkpoints.cut
     // every lazy cut pays its subtree's AQE-off plan+codegen at
@@ -486,59 +498,64 @@ object Graph {
     // and nothing else is cut — measured at sf0.1 this shape beats both
     // the no-cut form (plan fan-out re-executes each round 4×, 25 s)
     // and the separate-deg-cut form (one more planned subtree).
+    // Σw enters as a plan literal from ONE action instead of a per-round
+    // broadcast-aggregate job (the cuts make round construction EXECUTE
+    // eagerly through the broadcast chain, so every removed broadcast job
+    // is serial wall time, not just plan nodes); callers that KNOW Σw
+    // pass it via `sumW` and skip even that job ([[louvainLevels]]: Σw is
+    // contraction-invariant, so the original edge count serves every level)
+    val e2n = sumW.getOrElse(
+      wEdges.agg(coalesce(sum(col("w")), lit(0L))).head().getLong(0))
+    val score = sweepScore(lit(e2n), e2n > SweepScoreLongSafeE2) _
+    // the sweep's shuffles all carry ≤ edge-row-count rows, and every
+    // round is cut (planned AQE-off, so no runtime coalescing): size their
+    // partitions from the row count instead of the session width (the
+    // cuts' `rows`, and the same width on the explicit candidate
+    // repartition; guide §2.2). Callers that know the ROW count pass it
+    // via `rows` ([[louvainLevels]] reads each contraction's off its gate
+    // row); otherwise Σw — an upper bound on the rows (integer weights
+    // ≥ 1), equal to it on unit weights — is the free proxy
+    val sweepRows = rows.getOrElse(e2n)
+    val sweepParts = graft.recon.Checkpoints.parts(wEdges.sparkSession, sweepRows)
     // ROUND 1 IS SPECIALIZED: from singleton communities the label frame
-    // IS the degree frame (label = node, Σtot_c = k_c), so the first
-    // sweep derives everything from the edges directly — no init-labels
-    // cut, no broadcast-labels join. TWO more execution savings shared by
-    // every round: (a) only the MOVING PARITY is scored — non-movers hold
-    // their label whatever the argmax says, so their half of the
-    // candidate shuffle was pure waste; (b) 2|E| enters as a plan literal
-    // from ONE count action instead of a per-round broadcast-aggregate
-    // job (the cuts make round construction EXECUTE eagerly through the
-    // broadcast chain, so every removed broadcast job is serial wall
-    // time, not just plan nodes).
-    val e2n = edges.count()
-    val e2 = lit(e2n)
-    val score = sweepScore(e2, scoreDecimal || e2n > SweepScoreLongSafeE2) _
-    // the sweep's shuffles all carry ≤ |directed edges| = e2n rows, and
-    // every round is cut (planned AQE-off, so no runtime coalescing):
-    // size their partitions from the measured edge count instead of the
-    // session width (the cuts' `rows`, and the same width on the explicit
-    // candidate repartition; guide §2.2)
-    val sweepParts = graft.recon.Checkpoints.parts(edges.sparkSession, e2n)
-    val deg = edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("__k"))
+    // IS the weighted-degree frame (label = node, Σtot_c = k_c), so the
+    // first sweep derives everything from the edges directly — no
+    // init-labels cut, no broadcast-labels join. Self-loops ride the
+    // degree and Σtot but are never candidates. Only the MOVING PARITY is
+    // scored in any round: non-movers hold their label whatever the
+    // argmax says, so their half of the candidate shuffle would be waste.
+    val wd = wEdges.groupBy(col("src").as("node")).agg(sum(col("w")).as("__k"))
+    val links = wEdges.where(col("src") =!= col("dst"))
     def movers(df: DataFrame, keyCol: String, r: Int) =
       df.where(pmod(col(keyCol), lit(2)) === lit(r % 2))
-    // round 1: candidates straight off the edge list (neighbor labels are
-    // the neighbors themselves), stay-candidate from the degree frame
     // ONE shuffle per round, not two: hash-partitioning on src alone
     // satisfies BOTH the (src, label) candidate aggregate and the src
     // argmax (same-key rows co-locate), so an explicit repartition(src)
     // replaces the two aggregate exchanges — and the partial-combine the
     // plain groupBy would run before its shuffle buys ~nothing here
     // (distinct edges ⇒ few duplicate (src, label) pairs per partition)
-    val cand1 = movers(edges, "src", 1)
-      .select(col("src"), col("dst").as("label"), lit(1L).as("__w"))
-      .unionByName(movers(deg, "node", 1).select(col("node").as("src"),
+    val cand1 = movers(links, "src", 1)
+      .select(col("src"), col("dst").as("label"), col("w").as("__w"))
+      .unionByName(movers(wd, "node", 1).select(col("node").as("src"),
         col("node").as("label"), lit(0L).as("__w")))
       .repartition(sweepParts, col("src"))
       .groupBy(col("src"), col("label")).agg(sum(col("__w")).as("__w"))
     val scored1 = cand1
-      .join(broadcast(deg.select(col("node").as("src"), col("__k"))), Seq("src"))
-      .join(broadcast(deg.select(col("node").as("label"), col("__k").as("__tot"))),
+      .join(broadcast(wd.select(col("node").as("src"), col("__k"))), Seq("src"))
+      .join(broadcast(wd.select(col("node").as("label"), col("__k").as("__tot"))),
         Seq("label"))
       .withColumn("__score", score(col("label") === col("src")))
     var labels = cut(louvainPickApply(scored1,
-      deg.withColumn("label", col("node")), r = 1), rows = Some(e2n))
+      wd.withColumn("label", col("node")), r = 1), rows = Some(sweepRows))
     for (r <- 2 to rounds) {
       val tot = labels.groupBy(col("label")).agg(sum(col("__k")).as("__tot"))
-      // edges from a MOVING i into each neighbor community, PLUS the
+      // edge weight from a MOVING i into each neighbor community, PLUS the
       // current community at weight 0 so "stay" is always a candidate
-      // (its true edge count, if any, arrives from the neighbor side of
+      // (its true edge weight, if any, arrives from the neighbor side of
       // the union) — one half-edge shuffle builds the candidate table
-      val cand = movers(edges, "src", r)
+      val cand = movers(links, "src", r)
         .join(broadcast(labels.select(col("node").as("dst"), col("label"))), Seq("dst"))
-        .select(col("src"), col("label"), lit(1L).as("__w"))
+        .select(col("src"), col("label"), col("w").as("__w"))
         .unionByName(movers(labels, "node", r).select(col("node").as("src"),
           col("label"), lit(0L).as("__w")))
         .repartition(sweepParts, col("src"))
@@ -549,18 +566,18 @@ object Graph {
         .join(broadcast(cur), Seq("src"))
         .join(broadcast(tot), Seq("label"))
         .withColumn("__score", score(col("label") === col("__cur")))
-      labels = cut(louvainPickApply(scored, labels, r), rows = Some(e2n))
+      labels = cut(louvainPickApply(scored, labels, r), rows = Some(sweepRows))
     }
     labels.select(col("node"), col("label"))
   }
 
   /** Largest Σw (= 2|E| unweighted) at which the Long sweep score is
-    * provably wrap-free: |score| = |e2·e_{i→c} − k_i·(Σtot_c − [stay]k_i)|
-    * ≤ 2·e2², so e2 ≤ 2·10⁹ keeps it under 2^63. Past this bound (the
-    * 10¹³-edge 100 TB tier) the sweeps auto-upgrade to DECIMAL(38,0) —
-    * exact to 10³⁸, same argmax, both engines agree — rather than wrap
-    * silently under Spark's non-ANSI Long arithmetic while a BIGINT
-    * oracle raises. Long stays the default below the bound because the
+    * provably overflow-free: |score| = |e2·e_{i→c} − k_i·(Σtot_c −
+    * [stay]k_i)| ≤ 2·e2², so e2 ≤ 2·10⁹ keeps it under 2^63. Past this
+    * bound (the 10¹³-edge 100 TB tier) the sweep scores in DECIMAL(38,0)
+    * — exact to 10³⁸, same argmax, both engines agree — instead of
+    * overflowing Long arithmetic (a raise under ANSI, a silent wrap
+    * without it). Long stays the default below the bound because the
     * score projection is the hottest expression in the suite. */
   private[graft] val SweepScoreLongSafeE2 = 2000000000L
 
@@ -568,7 +585,7 @@ object Graph {
     * [stay]·k_i)`, over the candidate frame's `__w`/`__k`/`__tot`
     * columns — in Long, or in DECIMAL(38,0) when `dec` (the Σw >
     * [[SweepScoreLongSafeE2]] tier). */
-  private def sweepScore(e2: Column, dec: Boolean)(stay: Column): Column = {
+  private[graft] def sweepScore(e2: Column, dec: Boolean)(stay: Column): Column = {
     def d(c: Column) = if (dec) c.cast("decimal(38,0)") else c
     d(e2) * col("__w") -
       d(col("__k")) * (col("__tot") - when(stay, col("__k")).otherwise(lit(0L)))
@@ -597,35 +614,29 @@ object Graph {
           .otherwise(col("label")).as("label"))
   }
 
+  /** [[contractGraphWeighted]] of an unweighted `(src, dst)` edge list
+    * (`w = 1` per directed edge): each super-edge weight is its edge
+    * count. Output `(src, dst, w)`. */
+  def contractGraph(edges: DataFrame, labels: DataFrame): DataFrame =
+    contractGraphWeighted(unitWeights(edges), labels)
+
   /**
    * Contract a partition into its supernode multigraph — the coarsening
-   * step between Louvain levels: every edge maps to its endpoints'
-   * communities and aggregates into a WEIGHTED super-edge, intra-
-   * community edges becoming self-loops (in the doubled directed
-   * representation an internal undirected edge contributes 2 to its
-   * community's self-loop, which keeps Σw and every supernode's
-   * weighted degree exactly equal to its members' original degree sum —
-   * the invariant modularity bookkeeping needs). Output `(src, dst, w)`
-   * supernode edges; community-sized, usually far smaller than |E|.
+   * step between Louvain levels: every `(src, dst, w)` edge maps to its
+   * endpoints' communities and its weight SUMS into a super-edge,
+   * intra-community edges becoming self-loops (in the doubled directed
+   * representation an internal undirected edge contributes 2w to its
+   * community's self-loop). Σw and every supernode's weighted degree stay
+   * exactly equal to its members' sums, so contracting a contraction
+   * keeps the modularity bookkeeping exact across levels. Output
+   * `(src, dst, w)` supernode edges; community-sized, usually far smaller
+   * than |E|.
    */
-  def contractGraph(edges: DataFrame, labels: DataFrame): DataFrame =
-    edges
+  def contractGraphWeighted(wEdges: DataFrame, labels: DataFrame): DataFrame =
+    wEdges
       // node-sized label frame broadcast TWICE (same contract as the
       // sweep rounds) — without the hint a cut LogicalRDD has no size
       // stats and Spark sort-merge-joins, shuffling the edge table twice
-      .join(broadcast(labels.select(col("node").as("src"), col("label").as("__la"))),
-        Seq("src"))
-      .join(broadcast(labels.select(col("node").as("dst"), col("label").as("__lb"))),
-        Seq("dst"))
-      .groupBy(col("__la").as("src"), col("__lb").as("dst"))
-      .agg(count(lit(1)).cast("long").as("w"))
-
-  /** [[contractGraph]] for an already-WEIGHTED `(src, dst, w)` edge list
-    * — super-edge weights SUM instead of counting, so contracting a
-    * contraction preserves Σw and every supernode's weighted degree (the
-    * invariant that keeps modularity bookkeeping exact across levels). */
-  def contractGraphWeighted(wEdges: DataFrame, labels: DataFrame): DataFrame =
-    wEdges
       .join(broadcast(labels.select(col("node").as("src"), col("label").as("__la"))),
         Seq("src"))
       .join(broadcast(labels.select(col("node").as("dst"), col("label").as("__lb"))),
@@ -662,13 +673,17 @@ object Graph {
       roundsPerLevel: Int = 2): DataFrame = {
     require(maxLevels >= 1, s"maxLevels must be >= 1, got $maxLevels")
     import graft.recon.Checkpoints.cut
-    // NO extra cut on the level-1 state: louvainMove's final round
-    // already lineage-cut its label frame, so every consumer below (the
+    // Σw is contraction-invariant — ONE count serves level 1's sweep and
+    // every gate below
+    val e2 = edges.count()
+    // NO extra cut on the level-1 state: the sweep's final round already
+    // lineage-cut its label frame, so every consumer below (the
     // contraction broadcasts, the out slice, the level-2 relabel join)
     // rescans that materialized RDD through a trivial projection — a
     // second cut here re-copied node-sized data and paid one more
     // AQE-off plan+codegen charge (~1.3 s) for nothing.
-    var flat = louvainMove(edges, roundsPerLevel) // node space
+    var flat = louvainMoveWeighted(unitWeights(edges), roundsPerLevel,
+      sumW = Some(e2)) // node space
     val out = scala.collection.mutable.ArrayBuffer(
       flat.select(lit(1).as("level"), col("node"), col("label")))
     if (maxLevels > 1) {
@@ -681,48 +696,31 @@ object Graph {
       // also carries the node-space relabel, so rejecting a level still
       // pays that one broadcast join inside the materialization — the
       // documented trade at the `combined` cut below.)
-      val e2 = edges.count() // Σw is contraction-invariant — compute once
       val decZ = lit(null).cast("decimal(38,0)")
       // slice 1: super-edge rows of a contraction
       def tagged(con: DataFrame): DataFrame =
         con.select(lit(1).as("__slice"), col("src").as("__a"),
           col("dst").as("__b"), col("w").as("__w"), decZ.as("__sk2"))
-      // gate SCALARS as one in-plan row (Σ self-loop w and Σ k² in
-      // DECIMAL(38,0)) aggregated from a contraction subtree —
-      // materializing gate rows inside the level's cut makes every
-      // convergence probe a filter-collect over an already-computed RDD
-      // instead of a separately planned aggregate action (~1.5-2 s of
-      // plan+codegen+job each at sf0.1). The aggregated subtree executes
-      // once more inside the cut — community-sized, far cheaper.
-      def gateRow(con: DataFrame, slice: Int): DataFrame =
-        con.groupBy(col("src"))
-          .agg(sum(col("w")).as("__k"),
-            sum(when(col("dst") === col("src"), col("w")).otherwise(0L))
-              .as("__self"))
-          .agg(coalesce(sum(col("__self")), lit(0L)).as("__si2"),
-            coalesce(sum(col("__k").cast("decimal(38,0)") * col("__k")),
-              lit(0L).cast("decimal(38,0)")).as("__sk2"))
-          .select(lit(slice).as("__slice"), col("__si2").as("__a"),
-            lit(0L).as("__b"), lit(0L).as("__w"), col("__sk2"))
-      // Qnum per gate slice off the materialized rows: by the contraction
-      // invariant Σ_n (e2·w_nn − k_n²) of the SINGLETON partition of a
-      // contraction IS the numerator of the partition the graph was
-      // contracted by — community-sized, never corpus-sized
-      def readGates(combo: DataFrame): Map[Int, java.math.BigDecimal] =
+      // (Qnum, contraction row count) per gate slice off the materialized
+      // rows: by the contraction invariant Σ_n (e2·w_nn − k_n²) of the
+      // SINGLETON partition of a contraction IS the numerator of the
+      // partition the graph was contracted by — community-sized, never
+      // corpus-sized
+      def readGates(combo: DataFrame): Map[Int, (java.math.BigDecimal, Long)] =
         combo.where(col("__slice") >= 3)
-          .select(col("__slice"), col("__a"), col("__sk2")).collect()
+          .select(col("__slice"), col("__a"), col("__sk2"), col("__b")).collect()
           .map { r =>
-            r.getInt(0) -> new java.math.BigDecimal(e2)
+            r.getInt(0) -> (new java.math.BigDecimal(e2)
               .multiply(new java.math.BigDecimal(r.getLong(1)))
-              .subtract(r.getDecimal(2))
+              .subtract(r.getDecimal(2)), r.getLong(3))
           }.toMap
       // the contraction subtree is edge-sized — size its partitions from
       // the measured edge count like the sweeps
       var contracted = cut(contractGraph(edges, flat), rows = Some(e2))
       // materialize the contraction now (it materializes either way at
       // the level's first action) and take its ROW count — the exact
-      // partition-sizing input for everything the next level plans,
-      // which Σw can only bound from above
+      // partition-sizing input for everything level 2 plans, which Σw can
+      // only bound from above. Later levels read theirs off the gate row.
       var supRows = contracted.count()
       // level 1's own Qnum is DEFERRED into level 2's cut (slice 4, an
       // aggregate over the already-cut level-1 contraction) — probing it
@@ -753,13 +751,13 @@ object Graph {
               col("label").as("__next"))), Seq("label"))
             .select(lit(2).as("__slice"), col("node").as("__a"),
               col("__next").as("__b"), lit(0L).as("__w"), decZ.as("__sk2")))
-          .unionByName(gateRow(con, 3))
+          .unionByName(louvainGateRow(con, 3))
         val combined = cut(
-          if (level == 2) base.unionByName(gateRow(contracted, 4)) else base,
+          if (level == 2) base.unionByName(louvainGateRow(contracted, 4)) else base,
           rows = Some(supRows))
         val gates = readGates(combined)
-        if (level == 2) q = gates(4)
-        val qNext = gates(3)
+        if (level == 2) q = gates(4)._1
+        val (qNext, nextRows) = gates(3)
         // exact integer compare — the level survives only if it RAISES Q
         if (qNext.compareTo(q) > 0) {
           flat = combined.where(col("__slice") === 2)
@@ -768,15 +766,37 @@ object Graph {
           contracted = combined.where(col("__slice") === 1)
             .select(col("__a").as("src"), col("__b").as("dst"),
               col("__w").as("w"))
-          // next level's partition-sizing input — a slice count over the
-          // already-materialized combined frame
-          supRows = contracted.count()
+          // the next level's partition-sizing input, off the gate row
+          supRows = nextRows
           q = qNext
         } else stopped = true
       }
     }
     out.reduce(_ unionByName _)
   }
+
+  /** The convergence-gate row [[louvainLevels]] materializes inside each
+    * level's cut (as `__slice = slice`), aggregated from a contraction
+    * `(src, dst, w)`: `__a` = Σ self-loop w, `__sk2` = Σ k² in
+    * DECIMAL(38,0), and `__b` = the contraction's row count (summed from
+    * a per-src count) — the next level's partition-sizing input, so no
+    * separate count() job reads it. Materializing gate rows inside the
+    * level's cut makes every convergence probe a filter-collect over an
+    * already-computed RDD instead of a separately planned aggregate
+    * action (~1.5-2 s of plan+codegen+job each at sf0.1); the aggregated
+    * subtree executes once more inside the cut — community-sized, far
+    * cheaper. */
+  private[graft] def louvainGateRow(con: DataFrame, slice: Int): DataFrame =
+    con.groupBy(col("src"))
+      .agg(sum(col("w")).as("__k"),
+        sum(when(col("dst") === col("src"), col("w")).otherwise(0L)).as("__self"),
+        count(lit(1)).as("__n"))
+      .agg(coalesce(sum(col("__self")), lit(0L)).as("__si2"),
+        coalesce(sum(col("__k").cast("decimal(38,0)") * col("__k")),
+          lit(0L).cast("decimal(38,0)")).as("__sk2"),
+        coalesce(sum(col("__n")), lit(0L)).as("__rows"))
+      .select(lit(slice).as("__slice"), col("__si2").as("__a"),
+        col("__rows").as("__b"), lit(0L).as("__w"), col("__sk2"))
 
   /** The exact modularity numerator `Σ_c (e2·i2_c − dc_c²)` of a
     * partition over `edges`, in DECIMAL(38,0) — the scale-safe scalar
@@ -812,78 +832,6 @@ object Graph {
     new java.math.BigDecimal(e2)
       .multiply(new java.math.BigDecimal(row.getLong(0)))
       .subtract(row.getDecimal(1))
-  }
-
-  /**
-   * WEIGHTED synchronous Louvain local move over `(src, dst, w)` edges
-   * (self-loops allowed — they ride each node's weighted degree and
-   * Σtot but are excluded from the move candidates, since a node's
-   * internal edges move with it): the level-2 sweep run on
-   * [[contractGraph]]'s output, same exact-integer gain
-   * `Σw·e_{i→c} − k_i·(Σtot_c − [stay]·k_i)` and the same
-   * parity-alternating mover subsets as [[louvainMove]]. Each round's
-   * labels are lineage-cut at the `rows`-sized width.
-   */
-  def louvainMoveWeighted(wEdges: DataFrame, rounds: Int,
-      scoreDecimal: Boolean = false,
-      sumW: Option[Long] = None, rows: Option[Long] = None): DataFrame = {
-    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    import graft.recon.Checkpoints.cut
-    // one action for Σw (see [[louvainMove]] — a per-round broadcast
-    // aggregate is serial wall time under the eager broadcast chain);
-    // callers that KNOW Σw pass it via `sumW` and skip even that one job
-    // ([[louvainLevels]]: Σw is contraction-invariant, so the original
-    // edge count serves every level)
-    val e2n = sumW.getOrElse(
-      wEdges.agg(coalesce(sum(col("w")), lit(0L))).head().getLong(0))
-    val e2 = lit(e2n)
-    val score = sweepScore(e2, scoreDecimal || e2n > SweepScoreLongSafeE2) _
-    // partition sizing like [[louvainMove]]: callers that know the
-    // super-edge ROW count pass it via `rows` ([[louvainLevels]] counts
-    // each materialized contraction); otherwise Σw — an upper bound on
-    // the rows (integer weights ≥ 1) — is the free proxy
-    val sweepRows = rows.getOrElse(e2n)
-    val sweepParts = graft.recon.Checkpoints.parts(wEdges.sparkSession, sweepRows)
-    // round 1 specialized exactly like [[louvainMove]]: singleton labels
-    // ARE the weighted-degree frame (self-loops ride the degree and Σtot
-    // but can't be candidates — a singleton's neighbor labels are the
-    // neighbors themselves), so the init-labels cut disappears
-    val wd = wEdges.groupBy(col("src").as("node")).agg(sum(col("w")).as("__k"))
-    def movers(df: DataFrame, keyCol: String, r: Int) =
-      df.where(pmod(col(keyCol), lit(2)) === lit(r % 2))
-    // repartition(src) fuses the round's two aggregate exchanges into one
-    // (see [[louvainMove]])
-    val cand1 = movers(wEdges.where(col("src") =!= col("dst")), "src", 1)
-      .select(col("src"), col("dst").as("label"), col("w").as("__w"))
-      .unionByName(movers(wd, "node", 1).select(col("node").as("src"),
-        col("node").as("label"), lit(0L).as("__w")))
-      .repartition(sweepParts, col("src"))
-      .groupBy(col("src"), col("label")).agg(sum(col("__w")).as("__w"))
-    val scored1 = cand1
-      .join(broadcast(wd.select(col("node").as("src"), col("__k"))), Seq("src"))
-      .join(broadcast(wd.select(col("node").as("label"), col("__k").as("__tot"))),
-        Seq("label"))
-      .withColumn("__score", score(col("label") === col("src")))
-    var labels = cut(louvainPickApply(scored1,
-      wd.withColumn("label", col("node")), r = 1), rows = Some(sweepRows))
-    for (r <- 2 to rounds) {
-      val tot = labels.groupBy(col("label")).agg(sum(col("__k")).as("__tot"))
-      val cand = movers(wEdges.where(col("src") =!= col("dst")), "src", r)
-        .join(broadcast(labels.select(col("node").as("dst"), col("label"))), Seq("dst"))
-        .select(col("src"), col("label"), col("w").as("__w"))
-        .unionByName(movers(labels, "node", r).select(col("node").as("src"),
-          col("label"), lit(0L).as("__w")))
-        .repartition(sweepParts, col("src"))
-        .groupBy(col("src"), col("label")).agg(sum(col("__w")).as("__w"))
-      val cur = labels.select(col("node").as("src"), col("label").as("__cur"),
-        col("__k"))
-      val scored = cand
-        .join(broadcast(cur), Seq("src"))
-        .join(broadcast(tot), Seq("label"))
-        .withColumn("__score", score(col("label") === col("__cur")))
-      labels = cut(louvainPickApply(scored, labels, r), rows = Some(sweepRows))
-    }
-    labels.select(col("node"), col("label"))
   }
 
   /**

@@ -844,24 +844,16 @@ object Similarity {
     local(spark, cbRows, schema)
   }
 
-  /** [[pqEncode]] under L2 ([[l2Score]]) — the encoder that pairs with a
-    * TRAINED codebook: codes minimize reconstruction error instead of
-    * maximizing dot. Ties → lowest code, like [[pqEncode]]. ONE narrow
-    * pass with the per-subspace argmax as an array transform (the
-    * [[pqEncode]] shape) — the former (vector, subspace)-row explode +
-    * per-id reassembly aggregate paid a full corpus shuffle for values
-    * this per-row expression computes identically (guide §2.4: remove
-    * shuffles outright). */
-  def pqEncodeL2(df: DataFrame, idCol: String, vecCol: String, codebook: DataFrame,
-      m: Int, subDim: Int): DataFrame =
-    withCodesL2(df.select(col(idCol), col(vecCol)), vecCol, codebook, m, subDim)
-      .select(col(idCol), col("codes"))
-
-  /** Append a `codes` column ([[pqEncodeL2]] semantics — same argmax,
-    * same tie-break, bit-identical values) to `df` WITHOUT projecting
-    * its other columns away: lets the IVF-PQ builders fuse cell
-    * assignment and encoding into one narrow pass instead of re-joining
-    * two single-purpose frames on the id. */
+  /** Append a `codes` column — [[pqEncode]] under L2 ([[l2Score]]), the
+    * encoder that pairs with a TRAINED codebook: codes minimize
+    * reconstruction error instead of maximizing dot; ties → lowest code,
+    * like [[pqEncode]]. ONE narrow pass with the per-subspace argmax as an
+    * array transform (the [[pqEncode]] shape) — a (vector, subspace)-row
+    * explode + per-id reassembly aggregate would pay a full corpus shuffle
+    * for values this per-row expression computes identically (guide §2.4:
+    * remove shuffles outright). `df`'s other columns ride along, so the
+    * IVF-PQ builders fuse cell assignment and encoding into one narrow
+    * pass instead of re-joining two single-purpose frames on the id. */
   private[graft] def withCodesL2(df: DataFrame, vecCol: String,
       codebook: DataFrame, m: Int, subDim: Int): DataFrame =
     df.withColumn("__cb", codebookLit(codebook))

@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
  * Spark-first analog of the reference's Reconciliator
  * (reference: src/reconciliatior.py) with one deliberate semantic upgrade:
  * every order-dependent Polars `unique(keep=first/last, maintain_order=True)`
- * becomes an explicit `row_number()` window over a named order column, because
- * Spark has no implicit row order (SURVEY §4, §7.3-1).
+ * becomes an explicit pick over a named order column ([[Reconciler.keepFirstBy]],
+ * and the first/last aggregate in [[reconcilePass]]), because Spark has no
+ * implicit row order (SURVEY §4, §7.3-1).
  *
  * Contract: the internal ("a") and external ("b") DataFrames carry disjoint
  * column names (external columns are `ext_`-prefixed at source prep,
@@ -18,6 +19,7 @@ import org.apache.spark.sql.functions._
  * key coalescing happens.
  */
 final class Reconciler(val conf: ReconConfig) extends Serializable {
+  import Reconciler.keepFirstBy
 
   /** Multi-key equi-join condition between the two sides
     * (reference: src/reconciliatior.py:66-74). Null keys never match. */
@@ -59,34 +61,6 @@ final class Reconciler(val conf: ReconConfig) extends Serializable {
       .where(col("__dup_count") > 1)
       .drop("__dup_count")
     df.join(dupKeys, keys, "left_semi")
-  }
-
-  /** Keep the first row per key by explicit order (A3 keep="first",
-    * reference: src/reconciliatior.py:24-26 — but order is explicit here).
-    *
-    * Implemented as a `min_by(wholeRow, orderTuple)` hash aggregation, not
-    * a `row_number()` window: the aggregate gets map-side partial merge
-    * (shuffle carries one candidate row per key per partition) and no
-    * per-key sort — the window form shuffles and sorts every row. Order
-    * columns must be non-null and should form a total order per key for
-    * determinism (same requirement the window form has).
-    */
-  def keepFirstBy(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame =
-    keepExtreme(df, keys, order, first = true)
-
-  /** Keep the last row per key by explicit order (A3 keep="last"). */
-  def keepLastBy(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame =
-    keepExtreme(df, keys, order, first = false)
-
-  private def keepExtreme(df: DataFrame, keys: Seq[String], order: Seq[Column], first: Boolean): DataFrame = {
-    val others = df.columns.filterNot(keys.contains)
-    val row = struct(others.map(col).toIndexedSeq: _*)
-    val ord = struct(order: _*)
-    val picked = if (first) min_by(row, ord) else max_by(row, ord)
-    df.groupBy(keys.map(col): _*)
-      .agg(picked.as("__row"))
-      .select(keys.map(col) ++ others.map(c => col(s"__row.$c").as(c)): _*)
-      .select(df.columns.map(col).toIndexedSeq: _*)
   }
 
   /**
@@ -314,6 +288,29 @@ final class Reconciler(val conf: ReconConfig) extends Serializable {
       bCur = if (last) r.externalRemanent else cut(r.externalRemanent)
     }
     ReconResult(acc.get, aCur, bCur)
+  }
+}
+
+object Reconciler {
+
+  /** Keep the first row per key by explicit order — the engine's one keyed
+    * keep-first (A3 keep="first", reference `unique(keep="first",
+    * maintain_order=True)` at src/reconciliatior.py:24-26 and
+    * src/data_extractor.py:85-93 — but order is explicit here).
+    *
+    * Implemented as a `min_by(wholeRow, orderTuple)` hash aggregation, not
+    * a `row_number()` window: the aggregate gets map-side partial merge
+    * (shuffle carries one candidate row per key per partition) and no
+    * per-key sort — the window form shuffles and sorts every row. Order
+    * columns must be non-null and should form a total order per key for
+    * determinism (same requirement the window form has).
+    */
+  def keepFirstBy(df: DataFrame, keys: Seq[String], order: Seq[Column]): DataFrame = {
+    val others = df.columns.filterNot(keys.contains)
+    df.groupBy(keys.map(col): _*)
+      .agg(min_by(struct(others.map(col).toIndexedSeq: _*), struct(order: _*)).as("__row"))
+      .select(keys.map(col) ++ others.map(c => col(s"__row.$c").as(c)): _*)
+      .select(df.columns.map(col).toIndexedSeq: _*)
   }
 }
 

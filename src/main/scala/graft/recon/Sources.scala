@@ -225,17 +225,13 @@ object Sources {
     transactions.join(remanents.select(idField).distinct(), Seq(idField), "left_semi")
 
   /** Vertical concat of current + remanent inputs, deduped by id keeping the
-    * *current* row on conflict (U1+A3, reference: src/data_extractor.py:85-93).
-    * `preferenceRank`: lower wins (0 = current batch, 1 = remanent). */
+    * *current* row on conflict (U1+A3, reference: src/data_extractor.py:85-93):
+    * [[Reconciler.keepFirstBy]] per id over a preference tag, lower wins
+    * (0 = current batch, 1 = remanent). */
   def concatPreferFirst(current: DataFrame, remanent: DataFrame, idField: String): DataFrame = {
     val tagged = current.withColumn("__pref", lit(0))
       .unionByName(remanent.withColumn("__pref", lit(1)))
-    // min_by aggregation over the preference tag: map-side partial combine,
-    // no per-key sort (same shape as Reconciler.keepFirstBy)
-    val others = tagged.columns.filterNot(c => c == idField || c == "__pref")
-    tagged.groupBy(col(idField))
-      .agg(min_by(struct(others.map(col).toIndexedSeq: _*), col("__pref")).as("__row"))
-      .select((col(idField) +: others.map(c => col(s"__row.$c").as(c))).toIndexedSeq: _*)
+    Reconciler.keepFirstBy(tagged, Seq(idField), Seq(col("__pref")))
       .select(current.columns.map(col).toIndexedSeq: _*)
   }
 }

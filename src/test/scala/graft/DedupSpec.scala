@@ -378,10 +378,10 @@ class DedupSpec extends SparkSuite {
     assert(math.abs(en - 1200) < 200)           // ~80% of 1500
   }
 
-  test("keyedKeepFirst keeps min-order row per key") {
+  test("Reconciler.keepFirstBy keeps the min-order row per composite key") {
     val df = Seq(("en", "s1", 5L), ("en", "s1", 3L), ("fr", "s1", 9L))
       .toDF("lang", "source", "doc_id")
-    assert(Dedup.keyedKeepFirst(df, Seq("lang", "source"), Seq(col("doc_id")))
+    assert(graft.recon.Reconciler.keepFirstBy(df, Seq("lang", "source"), Seq(col("doc_id")))
       .select("doc_id").as[Long].collect().toSet == Set(3L, 9L))
   }
 

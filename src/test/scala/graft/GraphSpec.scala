@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.functions.{col, posexplode}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit, posexplode}
 import graft.ops.Graph
 
 class GraphSpec extends SparkSuite {
@@ -253,23 +254,78 @@ class GraphSpec extends SparkSuite {
       Graph.louvainMoveWeighted(wE, rounds = 0))
   }
 
+  test("sweepScore: Long and DECIMAL(38,0) scores agree on small values; decimal stays exact past Long") {
+    // past SweepScoreLongSafeE2 the sweep scores in decimal so e2·w and
+    // k·Σtot can't overflow a Long; below it both forms give the same bits
+    def scores(df: DataFrame, e2: Long, dec: Boolean): Seq[java.math.BigDecimal] =
+      df.select(Graph.sweepScore(lit(e2), dec)(col("stay")).cast("decimal(38,0)"))
+        .as[java.math.BigDecimal].collect().toSeq
+    // hand scores at e2 = 14: 14·3 − 2·7 = 28; 14·0 − 3·(9 − 3) = −18;
+    // 14·5 − 4·(4 − 4) = 70
+    val small = Seq((3L, 2L, 7L, false), (0L, 3L, 9L, true), (5L, 4L, 4L, true))
+      .toDF("__w", "__k", "__tot", "stay")
+    val want = Seq(28L, -18L, 70L).map(java.math.BigDecimal.valueOf)
+    assert(scores(small, 14L, dec = false) == want)
+    assert(scores(small, 14L, dec = true) == want)
+    // e2 = 4·10⁹, w = 3·10⁹: e2·w = 1.2·10¹⁹ > 2^63 − 1
+    val big = Seq((3000000000L, 1L, 1L, false)).toDF("__w", "__k", "__tot", "stay")
+    val exact = new java.math.BigDecimal("11999999999999999999")
+    assert(scores(big, 4000000000L, dec = true) == Seq(exact))
+    // the Long score cannot carry it: ANSI arithmetic raises, non-ANSI wraps
+    val asLong = scala.util.Try(scores(big, 4000000000L, dec = false))
+    if (spark.conf.get("spark.sql.ansi.enabled").toBoolean) assert(asLong.isFailure)
+    else assert(asLong.get != Seq(exact))
+  }
+
   test("louvain DECIMAL(38,0) score path (the >2·10⁹-Σw auto-upgrade) picks identically") {
-    // past SweepScoreLongSafeE2 the sweeps score in decimal so k·Σtot
-    // can't wrap a Long; forcing that path on a small graph must leave
-    // every move decision bit-identical to the Long path
+    // scaling every weight by c scales every score by c², so each move
+    // decision is scale-free; at c = 10⁹ Σw passes SweepScoreLongSafeE2,
+    // the sweep scores in decimal (e2·w = 1.4·10¹⁹ would overflow a Long),
+    // and it must pick exactly what the Long-scored unscaled sweep picks
+    val c = 1000000000L
     val und = Seq((1L, 2L), (2L, 3L), (1L, 3L), (4L, 5L), (5L, 6L), (4L, 6L), (3L, 4L))
     val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
+    assert(14L * c > Graph.SweepScoreLongSafeE2)
     val longPath = Graph.louvainMove(edges, rounds = 3).as[(Long, Long)].collect().toMap
-    val decPath = Graph.louvainMove(edges, rounds = 3, scoreDecimal = true)
+    val decPath = Graph.louvainMoveWeighted(edges.withColumn("w", lit(c)), rounds = 3)
       .as[(Long, Long)].collect().toMap
     assert(decPath == longPath)
     val wE = Seq((3L, 3L, 2L), (6L, 6L, 2L), (3L, 6L, 5L), (6L, 3L, 5L))
       .toDF("src", "dst", "w")
     val wLong = Graph.louvainMoveWeighted(wE, rounds = 2)
       .as[(Long, Long)].collect().toMap
-    val wDec = Graph.louvainMoveWeighted(wE, rounds = 2,
-      scoreDecimal = true).as[(Long, Long)].collect().toMap
+    val wDec = Graph.louvainMoveWeighted(wE.withColumn("w", col("w") * lit(c)),
+      rounds = 2).as[(Long, Long)].collect().toMap
     assert(wDec == wLong)
+  }
+
+  test("louvainMove ≡ louvainMoveWeighted on unit weights; a self-loop is never a stay candidate") {
+    // (1,1),(1,2),(2,1): e2 = 3, k1 = 2 (the self-loop rides the degree),
+    // k2 = 1. Round 1 moves odd node 1: neighbor 2 scores 3·1 − 2·1 = 1,
+    // stay scores 3·0 − 2·(2 − 2) = 0, so 1 joins 2 and Qnum rises −2 → 0
+    val edges = Seq((1L, 1L), (1L, 2L), (2L, 1L)).toDF("src", "dst")
+    val unweighted = Graph.louvainMove(edges, rounds = 1).as[(Long, Long)].collect().toMap
+    val weighted = Graph.louvainMoveWeighted(edges.withColumn("w", lit(1L)), rounds = 1)
+      .as[(Long, Long)].collect().toMap
+    assert(unweighted == Map(1L -> 2L, 2L -> 2L))
+    assert(weighted == unweighted)
+    def qnum(labels: Map[Long, Long]): Long =
+      Graph.modularityNumExact(edges, labels.toSeq.toDF("node", "label")).longValueExact
+    assert(qnum(Map(1L -> 1L, 2L -> 2L)) == -2L)
+    assert(qnum(unweighted) == 0L)
+  }
+
+  test("louvainGateRow: the gate row's row count equals the contraction's count()") {
+    val und = Seq((1L, 2L), (2L, 3L), (1L, 3L), (4L, 5L), (5L, 6L), (4L, 6L), (3L, 4L))
+    val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
+    val con = Graph.contractGraph(edges, Graph.louvainMove(edges, rounds = 3))
+    val g = Graph.louvainGateRow(con, 3).select("__slice", "__a", "__b", "__sk2").head()
+    assert(g.getInt(0) == 3)
+    assert(g.getLong(1) == 12L) // Σ self-loop w: 6 + 6
+    assert(g.getLong(2) == con.count()) // the count louvainLevels no longer runs
+    assert(g.getDecimal(3).longValueExact == 98L) // Σ k²: 7² + 7²
+    val empty = Graph.louvainGateRow(con.where(lit(false)), 3).select("__a", "__b").head()
+    assert(empty.getLong(0) == 0L && empty.getLong(1) == 0L)
   }
 
   test("louvainLevels: exact-Q gate terminates before maxLevels on a converged hierarchy") {

@@ -64,7 +64,7 @@ class ReconPropertySpec extends SparkSuite {
     val gen = Gen.listOfN(60, Gen.zip(Gen.oneOf("k1", "k2", "k3"), Gen.chooseNum(0, 1000)))
     forSeeds(gen, 5) { rows =>
       val df = rows.zipWithIndex.map { case ((k, v), i) => (k, v, i) }.toDF("key", "v", "uniq")
-      val out = recon.keepFirstBy(df, Seq("key"), Seq(col("v"), col("uniq")))
+      val out = Reconciler.keepFirstBy(df, Seq("key"), Seq(col("v"), col("uniq")))
       val got = out.select("key", "v").as[(String, Int)].collect().toMap
       val want = rows.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).min }
       assert(got == want)

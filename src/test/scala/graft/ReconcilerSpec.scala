@@ -66,13 +66,11 @@ class ReconcilerSpec extends SparkSuite {
     assert(reduced.select("_id").as[String].collect().toSet == Set("a2", "a3"))
   }
 
-  test("keepFirstBy / keepLastBy honor the explicit order") {
+  test("keepFirstBy honors the explicit order") {
     val df = Seq(("k", 1, "first"), ("k", 2, "mid"), ("k", 3, "last"))
       .toDF("key", "ord", "tag")
-    assert(recon.keepFirstBy(df, Seq("key"), Seq(col("ord")))
+    assert(Reconciler.keepFirstBy(df, Seq("key"), Seq(col("ord")))
       .select("tag").as[String].collect().toSeq == Seq("first"))
-    assert(recon.keepLastBy(df, Seq("key"), Seq(col("ord")))
-      .select("tag").as[String].collect().toSeq == Seq("last"))
   }
 
   test("duplicated keeps only rows whose key repeats") {
@@ -153,7 +151,7 @@ class ReconcilerSpec extends SparkSuite {
     assert(recon.toleranceMatch(emptyA, emptyB, conf.tolerance.get, col("ext_row")).isEmpty)
     val res = recon.iterate(emptyA, emptyB, col("ext_row"), Seq(conf))
     assert(res.matched.isEmpty && res.internalRemanent.isEmpty && res.externalRemanent.isEmpty)
-    assert(recon.keepFirstBy(emptyA, Seq("_id"), Seq(col("amount"))).isEmpty)
+    assert(Reconciler.keepFirstBy(emptyA, Seq("_id"), Seq(col("amount"))).isEmpty)
     assert(recon.duplicated(emptyA, Seq("_id")).isEmpty)
   }
 
