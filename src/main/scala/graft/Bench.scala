@@ -38,7 +38,6 @@ object Bench {
     // in milliseconds, not after the whole sitting has run
     val loadGate = sys.env.getOrElse("SPARK_GRAFT_BENCH_LOAD_GATE", "4.0").toDouble
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json")
-    val baseline = baselineMedians(sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE", "BENCH_DETAIL.json"))
     val spark = LocalSession.fromEnv(4)
     // optional comma-separated allowlist for profiling single queries —
     // trimmed, and unknown names fail loudly (a typo must not silently
@@ -50,6 +49,13 @@ object Bench {
       require(unknown.isEmpty,
         s"SPARK_GRAFT_BENCH_ONLY names not in the registry: ${unknown.mkString(", ")}")
     }
+    // a partial run is a paired A/B side: flagging against the committed
+    // full-run baseline (another host, another core count) would top up a
+    // different set of queries on each side, so both sides keep one rep
+    // count per query instead
+    val baseline =
+      if (only.isDefined) Map.empty[String, Double]
+      else baselineMedians(sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE", "BENCH_DETAIL.json"))
     graft.tools.Warmup.warmJvm(spark)
     // host 1-min load average at a rep's start — the shared-box noise
     // signal the LOAD WATCHDOG below keys on (this host's load swings

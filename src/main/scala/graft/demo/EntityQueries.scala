@@ -1188,19 +1188,22 @@ object EntityQueries {
     }) { (s, d) =>
       val dd = docs(s, d)
       // ONE consumption of each (expensive) pair pipeline: a full outer
-      // join on the unique pair key carries both membership flags, so all
-      // three counts fall out of one aggregate — the previous three-agg
+      // join on the pair key carries both membership flags, so all three
+      // counts fall out of one aggregate — the previous three-agg
       // crossJoin form consumed each side twice and needed a lineage cut
       // per side (2 extra plan+codegen charges and a second execution of
       // both sketch pipelines' tails; guide §1.2 step 1: don't compute
-      // things twice)
-      val ex = graft.ops.SetSimilarity
-        .jaccardPrefixJoin(dd, "text", "doc_id", shingleN = 3, tMilli = 800)
-        .select(col("id_a"), col("id_b"), lit(1L).as("__ex"))
-      val ls = graft.ops.Dedup
+      // things twice). Each side is reduced to one row per pair first: a
+      // duplicate pair on one side would otherwise inflate the OTHER
+      // side's count through the join
+      def flagged(pairs: DataFrame, flag: String): DataFrame =
+        pairs.groupBy(col("id_a"), col("id_b")).agg(max(lit(1L)).as(flag))
+      val ex = flagged(graft.ops.SetSimilarity
+        .jaccardPrefixJoin(dd, "text", "doc_id", shingleN = 3, tMilli = 800), "__ex")
+      val ls = flagged(graft.ops.Dedup
         .minHashNearDups(dd, "text", "doc_id", shingleN = 3, k = 16, bands = 4,
           threshold = 0.8d, maxBucket = 100)
-        .select(col("doc1").as("id_a"), col("doc2").as("id_b"), lit(1L).as("__ls"))
+        .select(col("doc1").as("id_a"), col("doc2").as("id_b")), "__ls")
       ex.join(ls, Seq("id_a", "id_b"), "full_outer")
         .agg(coalesce(sum(col("__ex")), lit(0L)).as("n_exact"),
           coalesce(sum(col("__ls")), lit(0L)).as("n_lsh"),

@@ -979,20 +979,6 @@ object Graph {
   }
 
   /**
-   * Integer PageRank: `iters` damped rounds over a distinct edge list.
-   * Every node starts at 1,000,000 micro-units; per round each node
-   * sends `rank div out_degree` along each out-edge and folds to
-   * `(1000 − dampMilli)·1000 + (dampMilli · Σ in) div 1000`. Nodes are
-   * the sources of `edges` (on a symmetric graph: every connected
-   * node). Output: `(node, rank_micro)`.
-   *
-   * Dangling mass: a node with no out-edges is not a source row, so its
-   * rank leaks — pass a symmetric edge list (e.g.
-   * [[coOccurrenceEdges]]) or pre-add sink back-edges if leakage
-   * matters; the ranking semantics here follow the common
-   * drop-dangling simplification.
-   */
-  /**
    * Personalized PageRank: same integer damped iteration as
    * [[pageRank]], but ALL teleport mass returns to the seed set
    * instead of spreading uniformly — rank becomes "influence relative
@@ -1034,41 +1020,57 @@ object Graph {
         coalesce(col("__isSeed"), lit(0L)).as("__isSeed"),
         overS(s"$teleBase * 1000 * __N").as("__teleSeed"),
         overS("1000000 * __N").as("__initSeed"))
-    var ranks = nodes.select(col("node"),
-      (col("__isSeed") * col("__initSeed")).as("rank_micro"))
-    for (_ <- 1 to iters) {
-      val in = withDeg
-        .join(ranks, withDeg("src") === ranks("node"))
-        .select(col("dst"), expr("rank_micro div __deg").as("__c"))
-        .groupBy("dst").agg(sum(col("__c")).as("__in"))
-      ranks = nodes
-        .join(in, col("node") === col("dst"), "left")
-        .select(col("node"),
-          (col("__isSeed") * col("__teleSeed") +
-            expr(s"($dampMilli * coalesce(__in, 0L)) div 1000")).as("rank_micro"))
-    }
-    ranks
+    dampedRounds(withDeg, nodes, col("__isSeed") * col("__teleSeed"),
+      col("__isSeed") * col("__initSeed"), iters, dampMilli)
   }
 
+  /**
+   * Integer PageRank: `iters` damped rounds over a distinct edge list.
+   * Every node starts at 1,000,000 micro-units; per round each node
+   * sends `rank div out_degree` along each out-edge and folds to
+   * `(1000 − dampMilli)·1000 + (dampMilli · Σ in) div 1000`. Nodes are
+   * the sources of `edges` (on a symmetric graph: every connected
+   * node). Output: `(node, rank_micro)`.
+   *
+   * Dangling mass: a node with no out-edges is not a source row, so its
+   * rank leaks — pass a symmetric edge list (e.g.
+   * [[coOccurrenceEdges]]) or pre-add sink back-edges if leakage
+   * matters; the ranking semantics here follow the common
+   * drop-dangling simplification.
+   *
+   * This is [[personalizedPageRank]] with every node seeded: with
+   * |S| = N its seed mass `(1000 − dampMilli)·1000·N div N` and
+   * `10⁶·N div N` are exact, so both run [[dampedRounds]] on the same
+   * values.
+   */
   def pageRank(edges: DataFrame, iters: Int = 3, dampMilli: Int = 850): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(dampMilli >= 0 && dampMilli <= 1000, s"dampMilli out of range: $dampMilli")
-    val base = (1000L - dampMilli) * 1000L
     val deg = edges.groupBy("src").agg(count(lit(1)).as("__deg"))
-    // edge list annotated with out-degree once; reused by every round
-    val withDeg = edges.join(deg, Seq("src"))
-    var ranks = deg.select(col("src").as("node"), lit(1000000L).as("rank_micro"))
+    dampedRounds(edges.join(deg, Seq("src")), deg.select(col("src").as("node")),
+      lit((1000L - dampMilli) * 1000L), lit(1000000L), iters, dampMilli)
+  }
+
+  /** The damped round loop both PageRanks run, `iters` rounds unrolled
+    * into one plan: each round pushes `rank_micro div __deg` along every
+    * edge of `withDeg` (the edge list annotated with out-degrees), sums
+    * the inflow per node and sets `rank = tele + (dampMilli·in) div
+    * 1000`. `tele` and `init` are each node's teleport and initial mass,
+    * as columns over `nodes` (one row per node, column `node`). */
+  private def dampedRounds(withDeg: DataFrame, nodes: DataFrame, tele: Column,
+      init: Column, iters: Int, dampMilli: Int): DataFrame = {
+    var ranks = nodes.select(col("node"), init.as("rank_micro"))
     for (_ <- 1 to iters) {
       val in = withDeg
         .join(ranks, withDeg("src") === ranks("node"))
         // div, not /: long division through doubles can land one ulp
         // under the true quotient and truncate a full unit
         .select(col("dst"), expr("rank_micro div __deg").as("__c"))
-        .groupBy("dst").agg(sum("__c").as("__in"))
-      ranks = deg.select(col("src").as("node"))
+        .groupBy("dst").agg(sum(col("__c")).as("__in"))
+      ranks = nodes
         .join(in, col("node") === col("dst"), "left")
         .select(col("node"),
-          (lit(base) + expr(s"($dampMilli * coalesce(__in, 0L)) div 1000")).as("rank_micro"))
+          (tele + expr(s"($dampMilli * coalesce(__in, 0L)) div 1000")).as("rank_micro"))
     }
     ranks
   }

@@ -90,8 +90,7 @@ object History {
    * bias per step, identical in both engines). The cumulative product
    * folds over ONE collected (bucket, q) array — bounded by the bucket
    * count (a curve with millions of steps is a plotting smell, not an
-   * engine limit), the same bounded-collect contract as
-   * [[Packing.packGlobal]].
+   * engine limit).
    *
    * Output: (w, n_at_risk, d, c, q_milli, s_milli), one row per
    * occupied bucket; `n_at_risk ≥ d + c ≥ 1` so the division is safe.

@@ -115,7 +115,7 @@ object IndexStore {
     writeMeta(spark, dir, "minhash", Map(
       "shingle_n" -> shingleN.toString, "k" -> k.toString, "bands" -> bands.toString,
       "hash" -> hashName(hash)))
-    refreshMinHashStats(spark, dir)
+    refreshMinHashStats(spark, dir, MinHashMeta(shingleN, k, bands, hash))
   }
 
   def loadMinHashMeta(spark: SparkSession, dir: String): MinHashMeta = {
@@ -148,22 +148,13 @@ object IndexStore {
   }
 
   /** Merge an accepted batch into the index: append its signatures
-    * (history files untouched) and refresh the stats sidecar. */
-  def mergeIntoMinHashIndex(batch: DataFrame, textCol: String, idCol: String,
-      dir: String): Unit = {
-    val spark = batch.sparkSession
-    val meta = loadMinHashMeta(spark, dir)
-    Dedup.minHashSignatures(batch, textCol, idCol, meta.shingleN, meta.k, meta.hash)
-      .write.mode("append").parquet(s"$dir/signatures")
-    refreshMinHashStats(spark, dir)
-  }
-
-  /** [[mergeIntoMinHashIndex]] made IDEMPOTENT for crash replays: only
-    * signatures whose doc id is NOT already indexed are appended (an
-    * anti-join against the signature table — the same membership
-    * discipline as the [[Ingest]] ledger), so a batch re-merged after a
-    * crash between merge and commit is a no-op instead of a
-    * double-append that would inflate bucket counts past `maxBucket`.
+    * (history files untouched) and refresh the stats sidecar. IDEMPOTENT
+    * for crash replays: only signatures whose doc id is NOT already
+    * indexed are appended (an anti-join against the signature table —
+    * the same membership discipline as the [[Ingest]] ledger), so a
+    * batch re-merged after a crash between merge and commit is a no-op
+    * instead of a double-append that would inflate bucket counts past
+    * `maxBucket`.
     * Returns the number of docs actually appended. Single-writer
     * contract, like every other merge here. */
   def mergeIntoMinHashIndexIdempotent(batch: DataFrame, textCol: String,
@@ -178,18 +169,14 @@ object IndexStore {
     val n = fresh.count()
     if (n > 0) {
       fresh.write.mode("append").parquet(s"$dir/signatures")
-      refreshMinHashStatsWith(spark, dir, meta)
+      refreshMinHashStats(spark, dir, meta)
     }
     n
   }
 
-  private def refreshMinHashStats(spark: SparkSession, dir: String): Unit =
-    refreshMinHashStatsWith(spark, dir, loadMinHashMeta(spark, dir))
-
-  /** [[refreshMinHashStats]] with the meta already in hand — the merge
-    * paths read it anyway, so the sidecar refresh re-reading the meta
-    * parquet was a repeat listing + head job per merge. */
-  private def refreshMinHashStatsWith(spark: SparkSession, dir: String,
+  /** Rewrite the stats sidecar from the signatures; the caller passes
+    * the meta it already holds, so no meta re-read per write or merge. */
+  private def refreshMinHashStats(spark: SparkSession, dir: String,
       meta: MinHashMeta): Unit = {
     replaceDir(
       Dedup.bandedSignatures(loadMinHashSignatures(spark, dir), meta.k, meta.bands,
@@ -318,42 +305,21 @@ object IndexStore {
       loadIvfPqCentroids(spark, dir), loadIvfPqCodebook(spark, dir), nprobe)
   }
 
-  /** Merge a new vector batch: assign cells and encode with the EXISTING
-    * centroids/codebooks (training is a build-time decision — daily
-    * ingest never retrains; re-train and rebuild when drift warrants it,
-    * the standard IVF-PQ operating posture) and append the coded rows.
-    * History code files are immutable, like the minhash signatures. */
-  def mergeIntoIvfPqIndex(batch: DataFrame, dir: String): Unit =
-    mergeIntoIvfPqIndexWith(batch, dir, loadIvfPqMeta(batch.sparkSession, dir))
-
-  /** [[mergeIntoIvfPqIndex]] with the meta already in hand — the
-    * idempotent wrapper reads it for its own anti-join, so re-reading
-    * the meta parquet (listing + footer + head job) per merge was a pure
-    * repeat action (guide §6: fewer, larger actions). */
-  private def mergeIntoIvfPqIndexWith(batch: DataFrame, dir: String,
-      meta: IvfPqMeta): Unit = {
-    val spark = batch.sparkSession
-    val cents = loadIvfPqCentroids(spark, dir)
-    val cb = loadIvfPqCodebook(spark, dir)
-    // fused assign+encode pass, like [[writeIvfPqIndex]]
-    Similarity.withCodesL2(
-        Similarity.ivfIndexWith(batch, meta.idCol, meta.vecCol, cents),
-        meta.vecCol, cb, meta.m, meta.subDim)
-      .select(col(meta.idCol), col("codes"), col("centroid_id"))
-      .write.mode("append").parquet(s"$dir/codes")
-  }
-
-  /** [[mergeIntoIvfPqIndex]] made IDEMPOTENT for crash replays — the
-    * same exactly-once discipline as [[mergeIntoMinHashIndexIdempotent]]
-    * and the [[Ingest]] ledger: only batch ids NOT already in the coded
-    * corpus are encoded and appended (encoding still uses the FROZEN
-    * centroids/codebook — daily ingest never retrains), so a batch
-    * re-merged after a crash between merge and commit is a no-op instead
-    * of a double-append that would return duplicate neighbors from every
-    * probe of the touched cells. The fresh slice is pinned EAGERLY
-    * before the append so the anti-join can't read the directory it is
-    * writing. Returns the number of vectors actually appended.
-    * Single-writer contract, like every other merge here. */
+  /** Merge a new vector batch into the index: assign cells and encode
+    * with the EXISTING centroids/codebooks (training is a build-time
+    * decision — daily ingest never retrains; re-train and rebuild when
+    * drift warrants it, the standard IVF-PQ operating posture) and append
+    * the coded rows; history code files are immutable, like the minhash
+    * signatures. IDEMPOTENT for crash replays — the same exactly-once
+    * discipline as [[mergeIntoMinHashIndexIdempotent]] and the [[Ingest]]
+    * ledger: only batch ids NOT already in the coded corpus are encoded
+    * and appended, so a batch re-merged after a crash between merge and
+    * commit is a no-op instead of a double-append that would return
+    * duplicate neighbors from every probe of the touched cells. The
+    * fresh slice is pinned EAGERLY before the append so the anti-join
+    * can't read the directory it is writing. Returns the number of
+    * vectors actually appended. Single-writer contract, like every other
+    * merge here. */
   def mergeIntoIvfPqIndexIdempotent(batch: DataFrame, dir: String): Long = {
     val spark = batch.sparkSession
     val meta = loadIvfPqMeta(spark, dir)
@@ -362,7 +328,14 @@ object IndexStore {
         Seq(meta.idCol), "left_anti"),
       eager = true)
     val n = fresh.count()
-    if (n > 0) mergeIntoIvfPqIndexWith(fresh, dir, meta)
+    // fused assign+encode pass, like [[writeIvfPqIndex]]
+    if (n > 0)
+      Similarity.withCodesL2(
+          Similarity.ivfIndexWith(fresh, meta.idCol, meta.vecCol,
+            loadIvfPqCentroids(spark, dir)),
+          meta.vecCol, loadIvfPqCodebook(spark, dir), meta.m, meta.subDim)
+        .select(col(meta.idCol), col("codes"), col("centroid_id"))
+        .write.mode("append").parquet(s"$dir/codes")
     n
   }
 

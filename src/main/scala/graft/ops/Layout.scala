@@ -198,13 +198,11 @@ object Layout {
    * prefix-sum — no first-fit-decreasing state that would serialize
    * planning at scale.
    *
-   * The prefix sum is distributed via the partition-offset scheme of
-   * [[graft.recon.Sources.withRowIndex]]: range-repartition on the
-   * order keys, per-partition running sums, per-partition TOTALS
-   * (a partition-count-sized aggregate) window-folded into offsets and
-   * broadcast back. No whole-input single-task funnel — the inventory
-   * may itself be huge (a 100 TB table is ~200k files, but a multi-PB
-   * lake's manifest union is not driver-sized).
+   * The prefix sum is the engine's distributed one
+   * ([[graft.recon.Sources.withRunningSumRanged]]): no whole-input
+   * single-task funnel — the inventory may itself be huge (a 100 TB
+   * table is ~200k files, but a multi-PB lake's manifest union is not
+   * driver-sized). A unit with a null size adds 0 bytes.
    *
    * Output: the input columns plus `bin` (long). `orderCols` must
    * totally order the units.
@@ -212,31 +210,11 @@ object Layout {
   def compactionPlan(units: DataFrame, orderCols: Seq[Column], bytesCol: String,
       targetBytes: Long): DataFrame = {
     require(targetBytes >= 1L, s"targetBytes must be >= 1: $targetBytes")
-    import org.apache.spark.sql.expressions.Window
-    val spark = units.sparkSession
-    val n = spark.sparkContext.defaultParallelism
-    // pin ONE materialization: the totals branch and the stamping branch
-    // must observe the same range partitioning (a re-executed range
-    // exchange re-samples its boundaries — same hazard withRowIndex pins)
-    val pinned = graft.recon.Checkpoints.cut(
-      units.repartitionByRange(n, orderCols: _*).sortWithinPartitions(orderCols: _*))
-      .withColumn("__cp_pid", spark_partition_id().cast("long"))
-    val totals = pinned.groupBy(col("__cp_pid"))
-      .agg(sum(col(bytesCol)).as("__cp_sum"))
-    // window over per-PARTITION totals: bounded by partition count,
-    // not row count (PlanAudit's partition-id-grouped allowed shape)
-    val offW = Window.orderBy(col("__cp_pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = totals
-      .withColumn("__cp_off", coalesce(sum(col("__cp_sum")).over(offW), lit(0L)))
-      .select(col("__cp_pid"), col("__cp_off"))
-    val localW = Window.partitionBy(col("__cp_pid")).orderBy(orderCols: _*)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    pinned.join(broadcast(offsets), Seq("__cp_pid"))
-      .withColumn("__cp_before",
-        col("__cp_off") + coalesce(sum(col(bytesCol)).over(localW), lit(0L)))
-      .withColumn("bin", expr(s"__cp_before div ${targetBytes}L"))
-      .select((units.columns.map(col) :+ col("bin")).toIndexedSeq: _*)
+    graft.recon.Sources.withRunningSumRanged(units, "__cp_cum",
+        coalesce(col(bytesCol), lit(0L)), orderCols)
+      .withColumn("bin",
+        expr(s"(__cp_cum - coalesce(`$bytesCol`, 0L)) div ${targetBytes}L"))
+      .drop("__cp_cum")
   }
 
   /**

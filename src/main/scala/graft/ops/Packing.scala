@@ -1,8 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, Column}
+import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.LongType
 
 /**
  * Sequence packing for LLM pre-training: documents ordered by a
@@ -16,10 +16,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
  *    the natural form when packing is already group-local. Parallelism is
  *    bounded by group cardinality; a single giant group funnels through one
  *    task, so for a global order use the second form.
- *  - [[packGlobal]]: two-phase distributed prefix sum (per-partition totals
- *    → driver scan of #partitions numbers → broadcast offsets), the
- *    zipWithIndex scheme of [[graft.recon.Sources.withRowIndex]] carrying a
- *    weight instead of a count. No single-partition stage at any point.
+ *  - [[packGlobal]]: the same rule over one global order, through the
+ *    engine's distributed prefix sum
+ *    ([[graft.recon.Sources.withRunningSumRanged]]). No single-partition
+ *    stage at any point.
  *
  * The reference has no packing surface — LLM-pipeline extension.
  */
@@ -43,47 +43,22 @@ object Packing {
   }
 
   /**
-   * Globally-ordered packing with no single-partition stage:
-   * range-repartition + in-partition sort by `orderCols`, per-partition
-   * weight totals collected (#partitions longs — driver-side scan is O(P),
-   * not O(rows)), offsets broadcast, then each partition stamps pack ids
-   * from its own running sum. Requires `weightCol` to be LongType and
-   * non-negative.
+   * Globally-ordered packing: `pack_id` = (running weight before this row
+   * in `orderCols` order) div budget. Requires `weightCol` to be LongType;
+   * a negative or null weight fails the query in-plan.
    */
   def packGlobal(df: DataFrame, weightCol: String, orderCols: Seq[Column],
       budget: Long, outCol: String = "pack_id"): DataFrame = {
     require(budget > 0, "budget must be positive")
     require(df.schema(weightCol).dataType == LongType,
       s"$weightCol must be LongType (cast token counts to long first)")
-    val spark = df.sparkSession
-    val n = spark.sparkContext.defaultParallelism
-    val sorted = df.repartitionByRange(n, orderCols: _*).sortWithinPartitions(orderCols: _*)
-    val wIdx = sorted.schema.fieldIndex(weightCol)
-    // one materialization feeds both passes; without the cut the range
-    // exchange + sort would execute twice (Catalyst re-runs per consumer)
-    val rdd = graft.recon.Checkpoints.cut(sorted).rdd
-    val partSums = rdd
-      .mapPartitionsWithIndex { case (pid, it) =>
-        var s = 0L
-        it.foreach { r =>
-          val v = r.getLong(wIdx)
-          require(v >= 0L, s"negative weight $v in $weightCol")
-          s += v
-        }
-        Iterator((pid, s))
-      }
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = partSums.scanLeft(0L)(_ + _) // offsets(pid) = tokens before partition pid
-    val bc = spark.sparkContext.broadcast(offsets)
-    val outSchema = StructType(sorted.schema.fields :+ StructField(outCol, LongType, nullable = false))
-    val stamped = rdd.mapPartitionsWithIndex { case (pid, it) =>
-      var cum = bc.value(pid)
-      it.map { r =>
-        val start = cum
-        cum += r.getLong(wIdx)
-        Row.fromSeq(r.toSeq :+ (start / budget))
-      }
-    }
-    spark.createDataFrame(stamped, outSchema)
+    val w = col(weightCol)
+    val checked = when(w.isNull || w < 0L, raise_error(concat(
+        lit(s"packGlobal: negative weight in $weightCol: "),
+        coalesce(w.cast("string"), lit("null")))).cast(LongType))
+      .otherwise(w)
+    graft.recon.Sources.withRunningSumRanged(df, "__cum", checked, orderCols)
+      .withColumn(outCol, expr(s"(__cum - `$weightCol`) div ${budget}L"))
+      .drop("__cum")
   }
 }

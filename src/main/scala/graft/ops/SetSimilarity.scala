@@ -78,6 +78,28 @@ object SetSimilarity {
     * distinct-element table — see [[jaccardPrefixJoin]] for the filter
     * argument, [[weightedJaccardJoin]] for the bag reduction. */
   private def prefixJaccardCore(elements: DataFrame, tMilli: Int): DataFrame = {
+    val (sh, sizes, prefix) = rarestFirstPrefix(elements, tMilli)
+    val cand = prefix.alias("pa")
+      .join(prefix.alias("pb"),
+        col("pa.shingle") === col("pb.shingle") && col("pa.doc") < col("pb.doc"))
+      .select(col("pa.doc").as("id_a"), col("pb.doc").as("id_b"))
+      .distinct()
+    verifyCounts(cand, sh, sizes)
+      .withColumn("uni", col("n_a") + col("n_b") - col("inter"))
+      .where(col("inter") * lit(1000L) >= col("uni") * lit(tMilli.toLong))
+      .withColumn("jac_milli", expr("(inter * 1000) div uni"))
+      .select(col("id_a"), col("id_b"), col("inter"), col("uni"), col("jac_milli"))
+  }
+
+  /** The rarest-first prefix filter both prefix joins share. Returns the
+    * lineage-cut element table `sh` (doc, shingle) — one materialization
+    * feeds sizes, frequencies, ranking and both verify probes, where
+    * Catalyst would otherwise re-derive the explode per consumer — the
+    * per-doc sizes `(doc, n)` and each doc's prefix `(doc, shingle)`:
+    * its first `n − ⌈t·n⌉ + 1` elements in ascending (df, shingle)
+    * order. */
+  private def rarestFirstPrefix(elements: DataFrame, tMilli: Int)
+      : (DataFrame, DataFrame, DataFrame) = {
     require(tMilli >= 1 && tMilli <= 1000, s"tMilli out of (0, 1000]: $tMilli")
     val sh = graft.recon.Checkpoints.cut(elements) // (doc, shingle), distinct
     val sizes = sh.groupBy(col("doc")).agg(count(lit(1)).as("n"))
@@ -105,34 +127,20 @@ object SetSimilarity {
     val prefix = ranked.join(sizes, Seq("doc"))
       .where(col("r") <= col("n") - expr(s"($tMilli * n + 999) div 1000") + 1)
       .select(col("doc"), col("shingle"))
-    val cand = prefix.alias("pa")
-      .join(prefix.alias("pb"),
-        col("pa.shingle") === col("pb.shingle") && col("pa.doc") < col("pb.doc"))
-      .select(col("pa.doc").as("id_a"), col("pb.doc").as("id_b"))
-      .distinct()
-    val inter = cand
+    (sh, sizes, prefix)
+  }
+
+  /** Exact verify tail for candidate pairs `(id_a, id_b)`: the shared
+    * element count `inter` from two equi-joins against `sh`, plus both
+    * sizes `n_a` and `n_b`. */
+  private def verifyCounts(cand: DataFrame, sh: DataFrame, sizes: DataFrame): DataFrame =
+    cand
       .join(sh.select(col("doc").as("id_a"), col("shingle")), Seq("id_a"))
       .join(sh.select(col("doc").as("id_b"), col("shingle")), Seq("id_b", "shingle"))
       .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("inter"))
-    inter
       .join(sizes.select(col("doc").as("id_a"), col("n").as("n_a")), Seq("id_a"))
       .join(sizes.select(col("doc").as("id_b"), col("n").as("n_b")), Seq("id_b"))
-      .withColumn("uni", col("n_a") + col("n_b") - col("inter"))
-      .where(col("inter") * lit(1000L) >= col("uni") * lit(tMilli.toLong))
-      .withColumn("jac_milli", expr("(inter * 1000) div uni"))
-      .select(col("id_a"), col("id_b"), col("inter"), col("uni"), col("jac_milli"))
-  }
 
-  /**
-   * Evidence for flagged near-dup pairs — the audit trail a human
-   * reviews before a deletion wave: per pair, the exact shared-shingle
-   * count and the `k` globally RAREST shared shingles (rarest = most
-   * distinctive; a pair "sharing" only hub shingles explains itself
-   * away). The pair frame rides broadcast (candidate-sized by
-   * construction); the rank window partitions per pair, bounded by the
-   * smaller document's shingle count. Evidence order is (df, shingle) —
-   * deterministic in both engines.
-   */
   /**
    * Asymmetric CONTAINMENT join: pairs where the smaller document's
    * shingle set is ≥ `tMilli`/1000 contained in the other —
@@ -159,35 +167,15 @@ object SetSimilarity {
    */
   def containmentPrefixJoin(df: DataFrame, textCol: String, idCol: String,
       shingleN: Int, tMilli: Int): DataFrame = {
-    require(tMilli >= 1 && tMilli <= 1000, s"tMilli out of (0, 1000]: $tMilli")
-    val sh = graft.recon.Checkpoints.cut(
-      Dedup.shingleTable(df, textCol, idCol, shingleN)) // (doc, shingle), distinct
-    val sizes = sh.groupBy(col("doc")).agg(count(lit(1)).as("n"))
-    val dfreq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-    // pinned rank-window exchange width (the caller's own session width)
-    // — the whole compute-bound tail rides this partitioning; see
-    // [[prefixJaccardCore]]
-    val ranked = sh.join(dfreq, Seq("shingle"))
-      .repartition(sh.sparkSession.sessionState.conf.numShufflePartitions,
-        col("doc"))
-      .withColumn("r", row_number().over(
-        Window.partitionBy(col("doc")).orderBy(col("df"), col("shingle"))))
-    val prefix = ranked.join(sizes, Seq("doc"))
-      .where(col("r") <= col("n") - expr(s"($tMilli * n + 999) div 1000") + 1)
-      .select(col("doc"), col("shingle"))
+    val (sh, sizes, prefix) = rarestFirstPrefix(
+      Dedup.shingleTable(df, textCol, idCol, shingleN), tMilli)
     val cand = prefix.alias("pa")
       .join(sh.alias("pb"),
         col("pa.shingle") === col("pb.shingle") && col("pa.doc") =!= col("pb.doc"))
       .select(least(col("pa.doc"), col("pb.doc")).as("id_a"),
         greatest(col("pa.doc"), col("pb.doc")).as("id_b"))
       .distinct()
-    val inter = cand
-      .join(sh.select(col("doc").as("id_a"), col("shingle")), Seq("id_a"))
-      .join(sh.select(col("doc").as("id_b"), col("shingle")), Seq("id_b", "shingle"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col("doc").as("id_a"), col("n").as("n_a")), Seq("id_a"))
-      .join(sizes.select(col("doc").as("id_b"), col("n").as("n_b")), Seq("id_b"))
+    verifyCounts(cand, sh, sizes)
       .withColumn("n_small", least(col("n_a"), col("n_b")))
       .where(col("inter") * lit(1000L) >= col("n_small") * lit(tMilli.toLong))
       .withColumn("cont_milli", expr("(inter * 1000) div n_small"))
@@ -227,6 +215,16 @@ object SetSimilarity {
     s"(1000 - ${powMilli(s"(1000 - ${powMilli(est, r)})", b)})"
   }
 
+  /**
+   * Evidence for flagged near-dup pairs — the audit trail a human
+   * reviews before a deletion wave: per pair, the exact shared-shingle
+   * count and the `k` globally RAREST shared shingles (rarest = most
+   * distinctive; a pair "sharing" only hub shingles explains itself
+   * away). The pair frame rides broadcast (candidate-sized by
+   * construction); the rank window partitions per pair, bounded by the
+   * smaller document's shingle count. Evidence order is (df, shingle) —
+   * deterministic in both engines.
+   */
   def explainPairs(df: DataFrame, textCol: String, idCol: String,
       shingleN: Int, pairs: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")

@@ -496,11 +496,25 @@ class CurationOpsSpec extends SparkSuite {
 
   test("packGlobal rejects negative weights") {
     val df = Seq((1L, -5L)).toDF("id", "w")
-    val ex = intercept[org.apache.spark.SparkException] {
+    // the guard's failure surfaces as raise_error's own
+    // SparkRuntimeException (private[spark]: checked by name) or, in some
+    // runs, wrapped in the failed job's SparkException
+    val ex = intercept[Exception] {
+      Packing.packGlobal(df, "w", Seq(col("id")), 10L).collect()
+    }
+    assert(Set("org.apache.spark.SparkRuntimeException", "org.apache.spark.SparkException")
+      .contains(ex.getClass.getName), ex.getClass.getName)
+    assert(ex.getMessage.contains("negative weight")
+      || Option(ex.getCause).exists(_.getMessage.contains("negative weight")))
+  }
+
+  test("packGlobal rejects a null weight") {
+    val df = Seq((1L, Some(3L)), (2L, None)).toDF("id", "w")
+    val ex = intercept[Exception] {
       Packing.packGlobal(df, "w", Seq(col("id")), 10L).collect()
     }
     assert(ex.getMessage.contains("negative weight")
-      || Option(ex.getCause).exists(_.getMessage.contains("negative weight")))
+      || Option(ex.getCause).exists(_.getMessage.contains("negative weight")), ex.getMessage)
   }
 
   // ---------------------------------------------------------- tmp dirs

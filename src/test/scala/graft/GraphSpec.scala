@@ -53,6 +53,18 @@ class GraphSpec extends SparkSuite {
     assert(r(3L) > 0L)
   }
 
+  test("pageRank is personalizedPageRank seeded with every source node") {
+    val star = Seq((0L, 1L), (1L, 0L), (0L, 2L), (2L, 0L)).toDF("src", "dst")
+    val path = Seq((1L, 2L), (2L, 3L), (3L, 1L), (2L, 1L), (8L, 9L), (9L, 8L))
+      .toDF("src", "dst")
+    for (e <- Seq(star, path); iters <- 1 to 3) {
+      val all = e.select(col("src").as("node")).distinct()
+      val pr = Graph.pageRank(e, iters).as[(Long, Long)].collect().toMap
+      val ppr = Graph.personalizedPageRank(e, all, iters).as[(Long, Long)].collect().toMap
+      assert(pr == ppr, s"iters=$iters")
+    }
+  }
+
   test("personalizedPageRank fails loudly when no seed is in the graph") {
     val e = Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")
     val ex = intercept[Exception] {

@@ -48,7 +48,7 @@ class IndexStoreSpec extends SparkSuite {
     val dir = tmp()
     IndexStore.writeMinHashIndex(seenDocs, "text", "doc_id", dir,
       shingleN = 2, k = 32, bands = 8)
-    IndexStore.mergeIntoMinHashIndex(newDocs, "text", "doc_id", dir)
+    assert(IndexStore.mergeIntoMinHashIndexIdempotent(newDocs, "text", "doc_id", dir) === 2L)
     assert(IndexStore.loadMinHashSignatures(spark, dir).count() === 5L)
     assert(IndexStore.loadMinHashStats(spark, dir)
       .agg(sum(col("n"))).head().getLong(0) === 8L * 5L)

@@ -363,7 +363,8 @@ class SimilarityTextSpec extends SparkSuite {
       // the index, and a later probe can now retrieve it
       val held = e.where(col("vec_id") % 100 === 1)
       val before = IndexStore.loadIvfPqCodes(spark, dir.getAbsolutePath).count()
-      IndexStore.mergeIntoIvfPqIndex(held, dir.getAbsolutePath)
+      val merged = IndexStore.mergeIntoIvfPqIndexIdempotent(held, dir.getAbsolutePath)
+      assert(merged == held.count())
       val after = IndexStore.loadIvfPqCodes(spark, dir.getAbsolutePath)
       assert(after.count() == before + held.count())
       // probe every cell with an unbounded k: every merged id must now be

@@ -58,6 +58,12 @@ class SimplicityGuardSpec extends AnyFunSuite {
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 
+  test("graft.ops never drops to RDDs") {
+    assert(sources.exists(_._1.startsWith(root.resolve("graft/ops"))))
+    val found = hits("""\.rdd\b|mapPartitionsWithIndex""".r, under = Seq("graft/ops"))
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
   test("no withShufflePartitions scope anywhere") {
     val found = hits("""withShufflePartitions""".r)
     assert(found.isEmpty, found.mkString("\n", "\n", ""))

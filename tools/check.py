@@ -6,7 +6,7 @@ testdata tables and compares column-name-sorted, row-sorted values exactly.
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 """
-import sys, os, json, glob
+import sys, os, json, glob, time
 import duckdb
 import pandas as pd
 
@@ -42,33 +42,37 @@ def main(sf_dir: str, out_dir: str) -> int:
         oracles = json.load(f)
 
     failures, passed, rows_only = [], 0, 0
+
+    def fail(name, why):
+        failures.append((name, why))
+        print(f"  [FAIL] {name}: {why}", flush=True)
+
     names = sorted(d for d in os.listdir(out_dir)
                    if os.path.isdir(os.path.join(out_dir, d)))
     for name in names:
         files = glob.glob(os.path.join(out_dir, name, "*.parquet"))
         if not files:
-            failures.append((name, "no spark parquet output"))
+            fail(name, "no spark parquet output")
             continue
         got = pd.concat([pd.read_parquet(p) for p in sorted(files)],
                         ignore_index=True)
         if name not in oracles:
             rows_only += 1
-            print(f"  [rows-only] {name}: {len(got)} rows")
+            print(f"  [rows-only] {name}: {len(got)} rows", flush=True)
             continue
-        import time
         t0 = time.monotonic()
         try:
             want = con.execute(oracles[name]).fetchdf()
         except Exception as ex:
-            failures.append((name, f"oracle SQL error: {ex}"))
+            fail(name, f"oracle SQL error: {ex}")
             continue
         oracle_s = time.monotonic() - t0
         g, w = canon(got), canon(want)
         if sorted(g.columns) != sorted(w.columns):
-            failures.append((name, f"column mismatch: spark={sorted(g.columns)} oracle={sorted(w.columns)}"))
+            fail(name, f"column mismatch: spark={sorted(g.columns)} oracle={sorted(w.columns)}")
             continue
         if len(g) != len(w):
-            failures.append((name, f"row count: spark={len(g)} oracle={len(w)}"))
+            fail(name, f"row count: spark={len(g)} oracle={len(w)}")
             continue
         if not g.equals(w):
             neq = (g != w).any(axis=1)
@@ -76,12 +80,12 @@ def main(sf_dir: str, out_dir: str) -> int:
             detail = "; ".join(
                 f"row{i}: spark={g.loc[i].to_dict()} oracle={w.loc[i].to_dict()}"
                 for i in idx)
-            failures.append((name, f"value mismatch in {int(neq.sum())}/{len(g)} rows: {detail[:600]}"))
+            fail(name, f"value mismatch in {int(neq.sum())}/{len(g)} rows: {detail[:600]}")
             continue
         passed += 1
         # per-oracle wall time: the driver's gate has a budget; any single
         # oracle over ~30s is a regression risk for the whole artifact
-        print(f"  [ok] {name}: {len(g)} rows (oracle {oracle_s:.1f}s)")
+        print(f"  [ok] {name}: {len(g)} rows (oracle {oracle_s:.1f}s)", flush=True)
 
     print(f"\n{passed} oracle-matched, {rows_only} rows-only, {len(failures)} failed")
     for name, why in failures:
