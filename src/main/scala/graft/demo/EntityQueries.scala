@@ -941,11 +941,8 @@ object EntityQueries {
       graft.ops.Dedup.cdcChunkStats(docs(s, d), "text", "doc_id", w = 4, divisor = 8)
     },
 
-    // stream-stream join, batch twin: click→purchase attribution pairs
-    // within a 1 h band. The streaming form
-    // (EventPipeline.attributionStream) carries the SAME equi+interval
-    // condition — the interval is what lets Spark evict join state once
-    // the opposite watermark passes; a spec pins the two forms equal
+    // click→purchase attribution pairs within a 1 h band: an equi-join
+    // on the user key plus the time-band condition
     QuerySpec("stream_attribution",
       raw"""WITH e AS (SELECT user_id, event_id, event_type, epoch_ms(ts) AS ms FROM events),
            |c AS (SELECT user_id, event_id AS click_id, ms AS click_ms
@@ -3113,10 +3110,8 @@ object EntityQueries {
         k = 5, lambdaMilli = 700)
     },
 
-    // per-user event cap, batch arm (keep the EARLIEST 20 per user —
-    // the ingestion quota against runaway producers); the streaming
-    // twin (userCapStream, watermark-ordered, saturating state) is
-    // spec-pinned equal over surviving events
+    // per-user event cap (keep the EARLIEST 20 per user — the
+    // ingestion quota against runaway producers)
     QuerySpec("stream_user_cap",
       raw"""WITH r AS (SELECT user_id, event_id, epoch_ms(ts) AS ms,
            |    row_number() OVER (PARTITION BY user_id

@@ -1303,9 +1303,8 @@ object InferenceQueries {
     },
 
     // per-hour distinct users in HLL registers — the bounded-state
-    // shape whose STREAMING twin (EventPipeline.hllRegistersStream,
-    // spec-pinned register-for-register equal) keeps ≤ 64 small
-    // integers per open window on an unbounded stream. The estimate is
+    // shape: ≤ 64 small integers per window, however many users the
+    // window sees. The estimate is
     // the same exact-integer scaled harmonic sum as text_distinct_hll:
     // the only double is one literal-by-integer division
     QuerySpec("events_distinct_hll",

@@ -1161,9 +1161,9 @@ object OpsQueries {
           coalesce(col("n_errors"), lit(0L)).as("n_errors"))
     },
 
-    // ---- streaming-shaped (batch-equivalent forms) -----------------------
+    // ---- event-time operators --------------------------------------------
 
-    // exact dedup by event id, keep-first by time (streamingDedup's batch twin)
+    // exact dedup by event id, keep-first by time
     QuerySpec("stream_dedup_ids",
       """SELECT event_id, user_id, event_type
         |FROM (SELECT event_id, user_id, event_type,
@@ -1189,8 +1189,7 @@ object OpsQueries {
 
     // rendezvous-routed stream accounting: per 5-min window × HRW shard
     // of the user key, event count + exact cents mass — the router's
-    // fan-out table. Stateless per-row routing + one windowed agg; the
-    // stream twin (shardRouteStream) is spec-pinned batch≡stream. The
+    // fan-out table. Stateless per-row routing + one windowed agg. The
     // oracle computes the HRW argmax per DISTINCT user, then joins —
     // same assignment, |users|·nShards work instead of |events|·nShards
     QuerySpec("stream_shard_route",
@@ -1213,9 +1212,8 @@ object OpsQueries {
 
     // local-DP ingest ledger: randomized response BEFORE any
     // aggregation (the collector's windowed counts only ever hold
-    // REPORTED types — the stream twin runs the same projection
-    // stateless under readStream, spec'd batch ≡ replay). Same channel
-    // as privacy_local_rr, per 5-min tumbling window
+    // REPORTED types). Same channel as privacy_local_rr, per 5-min
+    // tumbling window
     QuerySpec("stream_local_rr", {
       val cats = Seq("click", "error", "purchase", "signup", "view") // sorted
       val branches = cats.map { c =>
@@ -1241,8 +1239,7 @@ object OpsQueries {
         pMilli = 750, salt = "r15srr", windowMs = 300000L)
     },
 
-    // ENGINE-NATIVE session windows (Catalyst session_window, the same
-    // groupBy that runs under readStream with state-store merge): merge
+    // ENGINE-NATIVE session windows (Catalyst session_window): merge
     // iff gap STRICTLY under 10 min (an event exactly at a window's end
     // opens a new session — note `>=` in the oracle's new-session flag,
     // vs stream_sessionize's `>`), session_end = last event + gap
@@ -1273,10 +1270,12 @@ object OpsQueries {
    * new codebook with empty clusters keeping their previous centroid.
    * Seeds are the deterministic every-`modulus`-th sample relabeled
    * 0..k-1 by id order, exactly like the Spark side.
+   *
+   * The WITH-prefix shared by every trained-codebook oracle: seed
+   * codebook `c0`, `iters` Lloyd iterations, final assignment `af` of
+   * (vec_id, embedding, centroid_id) against the trained codebook
+   * `c$iters`.
    */
-  /** WITH-prefix shared by every trained-codebook oracle: seed codebook
-    * `c0`, `iters` Lloyd iterations, final assignment `af` of (vec_id,
-    * embedding, centroid_id) against the trained codebook `c$iters`. */
   private def kmeansCtes(k: Int, modulus: Int, iters: Int,
       sampledTraining: Boolean = false): String = {
     // `sampledTraining` mirrors the Spark side's trainSample gate: seeds

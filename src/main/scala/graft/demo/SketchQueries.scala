@@ -348,7 +348,7 @@ object SketchQueries {
     // Morton (z-order) curve over (customer, order-day): the layout key
     // that keeps rows close in BOTH filter dimensions in the same files,
     // so footer min/max prune 2-D range scans. Pure bit arithmetic,
-    // mirrored term for term; the clustering writer is Layout.zorderBy
+    // mirrored term for term
     QuerySpec("layout_zorder",
       s"""SELECT o_orderkey,
          |  ${Layout.zValue2Sql("(o_custkey % 65536)",

@@ -12,8 +12,8 @@ import org.apache.spark.sql.types.DecimalType
  * incident is typically confined to a few ingest ranges, so the
  * Dynamo/Cassandra-style repair plan is: hash-bucket both sides,
  * compare per-bucket DIGESTS (bucket-count-sized frames), and pay
- * row-level work only inside the buckets that disagree — then hand
- * exactly those rows to [[SnapshotDiff]] for the field-level verdict.
+ * row-level work ([[SnapshotDiff]]) only inside the buckets that
+ * disagree.
  *
  * Digest algebra: each row's canonical string (every field
  * length-prefixed and null-marked, so the encoding is injective even
@@ -127,13 +127,4 @@ object AntiEntropy {
       .where(col("status").isNotNull)
       .select(col("coarse"), col("fine"), col("n_a"), col("n_b"), col("status"))
   }
-
-  /** The repair plan's row-level stage: rows of `df` falling in the
-    * given disagreeing buckets (broadcast membership filter at the
-    * scan — only drifted buckets are ever re-read). Feed both sides'
-    * survivors to [[SnapshotDiff.diff]] for the field verdict. */
-  def bucketRows(df: DataFrame, keyCols: Seq[String], nBuckets: Int,
-      buckets: DataFrame): DataFrame =
-    df.withColumn("bucket", Sampling.keyHash(canonical(keyCols)) % nBuckets)
-      .join(broadcast(buckets.select("bucket").distinct()), Seq("bucket"), "left_semi")
 }

@@ -128,11 +128,6 @@ object Dedup {
    * AQE broadcasts `seen` on its own when it is genuinely small.
    * Within-batch duplicates are NOT removed here (this is the cross-run
    * filter) — compose with [[exactDedup]] on the survivors for both.
-   *
-   * Runs UNCHANGED on a `readStream` frame: a stream-static left-anti
-   * join, append mode, no streaming state (the static `seen` side is
-   * the state, maintained by whatever batch ingest wrote it) —
-   * spec-asserted equivalent to the batch form on the same files.
    */
   def incrementalDedup(newDf: DataFrame, seen: DataFrame, textCol: String): DataFrame =
     newDf.withColumn("__ch", contentHash(col(textCol)))
@@ -1023,27 +1018,6 @@ object Dedup {
       .withColumn("score", scoreCol)
       .where(col("score") >= threshold)
       .select(col("new_id"), col("seen_id"), col("score"))
-  }
-
-  /**
-   * Embedding near-dup pairs, exact form: all-pairs self join (a
-   * CartesianProduct — O(N²) scored pairs) + the codegen'd float kernel.
-   * This is the VERIFICATION kernel for small candidate sets and tests;
-   * register [[embeddingNearDupsLsh]] for anything corpus-sized. The
-   * score column is a DOT product — equal to cosine only for
-   * pre-normalized embeddings; pass `cosine = true` otherwise.
-   */
-  def embeddingNearDups(df: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, cosine: Boolean = false): DataFrame = {
-    import graft.functions.VectorFunctions.{vec_cosine, vec_dot}
-    val a = df.select(col(idCol).as("id1"), col(vecCol).as("v1"))
-    val b = df.select(col(idCol).as("id2"), col(vecCol).as("v2"))
-    val scoreCol =
-      if (cosine) vec_cosine(col("v1"), col("v2")) else vec_dot(col("v1"), col("v2"))
-    a.join(b, col("id1") < col("id2"))
-      .withColumn("score", scoreCol)
-      .where(col("score") >= threshold)
-      .select(col("id1"), col("id2"), col("score"))
   }
 
   /**

@@ -87,9 +87,7 @@ object Drift {
    * 'removed' — stratum vanished from after, proportions coalesced to
    * 0); ≤ nBins rows per stratum regardless of data volume. A drift
    * monitor exists exactly to catch appearing/vanishing strata, so
-   * neither side is ever silently dropped or nulled. Total-variation
-   * distance is one aggregate away ([[tvMilli]]; added/removed strata
-   * report the max drift 1000, not null).
+   * neither side is ever silently dropped or nulled.
    */
   def histDrift(before: DataFrame, after: DataFrame, strataCol: String,
       valueCol: String, nBins: Int): DataFrame = {
@@ -139,12 +137,11 @@ object Drift {
 
   /** Per-stratum Kolmogorov–Smirnov distance in milli from a
     * [[histDrift]] frame: max over bins of the |cumulative delta| —
-    * where [[tvMilli]] totals how much mass moved, KS finds the
-    * sharpest point of divergence between the two CDFs (a small shift
-    * applied to EVERY value scores higher here than on TV). Same
-    * added/removed convention: a stratum on one side only is max
-    * drift, 1000. The cumulative window is stratum-partitioned and
-    * ≤ nBins rows deep. */
+    * where total variation (Σ|delta|/2) totals how much mass moved, KS
+    * finds the sharpest point of divergence between the two CDFs (a
+    * small shift applied to EVERY value scores higher here than on TV).
+    * A stratum on one side only is max drift, 1000. The cumulative
+    * window is stratum-partitioned and ≤ nBins rows deep. */
   def ksMilli(drift: DataFrame, strataCol: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(strataCol)).orderBy(col("bin"))
@@ -174,7 +171,7 @@ object Drift {
    * of the integer part); digits the stratum never produces still
    * emit a row (n = 0, delta = −benford), so a stratum stuck on one
    * digit shows its full miss. Σ|delta|/2 over a stratum's rows is the
-   * TV severity, same algebra as [[tvMilli]]. One aggregate over the
+   * total-variation severity. One aggregate over the
    * data; the 9-row digit spine joins broadcast.
    */
   def benfordAudit(df: DataFrame, strataCol: String, valueCol: String): DataFrame = {
@@ -197,19 +194,6 @@ object Drift {
         (expr("(coalesce(n, 0L) * 1000) div __tot") - col("benford_milli"))
           .as("delta_milli"))
   }
-
-  /** Per-stratum total-variation distance in milli from a [[histDrift]]
-    * frame: Σ|delta| / 2 — the single drift-severity number an alert
-    * thresholds on. An added or removed stratum is max drift by
-    * definition (its before/after distributions have disjoint support):
-    * tv_milli = 1000, never null. */
-  def tvMilli(drift: DataFrame, strataCol: String): DataFrame =
-    drift.groupBy(col(strataCol))
-      .agg(sum(abs(col("delta_milli"))).as("__s"),
-        max(when(col("status") =!= "common", 1L).otherwise(0L)).as("__off"))
-      .select(col(strataCol),
-        when(col("__off") === 1L, lit(1000L))
-          .otherwise(expr("__s div 2")).as("tv_milli"))
 
   /** Drift between two [[profile]] outputs. Status: 'added' (after
     * only), 'removed' (before only), 'common'. Shared columns carry

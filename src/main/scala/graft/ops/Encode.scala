@@ -39,10 +39,4 @@ object Encode {
       dict: DataFrame): DataFrame =
     df.join(dict.select(col(valueCol), col("code").as(s"${valueCol}_code")),
       Seq(valueCol), "left")
-
-  /** Decode back: join codes to values — the read-path inverse. */
-  def dictionaryDecode(encoded: DataFrame, codeCol: String, dict: DataFrame,
-      as: String): DataFrame =
-    encoded.join(dict.select(col("code").as(codeCol),
-      dict.columns.filter(_ != "code").map(col).head.as(as)), Seq(codeCol), "left")
 }

@@ -196,44 +196,18 @@ object Graph {
   }
 
   /**
-   * Skip-gram context pairs from a walk table — the step that turns
-   * [[randomWalks]] output into word2vec-style training pairs (DeepWalk
-   * §4.2: each node co-trains with the nodes within `window` steps on
-   * the SAME walk). Output `(center, context, n_pairs)` — symmetric
-   * (both directions emitted), self-pairs possible when a walk revisits
-   * a node within the window (those ARE training signal). Scale shape:
-   * one self-join per walk keyed on (start, walk) — per-walk fanout is
-   * bounded by walk length × window, never corpus-sized — then a
-   * map-side-combining count aggregation.
-   */
-  def walkContexts(walks: DataFrame, window: Int): DataFrame = {
-    require(window >= 1, s"window must be >= 1: $window")
-    // cut once: the self-join consumes the walk table TWICE, and a walk
-    // table is typically the tail of an expensive join chain. When the
-    // walk table comes from [[randomWalkPaths]], use
-    // [[walkContextsFromPaths]] instead — it pairs steps inside the path
-    // ARRAY and needs neither the cut nor the join
-    val w = graft.recon.Checkpoints.cut(
-      walks.select(col("start"), col("walk"), col("step"), col("node")))
-    val a = w.select(col("start"), col("walk"),
-      col("step").as("__sa"), col("node").as("center"))
-    val b = w.select(col("start"), col("walk"),
-      col("step").as("__sb"), col("node").as("context"))
-    a.join(b, Seq("start", "walk"))
-      .where(col("__sb") =!= col("__sa") &&
-        abs(col("__sb") - col("__sa")) <= window)
-      .groupBy(col("center"), col("context"))
-      .agg(count(lit(1)).as("n_pairs"))
-  }
-
-  /**
-   * [[walkContexts]] straight off a PATH table ([[randomWalkPaths]]):
-   * the within-window step pairs are generated per row by a nested
-   * array transform — bounded per-row work (len·2·window pairs), ZERO
-   * joins, zero lineage cuts; the only shuffle is the final
-   * (center, context) count aggregation, map-side combined. Identical
-   * output to `walkContexts(randomWalks(...), window)` (spec-pinned):
-   * positions pair exactly like steps, revisits included.
+   * Skip-gram context pairs from a PATH table ([[randomWalkPaths]]) —
+   * the step that turns walks into word2vec-style training pairs
+   * (DeepWalk §4.2: each node co-trains with the nodes within `window`
+   * steps on the SAME walk). Output `(center, context, n_pairs)` —
+   * symmetric (both directions emitted), self-pairs possible when a walk
+   * revisits a node within the window (those ARE training signal). The
+   * within-window step pairs are generated per row by a nested array
+   * transform — bounded per-row work (len·2·window pairs), ZERO joins,
+   * zero lineage cuts; the only shuffle is the final (center, context)
+   * count aggregation, map-side combined. Positions pair exactly like
+   * the steps of the equivalent walk table, revisits included
+   * (spec-pinned against a self-join over [[randomWalks]]).
    */
   def walkContextsFromPaths(paths: DataFrame, window: Int): DataFrame = {
     require(window >= 1, s"window must be >= 1: $window")
@@ -797,42 +771,6 @@ object Graph {
         coalesce(sum(col("__n")), lit(0L)).as("__rows"))
       .select(lit(slice).as("__slice"), col("__si2").as("__a"),
         col("__rows").as("__b"), lit(0L).as("__w"), col("__sk2"))
-
-  /** The exact modularity numerator `Σ_c (e2·i2_c − dc_c²)` of a
-    * partition over `edges`, in DECIMAL(38,0) — the scale-safe scalar
-    * [[louvainLevels]]' convergence gate compares (e2 ≈ 10¹³ at the
-    * 100 TB tier squares past Long). One aggregate pass over
-    * [[modularityMicro]]-shaped inputs. */
-  private[graft] def modularityNumExact(edges: DataFrame,
-      labels: DataFrame): java.math.BigDecimal =
-    modularityNumExactWith(edges, edges.count(), labels)
-
-  /** [[modularityNumExact]] with 2|E| supplied — ONE distributed job:
-    * the aggregate returns (Σ i2_c, Σ dc_c²) and the driver finishes
-    * `e2·Σi2 − Σdc²` in BigDecimal (Σi2 ≤ e2 fits a Long; the square sum
-    * rides DECIMAL(38,0)). */
-  private def modularityNumExactWith(edges: DataFrame, e2: Long,
-      labels: DataFrame): java.math.BigDecimal = {
-    val lbl = labels.select(col("node"), col("label"))
-    val deg = edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("__deg"))
-    val dsum = deg.join(broadcast(lbl), Seq("node"))
-      .groupBy(col("label")).agg(sum(col("__deg")).as("__dc"))
-    val intra = edges
-      .join(broadcast(lbl.select(col("node").as("src"), col("label").as("__la"))),
-        Seq("src"))
-      .join(broadcast(lbl.select(col("node").as("dst"), col("label").as("__lb"))),
-        Seq("dst"))
-      .where(col("__la") === col("__lb"))
-      .groupBy(col("__la").as("label")).agg(count(lit(1)).as("__i2"))
-    val row = dsum.join(intra, Seq("label"), "left")
-      .agg(coalesce(sum(coalesce(col("__i2"), lit(0L))), lit(0L)).as("__si2"),
-        coalesce(sum(col("__dc").cast("decimal(38,0)") * col("__dc")),
-          lit(0L).cast("decimal(38,0)")).as("__sdc2"))
-      .head()
-    new java.math.BigDecimal(e2)
-      .multiply(new java.math.BigDecimal(row.getLong(0)))
-      .subtract(row.getDecimal(1))
-  }
 
   /**
    * Bounded-round k-core peeling: iteratively remove nodes of degree

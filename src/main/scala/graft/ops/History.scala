@@ -205,15 +205,6 @@ object History {
       (col("valid_to").isNull || col("valid_to") > at))
 
   /**
-   * First-order transition counts: for each entity's time-ordered event
-   * sequence, count (previous state → state) adjacencies across the
-   * whole log, plus the exact-integer milli-probability
-   * `p_milli = n·1000 div Σn(from_type)` — the row-normalized Markov
-   * matrix in a form both engines compute bit-identically (no float
-   * division). The final window partitions by `from_type`, bounded by
-   * the state-alphabet size, not the data.
-   */
-  /**
    * Bounded rolling features over each entity's time-ordered event
    * stream — the lag/rolling-sum/recency feature block a training
    * pipeline materializes before modeling. All value arithmetic is in
@@ -361,6 +352,15 @@ object History {
       .withColumn("acc_milli", expr("(1000 * n_correct) div n_pairs"))
   }
 
+  /**
+   * First-order transition counts: for each entity's time-ordered event
+   * sequence, count (previous state → state) adjacencies across the
+   * whole log, plus the exact-integer milli-probability
+   * `p_milli = n·1000 div Σn(from_type)` — the row-normalized Markov
+   * matrix in a form both engines compute bit-identically (no float
+   * division). The final window partitions by `from_type`, bounded by
+   * the state-alphabet size, not the data.
+   */
   def transitionCounts(events: DataFrame, entityCol: String, stateCol: String,
       tsCol: String, tieCol: String): DataFrame = {
     val byTime = Window.partitionBy(col(entityCol))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -59,87 +59,4 @@ object IncrementalAgg {
         min(col("min_val")).as("min_val"),
         max(col("max_val")).as("max_val"))
   }
-
-  // ---- streaming maintenance --------------------------------------------
-  //
-  // The foreachBatch form of the same algebra: each micro-batch's state
-  // merges into a persisted parquet state. Structured Streaming's
-  // foreachBatch is AT-LEAST-ONCE — after a failure the last batch can
-  // replay — and a replayed merge would double-count, so the persisted
-  // artifact carries the last applied batch id and [[updateState]] is
-  // an idempotent no-op for already-applied ids. State and batch-id
-  // meta are written into ONE temp directory, then swapped in by a
-  // RECOVERABLE two-rename sequence (current -> previous, _tmp ->
-  // current, delete previous): at every crash point either `current`
-  // or `previous` holds one complete state/meta pair, and [[readState]]
-  // falls back to `previous` when `current` is missing — accumulated
-  // history is never silently discarded. Recovering from `previous`
-  // (the PRE-batch state) is correct because the interrupted batch's
-  // foreachBatch never committed, so the stream replays it and the
-  // merge re-applies. Same single-writer contract as [[IndexStore]]:
-  // one maintenance stream per state path.
-
-  private def fs(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** The persisted state and the last applied batch id, if any. Falls
-    * back to `previous` when `current` is missing (a crash between the
-    * swap's two renames) — see the recovery note above. */
-  def readState(spark: SparkSession, statePath: String): Option[(DataFrame, Long)] = {
-    val cur = new org.apache.hadoop.fs.Path(statePath, "current")
-    val prev = new org.apache.hadoop.fs.Path(statePath, "previous")
-    val f = fs(spark, cur)
-    val dir = if (f.exists(cur)) Some(cur)
-              else if (f.exists(prev)) Some(prev)
-              else None
-    dir.map { d =>
-      (spark.read.parquet(s"$d/state"),
-        spark.read.parquet(s"$d/meta").head().getAs[Long]("last_batch_id"))
-    }
-  }
-
-  /** Merge one micro-batch into the persisted state. Returns false (and
-    * changes nothing) when `batchId` was already applied — the replay
-    * guard that makes at-least-once delivery exactly-once here. */
-  def updateState(batch: DataFrame, keys: Seq[String], valueCol: String,
-      statePath: String, batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    val prev = readState(spark, statePath)
-    if (prev.exists(_._2 >= batchId)) return false
-    val merged = prev match {
-      case Some((old, _)) => merge(keys, Seq(old, state(batch, keys, valueCol)))
-      case None => state(batch, keys, valueCol)
-    }
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val f = fs(spark, root)
-    val tmp = new org.apache.hadoop.fs.Path(root, "_tmp")
-    if (f.exists(tmp)) f.delete(tmp, true)
-    // materialize BEFORE touching the live dir: merged reads the live
-    // state lazily, and writing it into tmp forces the read first
-    merged.write.mode("overwrite").parquet(s"$tmp/state")
-    spark.range(1).select(lit(batchId).as("last_batch_id"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
-    val cur = new org.apache.hadoop.fs.Path(root, "current")
-    val prevDir = new org.apache.hadoop.fs.Path(root, "previous")
-    // stale `previous` from a crash after the swap completed (window:
-    // tmp->current done, previous not yet deleted). Only safe to drop
-    // while `current` exists; in the recovery case (current missing,
-    // previous live) `merged` above was already materialized into tmp,
-    // so previous is only deleted at the very end, after the new
-    // current is in place
-    if (f.exists(cur) && f.exists(prevDir)) f.delete(prevDir, true)
-    if (f.exists(cur)) require(f.rename(cur, prevDir), s"rename $cur -> $prevDir failed")
-    require(f.rename(tmp, cur), s"rename $tmp -> $cur failed")
-    if (f.exists(prevDir)) f.delete(prevDir, true)
-    true
-  }
-
-  /** Wire a stream into [[updateState]]: returns the configured writer;
-    * the caller picks the trigger and starts it. */
-  def maintain(stream: DataFrame, keys: Seq[String], valueCol: String,
-      statePath: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        updateState(batch, keys, valueCol, statePath, batchId); ()
-    }
 }

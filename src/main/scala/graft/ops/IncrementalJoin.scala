@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
  *   Δ(A ⋈ B) = ΔA ⋈ B  ∪  A ⋈ ΔB  ∪  ΔA ⋈ ΔB
  *
  * where A, B are the PRE-batch snapshots and ΔA, ΔB the inserted
- * batches (insert-only deltas — the append-only ingest case
- * [[Ingest]] feeds; updates/deletes need retraction rows, out of
+ * batches (insert-only deltas — the append-only ingest case;
+ * updates/deletes need retraction rows, out of
  * scope here). Appending the delta to the stored A ⋈ B equals a full
  * recompute over (A ∪ ΔA) ⋈ (B ∪ ΔB), multiset-exactly — pinned by
  * spec.

@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
  * On-disk lifecycle for the incremental dedup indexes — the piece that
  * turns [[Dedup.minHashIncremental]] / [[Dedup.embeddingIncrementalNearDups]]
  * from "twin frames in one session" into a production daily-ingest loop:
- * build an index once over history, persist it, probe each new batch
- * against the loaded index (history text/vectors never rescanned), then
- * merge the accepted batch in.
+ * build an index once over history, persist it, and probe each new batch
+ * against the loaded index (history text/vectors never rescanned); the
+ * IVF-PQ index also takes accepted batches in by an idempotent append.
  *
  * Layout (all plain parquet — readable by any engine, splittable,
  * column-pruned on probe):
@@ -18,31 +18,22 @@ import org.apache.spark.sql.functions._
  *                        the index's identity: probing k=64 signatures
  *                        with k=16 banding silently produces garbage, so
  *                        every probe/merge re-reads meta and uses ITS
- *                        values, and [[loadMeta]] fails loudly on an
+ *                        values, and [[readMeta]] fails loudly on an
  *                        unknown layout version.
  *   <dir>/signatures/    MinHash: (doc, h0..h{k-1}).
  *   <dir>/index/         embedding LSH: (vec_id-col, vec-col, bucket).
- *   <dir>/bucket_stats/  sidecar of per-bucket member counts — lets a
- *                        probe (or an operator) see hub buckets and
- *                        overall balance WITHOUT scanning the index
- *                        itself; refreshed on merge.
  *
  * Scale shape: writes are straight columnar dumps of frames the build
- * already produces (signatures: k longs per doc; stats: one row per
- * bucket); probes read the signature/index parquet with column pruning
- * and join on band/bucket keys exactly like the in-memory forms. Merge
- * appends the new batch's rows and rewrites only the (tiny) stats
- * sidecar — history signature files are immutable.
+ * already produces (signatures: k longs per doc); probes read the
+ * signature/index parquet with column pruning and join on band/bucket
+ * keys exactly like the in-memory forms. An append adds the new batch's
+ * rows — history files are immutable.
  *
- * Concurrency contract: SINGLE WRITER, and no probe concurrent with a
- * merge. Plain parquet has no commit protocol — a merge appends
- * signature files and then replaces the stats sidecar, so a probe racing
- * a merge can see a partially-appended index, and a crash between the
- * two steps leaves a stale (never corrupt — the replace below is
- * write-to-temp-then-rename, so readers see the old or the new sidecar,
- * not a half-written one) stats sidecar that the next merge refresh
- * heals. A deployment needing concurrent writers should front this with
- * a table format that has a log (Delta/Iceberg) — the layout maps 1:1.
+ * Concurrency contract: SINGLE WRITER, and no probe concurrent with an
+ * append. Plain parquet has no commit protocol, so a probe racing an
+ * append can see a partially-appended index. A deployment needing
+ * concurrent writers should front this with a table format that has a
+ * log (Delta/Iceberg) — the layout maps 1:1.
  */
 object IndexStore {
 
@@ -62,21 +53,6 @@ object IndexStore {
     case "fast"     => Dedup.SketchHash.Fast
     case other => throw new IllegalArgumentException(
       s"index meta names unknown sketch hash '$other' (known: portable, fast)")
-  }
-
-  /** Replace `<dir>/<name>` with `df`, via temp-dir + rename: a reader can
-    * observe the old sidecar or the new one, never a half-written mix of
-    * files (the in-place "overwrite" this replaces deleted-then-wrote in
-    * the live directory). The delete+rename pair itself is still two FS
-    * calls — see the single-writer contract above. */
-  private def replaceDir(df: DataFrame, dir: String, name: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dst = new Path(dir, name)
-    val tmp = new Path(dir, s"_tmp_$name")
-    val fs = dst.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    df.write.mode("overwrite").parquet(tmp.toString)
-    if (fs.exists(dst)) fs.delete(dst, true)
-    require(fs.rename(tmp, dst), s"rename $tmp -> $dst failed")
   }
 
   private def writeMeta(spark: SparkSession, dir: String,
@@ -99,12 +75,11 @@ object IndexStore {
 
   // ---- MinHash text index ------------------------------------------------
 
-  /** Build and persist a MinHash index over `df`. The signatures are the
-    * index; the banded per-bucket counts go to the stats sidecar. The
-    * sketch-hash algorithm is part of the index identity (probing Portable
-    * signatures with Fast banding is silent garbage), so it is persisted
-    * in meta alongside shingle_n/k/bands and every probe/refresh reads it
-    * from there. */
+  /** Build and persist a MinHash index over `df`: the signatures are the
+    * index. The sketch-hash algorithm is part of the index identity
+    * (probing Portable signatures with Fast banding is silent garbage),
+    * so it is persisted in meta alongside shingle_n/k/bands and every
+    * probe reads it from there. */
   def writeMinHashIndex(df: DataFrame, textCol: String, idCol: String, dir: String,
       shingleN: Int = 3, k: Int = 64, bands: Int = 8,
       hash: Dedup.SketchHash = Dedup.SketchHash.Portable): Unit = {
@@ -115,7 +90,6 @@ object IndexStore {
     writeMeta(spark, dir, "minhash", Map(
       "shingle_n" -> shingleN.toString, "k" -> k.toString, "bands" -> bands.toString,
       "hash" -> hashName(hash)))
-    refreshMinHashStats(spark, dir, MinHashMeta(shingleN, k, bands, hash))
   }
 
   def loadMinHashMeta(spark: SparkSession, dir: String): MinHashMeta = {
@@ -130,10 +104,6 @@ object IndexStore {
   def loadMinHashSignatures(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/signatures")
 
-  /** Per-(band, band_hash) member counts, from the sidecar — no index scan. */
-  def loadMinHashStats(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/bucket_stats")
-
   /** Probe a NEW batch against the persisted index. All index-shape
     * parameters come from the index's own meta — the caller cannot
     * mis-pair them with the stored signatures. */
@@ -145,45 +115,6 @@ object IndexStore {
       Dedup.minHashSignatures(newDf, textCol, idCol, meta.shingleN, meta.k, meta.hash))
     Dedup.minHashIncrementalOf(sigN, loadMinHashSignatures(spark, dir),
       meta.k, meta.bands, minAgreement, maxBucket, meta.hash)
-  }
-
-  /** Merge an accepted batch into the index: append its signatures
-    * (history files untouched) and refresh the stats sidecar. IDEMPOTENT
-    * for crash replays: only signatures whose doc id is NOT already
-    * indexed are appended (an anti-join against the signature table —
-    * the same membership discipline as the [[Ingest]] ledger), so a
-    * batch re-merged after a crash between merge and commit is a no-op
-    * instead of a double-append that would inflate bucket counts past
-    * `maxBucket`.
-    * Returns the number of docs actually appended. Single-writer
-    * contract, like every other merge here. */
-  def mergeIntoMinHashIndexIdempotent(batch: DataFrame, textCol: String,
-      idCol: String, dir: String): Long = {
-    val spark = batch.sparkSession
-    val meta = loadMinHashMeta(spark, dir)
-    val fresh = graft.recon.Checkpoints.cut(
-      Dedup.minHashSignatures(batch, textCol, idCol, meta.shingleN, meta.k, meta.hash)
-        .join(loadMinHashSignatures(spark, dir).select(col("doc")),
-          Seq("doc"), "left_anti"),
-      eager = true)
-    val n = fresh.count()
-    if (n > 0) {
-      fresh.write.mode("append").parquet(s"$dir/signatures")
-      refreshMinHashStats(spark, dir, meta)
-    }
-    n
-  }
-
-  /** Rewrite the stats sidecar from the signatures; the caller passes
-    * the meta it already holds, so no meta re-read per write or merge. */
-  private def refreshMinHashStats(spark: SparkSession, dir: String,
-      meta: MinHashMeta): Unit = {
-    replaceDir(
-      Dedup.bandedSignatures(loadMinHashSignatures(spark, dir), meta.k, meta.bands,
-          meta.hash)
-        .groupBy(col("band"), col("band_hash"))
-        .agg(count(lit(1)).as("n")),
-      dir, "bucket_stats")
   }
 
   // ---- embedding sign-LSH index ------------------------------------------
@@ -199,7 +130,6 @@ object IndexStore {
       .write.mode("overwrite").parquet(s"$dir/index")
     writeMeta(spark, dir, "embed_lsh", Map(
       "h" -> h.toString, "id_col" -> idCol, "vec_col" -> vecCol))
-    refreshEmbeddingStats(spark, dir)
   }
 
   def loadEmbeddingMeta(spark: SparkSession, dir: String): EmbedLshMeta = {
@@ -210,9 +140,6 @@ object IndexStore {
   def loadEmbeddingIndex(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/index")
 
-  def loadEmbeddingStats(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/bucket_stats")
-
   /** Probe a NEW vector batch against the persisted index; `h` and the
     * column names come from meta. */
   def embeddingProbe(newDf: DataFrame, dir: String, threshold: Double,
@@ -222,22 +149,6 @@ object IndexStore {
     Dedup.embeddingIncrementalNearDups(newDf, loadEmbeddingIndex(spark, dir),
       meta.idCol, meta.vecCol, threshold, meta.h, maxBucket, cosine)
   }
-
-  /** Merge an accepted vector batch: append bucketed rows, refresh stats. */
-  def mergeIntoEmbeddingIndex(batch: DataFrame, dir: String): Unit = {
-    val spark = batch.sparkSession
-    val meta = loadEmbeddingMeta(spark, dir)
-    Similarity.lshIndex(batch, meta.idCol, meta.vecCol, meta.h)
-      .write.mode("append").parquet(s"$dir/index")
-    refreshEmbeddingStats(spark, dir)
-  }
-
-  private def refreshEmbeddingStats(spark: SparkSession, dir: String): Unit =
-    replaceDir(
-      loadEmbeddingIndex(spark, dir)
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n")),
-      dir, "bucket_stats")
 
   // ---- trained IVF-PQ ANN index ------------------------------------------
 
@@ -310,9 +221,8 @@ object IndexStore {
     * decision — daily ingest never retrains; re-train and rebuild when
     * drift warrants it, the standard IVF-PQ operating posture) and append
     * the coded rows; history code files are immutable, like the minhash
-    * signatures. IDEMPOTENT for crash replays — the same exactly-once
-    * discipline as [[mergeIntoMinHashIndexIdempotent]] and the [[Ingest]]
-    * ledger: only batch ids NOT already in the coded corpus are encoded
+    * signatures. IDEMPOTENT for crash replays: only batch ids NOT
+    * already in the coded corpus are encoded
     * and appended, so a batch re-merged after a crash between merge and
     * commit is a no-op instead of a double-append that would return
     * duplicate neighbors from every probe of the touched cells. The
@@ -338,22 +248,4 @@ object IndexStore {
         .write.mode("append").parquet(s"$dir/codes")
     n
   }
-
-  /** Structured Streaming maintenance of a persisted IVF-PQ index — the
-    * third arm of the lifecycle (build-once / incremental-append /
-    * streaming): every micro-batch of vectors folds in through
-    * [[mergeIntoIvfPqIndexIdempotent]], so foreachBatch's at-least-once
-    * replays append nothing and a probe anywhere in the stream's
-    * lifetime answers exactly as a from-scratch rebuild over the vectors
-    * ingested so far (the contract `sim_ivfpq_index_append` pins for the
-    * batch arm). Encoding always uses the FROZEN centroids/codebook —
-    * retraining is a rebuild decision, never an ingest side effect.
-    * Caller sets checkpoint and trigger; ONE maintenance stream per
-    * index (single-writer contract, like every merge here). */
-  def maintainIvfPq(stream: DataFrame, indexDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      mergeIntoIvfPqIndexIdempotent(batch, indexDir)
-      ()
-    }
 }

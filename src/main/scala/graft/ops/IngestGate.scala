@@ -1,18 +1,16 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
  * Near-duplicate INGEST GATE — the admission step of a rolling 100 TB
  * corpus: each arriving batch of documents is screened against (a) the
- * persisted MinHash index of everything admitted so far and (b) itself,
- * and only novel documents are admitted and indexed. Composes the
- * exactly-once machinery this repo already ships: the [[Ingest]] file
- * ledger (which files form a batch), [[IndexStore]]'s persisted
- * signatures (what the corpus already contains), and
- * [[Dedup.minHashIncrementalOf]]'s banded probe (candidates only from
- * shared LSH buckets, hub buckets capped — never an all-pairs scan).
+ * persisted MinHash index of everything admitted so far and (b) itself.
+ * Composes [[IndexStore]]'s persisted signatures (what the corpus
+ * already contains) and [[Dedup.minHashIncrementalOf]]'s banded probe
+ * (candidates only from shared LSH buckets, hub buckets capped — never
+ * an all-pairs scan).
  *
  * Admission contract (deterministic, order-free within a batch):
  * a document is admitted iff it matches NO indexed document at
@@ -22,18 +20,10 @@ import org.apache.spark.sql.functions._
  * post-hoc clustering passes [[Dedup.connectedComponents]] handle
  * transitive families, the gate's job is cheap triage at ingest).
  *
- * Crash-safety of [[runOnce]], window by window (the ledger commit is
- * the transaction point, all earlier steps are idempotent):
- *   1. decisions are DETERMINISTIC given the batch + the pre-batch index
- *      (the probe excludes the batch's own ids from the seen side, so a
- *      replay after a partial merge recomputes identical decisions);
- *   2. they overwrite a per-batch directory (replay rewrites the same
- *      bytes);
- *   3. the index merge is the anti-join-guarded
- *      [[IndexStore.mergeIntoMinHashIndexIdempotent]] (replay no-op);
- *   4. the ledger commit is LAST — a crash anywhere above replays the
- *      whole batch on the next run; after the commit the files are
- *      never re-read.
+ * Decisions are DETERMINISTIC given the batch and the pre-batch index,
+ * and a replay is bit-identical even when the index already holds the
+ * batch's admitted documents: the probe excludes the batch's own ids
+ * from the seen side.
  */
 object IngestGate {
 
@@ -51,10 +41,10 @@ object IngestGate {
     // in-batch probe
     val sigN = graft.recon.Checkpoints.cut(
       Dedup.minHashSignatures(batch, textCol, idCol, meta.shingleN, meta.k, meta.hash))
-    // exclude the batch's own ids from the seen side: after a crash
-    // BETWEEN merge and ledger commit the index already holds this
-    // batch's admitted docs, and a replayed gate must not report them as
-    // prior-corpus matches (decisions must replay bit-identically)
+    // exclude the batch's own ids from the seen side: when the index
+    // already holds this batch's admitted docs (a replay after they were
+    // merged), the gate must not report them as prior-corpus matches
+    // (decisions must replay bit-identically)
     val sigS = IndexStore.loadMinHashSignatures(spark, indexDir)
       .join(sigN.select(col("doc")), Seq("doc"), "left_anti")
     val crossN = Dedup.minHashIncrementalOf(sigN, sigS, meta.k, meta.bands,
@@ -77,100 +67,4 @@ object IngestGate {
       .withColumn("admitted",
         (col("n_index_matches") === 0L && col("n_batch_matches") === 0L).cast("long"))
   }
-
-  /**
-   * One exactly-once ingest step over a growing directory: ledger-diff
-   * the files, gate the batch, persist decisions to
-   * `outDir/decisions/batch_id=N`, merge ADMITTED documents into the
-   * index, commit the ledger. Returns the batch id processed, or None
-   * when no new files exist. Run from a scheduler or a
-   * `foreachBatch`-style loop — each call is one micro-batch.
-   */
-  def runOnce(spark: SparkSession, dataDir: String, ledgerPath: String,
-      textCol: String, idCol: String, indexDir: String, outDir: String,
-      minAgreement: Double = 0.5d, maxBucket: Int = 100): Option[Long] = {
-    val files = Ingest.newFiles(spark, dataDir, ledgerPath)
-    if (files.isEmpty) return None
-    val batchId = Ingest.ledger(spark, ledgerPath)
-      .agg(coalesce(max(col("batch_id")), lit(-1L))).head().getLong(0) + 1L
-    val batch = Ingest.readBatch(spark, dataDir, files)
-    applyBatch(batch, batchId, textCol, idCol, indexDir, outDir, minAgreement, maxBucket)
-    Ingest.commit(spark, ledgerPath, files, batchId)
-    Some(batchId)
-  }
-
-  /** Gate + persist + merge for ONE batch — the idempotent core shared
-    * by the ledgered [[runOnce]] and the streaming [[maintain]]. */
-  private[graft] def applyBatch(batch: DataFrame, batchId: Long, textCol: String,
-      idCol: String, indexDir: String, outDir: String,
-      minAgreement: Double, maxBucket: Int): Unit = {
-    // EAGER cut: decisions are consumed twice below (write + the admitted
-    // semi-join) and must come from ONE evaluation
-    val decisions = graft.recon.Checkpoints.cut(
-      gateBatch(batch, textCol, idCol, indexDir, minAgreement, maxBucket),
-      eager = true)
-    decisions.write.mode("overwrite")
-      .parquet(s"$outDir/decisions/batch_id=$batchId")
-    val admitted = batch.join(
-      decisions.where(col("admitted") === 1L).select(col(idCol)), Seq(idCol), "left_semi")
-    IndexStore.mergeIntoMinHashIndexIdempotent(admitted, textCol, idCol, indexDir)
-  }
-
-  /**
-   * The Structured Streaming form: gate every micro-batch of a document
-   * STREAM via `foreachBatch` (the same idiom as
-   * [[IncrementalAgg.maintain]]). foreachBatch is AT-LEAST-ONCE; replays
-   * are safe because [[gateBatch]]'s decisions replay bit-identically
-   * (the probe excludes the batch's own ids from the seen side), the
-   * per-batch decisions directory is overwritten, and the index merge is
-   * the anti-join-guarded idempotent one. Caller sets the checkpoint
-   * location and trigger; ONE gate stream per index (single-writer
-   * contract, like every IndexStore merge).
-   *
-   * `ledgerPath` additionally records each micro-batch's input FILES in
-   * the [[Ingest]] ledger (via the at-least-once
-   * [[Ingest.commitIdempotent]] — a replayed foreachBatch re-commits
-   * nothing), the provenance record that outlives the stream checkpoint;
-   * with `compactEvery = n > 0` the stream folds that ledger every n-th
-   * batch through [[Ingest.compactLedger]] — the same crash-safe
-   * write→validate→flip→delete discipline as the batch pipeline, run
-   * from INSIDE foreachBatch so it inherits the stream's single-writer
-   * slot (never concurrent with a commit). A crash in compaction's
-   * flip→delete window leaves duplicate ledger rows; every ledger reader
-   * tolerates them and the next in-stream fold removes them, so the
-   * live stream never stalls on a torn compaction.
-   */
-  def maintain(stream: DataFrame, textCol: String, idCol: String,
-      indexDir: String, outDir: String, minAgreement: Double = 0.5d,
-      maxBucket: Int = 100, ledgerPath: Option[String] = None,
-      compactEvery: Int = 0)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(compactEvery == 0 || ledgerPath.nonEmpty,
-      "compactEvery needs a ledgerPath to compact")
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      applyBatch(batch, batchId, textCol, idCol, indexDir, outDir,
-        minAgreement, maxBucket)
-      ledgerPath.foreach { lp =>
-        val spark = batch.sparkSession
-        // input_file_name(), not Dataset.inputFiles: foreachBatch hands
-        // over the micro-batch behind a plan with no file-listing
-        // relation (inputFiles comes back empty), while the per-row
-        // provenance function still resolves. One distinct over the
-        // (micro-batch-sized) frame; blank = a non-file source, which
-        // simply has no provenance to ledger.
-        val files = batch
-          .select(org.apache.spark.sql.functions.input_file_name().as("f"))
-          .distinct().collect().map(_.getString(0))
-          .filter(_.nonEmpty).toSeq.sorted
-        Ingest.commitIdempotent(spark, lp, files, batchId)
-        if (compactEvery > 0 && (batchId + 1L) % compactEvery == 0L)
-          Ingest.compactLedger(spark, lp)
-      }
-      ()
-    }
-  }
-
-  /** All decisions so far: `(batch_id, idCol, counts, admitted)`. */
-  def decisions(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/decisions")
 }

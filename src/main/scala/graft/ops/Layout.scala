@@ -135,21 +135,6 @@ object Layout {
   }
 
   /**
-   * Cluster a frame for 2-D locality: range-partition on the z-value,
-   * sort within partitions by it. Writing the result gives files whose
-   * footer min/max on BOTH source dimensions are tight — the scan-time
-   * pruning this layout exists for. The range exchange samples the
-   * z-values (one extra pass), which is the intended trade: a one-time
-   * layout cost against every future scan of the table.
-   */
-  def zorderBy(df: DataFrame, x: Column, y: Column, bits: Int,
-      nPartitions: Int): DataFrame =
-    df.withColumn("__z", zValue2(x, y, bits))
-      .repartitionByRange(nPartitions, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-
-  /**
    * Persist `df` BUCKETED (hash-partitioned into `buckets` files, sorted
    * within each) on `keyCols` — the layout that lets every future
    * equi-join or aggregation on those keys skip its shuffle entirely.

@@ -41,23 +41,11 @@ object Linkage {
       wAgreeMilli: Long,
       wDisagreeMilli: Long)
 
-  /** Equi-blocked candidate pairs: columns of `a` prefixed `a_`, of `b`
-    * prefixed `b_`, inner-joined on the (unprefixed) blocking keys.
-    * One shuffle; block population bounds the output. */
-  def blockPairs(a: DataFrame, b: DataFrame, blockCols: Seq[String]): DataFrame = {
-    require(blockCols.nonEmpty, "blocking requires at least one key column")
-    def pref(df: DataFrame, p: String) = {
-      val renamed = df.columns.foldLeft(df)((d, c) =>
-        if (blockCols.contains(c)) d else d.withColumnRenamed(c, s"$p$c"))
-      renamed
-    }
-    pref(a, "a_").join(pref(b, "b_"), blockCols)
-  }
-
-  /** [[blockPairs]] with ALL columns prefixed (`a_`/`b_`) and the join on
-    * `a_key === b_key` — the block keys stay as data on both sides, so
-    * pair frames from DIFFERENT blocking passes are union-compatible
-    * (the shape [[blockPairsMulti]] needs). Still one equi shuffle. */
+  /** Equi-blocked candidate pairs: ALL columns prefixed (`a_`/`b_`) and
+    * the join on `a_key === b_key` — the block keys stay as data on both
+    * sides, so pair frames from DIFFERENT blocking passes are
+    * union-compatible (the shape [[blockPairsMulti]] needs). One equi
+    * shuffle; block population bounds the output. */
   def blockPairsAll(a: DataFrame, b: DataFrame, blockCols: Seq[String]): DataFrame = {
     require(blockCols.nonEmpty, "blocking requires at least one key column")
     val pa = a.columns.foldLeft(a)((d, c) => d.withColumnRenamed(c, s"a_$c"))

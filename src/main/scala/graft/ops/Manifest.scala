@@ -14,11 +14,11 @@ import org.apache.spark.sql.functions._
  * through the driver); pruning intersects the query range with each
  * file's [min, max] envelope and reads only the overlapping files.
  *
- * This composes with [[Layout.zorderBy]] / range layout: stats are only
- * selective when the write layout clusters the stat columns — the
- * manifest of a randomly-laid-out table has every file spanning the
- * full key range and prunes nothing. Build order at scale: layout,
- * then manifest, then skip-scan.
+ * This composes with a z-order ([[Layout.zValue2]]) or range layout:
+ * stats are only selective when the write layout clusters the stat
+ * columns — the manifest of a randomly-laid-out table has every file
+ * spanning the full key range and prunes nothing. Build order at
+ * scale: layout, then manifest, then skip-scan.
  *
  * Driver-size contract: the PRUNED file list is collected to the driver
  * (that is how a file-source scan is specified); the manifest itself

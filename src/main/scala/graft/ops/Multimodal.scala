@@ -554,15 +554,6 @@ object Multimodal {
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  /**
-   * Class-seeded real media: every id carries an actual PNG whose
-   * dimensions AND pixel pattern depend only on `id % classes` — ids in
-   * one class ship byte-identical images, ids in different classes ship
-   * visually distinct ones (MultimodalDecodeSpec pins the classes'
-   * aHashes pairwise FAR apart). The generator behind the real-pixel
-   * near-dup oracle: which pairs a correct decoder+hash must emit is
-   * pure id arithmetic.
-   */
   /** Per-JVM cache of the class payloads: a class's image is a pure
     * function of its class index, so each executor encodes it ONCE —
     * |classes| encodes per JVM, not |rows|. */
@@ -573,6 +564,15 @@ object Multimodal {
     classPayloadCache.computeIfAbsent(c,
       k => patternPngBytes(64 + k % 29, 64 + k % 31, k))
 
+  /**
+   * Class-seeded real media: every id carries an actual PNG whose
+   * dimensions AND pixel pattern depend only on `id % classes` — ids in
+   * one class ship byte-identical images, ids in different classes ship
+   * visually distinct ones (MultimodalDecodeSpec pins the classes'
+   * aHashes pairwise FAR apart). The generator behind the real-pixel
+   * near-dup oracle: which pairs a correct decoder+hash must emit is
+   * pure id arithmetic.
+   */
   def classedMedia(df: DataFrame, idCol: String, classes: Int): Dataset[MediaRecord] = {
     require(classes >= 1, s"classes must be >= 1: $classes")
     val spark = df.sparkSession

@@ -208,28 +208,6 @@ object Privacy {
         expr("(1000 * n_suppressed_rows) div n_rows"))
   }
 
-  /** Enforcement half: keep only rows whose class passes
-    * [[lDiversityAudit]] at `l` — the suppression a release applies
-    * after the audit names the failing classes. Broadcast semi-join on
-    * the class tuple (class table is distinct-quasi-sized). */
-  def enforceLDiversity(df: DataFrame, quasiCols: Seq[String],
-      sensitiveCol: String, l: Int): DataFrame =
-    df.join(
-      broadcast(lDiversityAudit(df, quasiCols, sensitiveCol, l)
-        .where(col("diverse") === 1L).select(quasiCols.map(col): _*)),
-      quasiCols, "left_semi")
-
-  /**
-   * Right-to-erasure propagation: drop every row of `df` keyed by an
-   * erased subject. One anti-join on the subject key — broadcast when
-   * the deletion list is list-sized (it is, by nature), so the 100 TB
-   * fact table pays a map-side filter, no shuffle.
-   */
-  def erase(df: DataFrame, keyCol: String, subjects: DataFrame,
-      subjectCol: String): DataFrame =
-    df.join(broadcast(subjects.select(col(subjectCol).as(keyCol)).distinct()),
-      Seq(keyCol), "left_anti")
-
   /**
    * The audit half of erasure: per fact table, how many rows existed
    * and how many the deletion list claims — the evidence row a

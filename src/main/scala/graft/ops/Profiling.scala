@@ -36,23 +36,6 @@ object Profiling {
   }
 
   /**
-   * Exact concentration profile of the per-key row distribution, one row:
-   * Gini coefficient, top-decile share, and max single-key share, all in
-   * exact milli units — the "is this workload hot-keyed" dashboard that
-   * complements [[keySkew]]'s top-N listing with whole-distribution
-   * numbers. Gini uses the sorted-rank identity
-   * G = (2·Σ i·x_i − (n+1)·Σ x_i) / (n·Σ x_i) over ascending (count, key)
-   * order; the key columns complete the total order so ranks (and hence
-   * the exact integer result) are layout-independent and match any other
-   * engine ranking the same way. Ranks come from
-   * [[graft.recon.Sources.withRowIndexRanged]] (range-partitioned
-   * per-partition row_number + partition-count offsets), so no
-   * single-partition window ever touches the per-key frame; the rank
-   * moment goes through DECIMAL(38,0) so Σ i·x_i cannot overflow at any
-   * plausible key cardinality. The two aggregates over the ranked frame
-   * reduce to one row each; `tot` is broadcast.
-   */
-  /**
    * Contingency audit of two categorical columns: every (a, b) cell —
    * ZERO cells included, via a join of the two (small) margin frames —
    * with its observed count, expected count under independence in
@@ -112,6 +95,23 @@ object Profiling {
       .crossJoin(broadcast(chi2))
   }
 
+  /**
+   * Exact concentration profile of the per-key row distribution, one row:
+   * Gini coefficient, top-decile share, and max single-key share, all in
+   * exact milli units — the "is this workload hot-keyed" dashboard that
+   * complements [[keySkew]]'s top-N listing with whole-distribution
+   * numbers. Gini uses the sorted-rank identity
+   * G = (2·Σ i·x_i − (n+1)·Σ x_i) / (n·Σ x_i) over ascending (count, key)
+   * order; the key columns complete the total order so ranks (and hence
+   * the exact integer result) are layout-independent and match any other
+   * engine ranking the same way. Ranks come from
+   * [[graft.recon.Sources.withRowIndexRanged]] (range-partitioned
+   * per-partition row_number + partition-count offsets), so no
+   * single-partition window ever touches the per-key frame; the rank
+   * moment goes through DECIMAL(38,0) so Σ i·x_i cannot overflow at any
+   * plausible key cardinality. The two aggregates over the ranked frame
+   * reduce to one row each; `tot` is broadcast.
+   */
   def concentration(df: DataFrame, keys: Seq[String]): DataFrame = {
     require(keys.nonEmpty, "concentration: need at least one key column")
     val counts = df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n"))

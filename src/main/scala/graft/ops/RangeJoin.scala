@@ -18,10 +18,6 @@ import org.apache.spark.sql.functions._
  */
 object RangeJoin {
 
-  /**
-   * Candidate-complete pairs within `window` of each other, every pair
-   * exactly once. Columns of both inputs must be disjoint.
-   */
   /** Exact integral floor division for bucket ids. `floor(col / w)` is
     * double-precision division — for |ts| > 2^53 (nanosecond-epoch
     * timestamps) the quotient loses ulps and rows land in the wrong
@@ -32,6 +28,10 @@ object RangeJoin {
   private def floorBucket(ts: Column, window: Long): Column =
     call_function("div", ts - pmod(ts, lit(window)), lit(window))
 
+  /**
+   * Candidate-complete pairs within `window` of each other, every pair
+   * exactly once. Columns of both inputs must be disjoint.
+   */
   def withinWindow(left: DataFrame, right: DataFrame,
       leftTs: String, rightTs: String, window: Long): DataFrame = {
     require(window > 0, "window must be positive")

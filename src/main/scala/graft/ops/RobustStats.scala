@@ -67,9 +67,10 @@ object RobustStats {
    * one fixed-shape double expression over those exact integers.
    * Division and multiplication are IEEE-deterministic, and `sqrt` is
    * CORRECTLY ROUNDED by IEEE-754 (unlike ln/pow, which are
-   * libm-specific — see [[Sketches]] on why hllCorrected is not
-   * oracle-checked), so both engines produce the same bits. Inputs
-   * must already be integral (cents/milli — the caller's scaling).
+   * libm-specific — see [[Sketches]] on why the small-range HLL
+   * correction is not oracle-checked), so both engines produce the
+   * same bits. Inputs must already be integral (cents/milli — the
+   * caller's scaling).
    * Null-complete rows only: pairs with either side null are excluded
    * from every moment (the standard pairwise-complete contract).
    */

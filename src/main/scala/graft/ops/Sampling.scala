@@ -188,31 +188,6 @@ object Sampling {
   }
 
   /**
-   * Temperature-flattened mixture (the T5 multilingual recipe): target
-   * proportions are computed IN-PLAN from the stratum counts,
-   * `w_s ∝ n_s^α` with α fixed at 1/2 — flattening the natural
-   * distribution toward balance without anyone supplying weights. With
-   * the same no-upsampling scale as [[mixtureResample]] (`C = min
-   * n_s/w_s`) this reduces to: the smallest stratum keeps everything,
-   * every other stratum keeps `sqrt(n_min / n_s)` of its rows, so the
-   * output mixture is proportional to `sqrt(n_s)` exactly.
-   *
-   * α is FIXED at 1/2 deliberately: `sqrt` is correctly rounded by
-   * IEEE-754 (a language-level guarantee), while a general `pow(n,α)`
-   * is libm-specific in its last ulp — at a threshold boundary that one
-   * ulp flips membership of real rows. To be precise about what
-   * reproducibility rests on: correctly-rounded `sqrt` alone doesn't
-   * make the THRESHOLD bit-exact — it's that both engines evaluate the
-   * same `floor(w·C/n·2^60)` expression over the same doubles with the
-   * same correctly-rounded `*`, `/`, and `sqrt` in the same order, so
-   * every intermediate (and the floor) is bit-identical. Any mirror
-   * that re-associates the arithmetic loses that guarantee even with a
-   * perfect sqrt. Other temperatures belong to
-   * [[mixtureResample]] with driver-computed weights. Same cost shape:
-   * tiny count aggregate + one-row scale, broadcast onto the per-row
-   * 60-bit hash gate; two passes over the corpus.
-   */
-  /**
    * Water-filling token-budget allocation: split a token budget of
    * `budgetMilli/1000` of the corpus total across strata, each stratum
    * capped at its own token count — the budget-per-domain step of
@@ -379,6 +354,31 @@ object Sampling {
       .drop("__thr")
   }
 
+  /**
+   * Temperature-flattened mixture (the T5 multilingual recipe): target
+   * proportions are computed IN-PLAN from the stratum counts,
+   * `w_s ∝ n_s^α` with α fixed at 1/2 — flattening the natural
+   * distribution toward balance without anyone supplying weights. With
+   * the same no-upsampling scale as [[mixtureResample]] (`C = min
+   * n_s/w_s`) this reduces to: the smallest stratum keeps everything,
+   * every other stratum keeps `sqrt(n_min / n_s)` of its rows, so the
+   * output mixture is proportional to `sqrt(n_s)` exactly.
+   *
+   * α is FIXED at 1/2 deliberately: `sqrt` is correctly rounded by
+   * IEEE-754 (a language-level guarantee), while a general `pow(n,α)`
+   * is libm-specific in its last ulp — at a threshold boundary that one
+   * ulp flips membership of real rows. To be precise about what
+   * reproducibility rests on: correctly-rounded `sqrt` alone doesn't
+   * make the THRESHOLD bit-exact — it's that both engines evaluate the
+   * same `floor(w·C/n·2^60)` expression over the same doubles with the
+   * same correctly-rounded `*`, `/`, and `sqrt` in the same order, so
+   * every intermediate (and the floor) is bit-identical. Any mirror
+   * that re-associates the arithmetic loses that guarantee even with a
+   * perfect sqrt. Other temperatures belong to
+   * [[mixtureResample]] with driver-computed weights. Same cost shape:
+   * tiny count aggregate + one-row scale, broadcast onto the per-row
+   * 60-bit hash gate; two passes over the corpus.
+   */
   def temperatureResample(df: DataFrame, keyCol: String, strataCol: String): DataFrame = {
     val counts = df.groupBy(col(strataCol)).agg(count(lit(1)).as("__n"))
       .withColumn("__w", sqrt(col("__n").cast("double")))

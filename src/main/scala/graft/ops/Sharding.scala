@@ -174,29 +174,6 @@ object Sharding {
   }
 
   /**
-   * Export the shuffled corpus: one directory per shard
-   * (`shard=<i>/part-*`), rows inside each shard file in permutation
-   * order. Hash `repartition(N, shard)` — not `repartitionByRange`, whose
-   * boundary-sampling job re-evaluates the whole upstream plan (an extra
-   * full corpus pass at the 100 TB tier) for no correctness gain here: a
-   * task may hold several shards under either scheme, so the
-   * within-partition sort leads with `shard` — that both groups each
-   * shard's rows contiguously for the partitioned writer (satisfying its
-   * required partition-column ordering, so Spark injects no extra sort)
-   * and makes each shard file's row order the permutation order by our
-   * own sort, not a write-path implementation detail. The writer never
-   * needs a global sort, and the partitioned write splits co-located
-   * shards into their own directories regardless of task assignment.
-   */
-  def writeShards(df: DataFrame, keyCol: String, nShards: Int, seed: Long,
-      path: String): Unit =
-    assignShards(df, keyCol, nShards, seed)
-      .repartition(nShards, col("shard"))
-      .sortWithinPartitions(col("shard"), col("__order"), col(keyCol))
-      .drop("__order")
-      .write.mode("overwrite").partitionBy("shard").parquet(path)
-
-  /**
    * EXACT range-shard boundaries over an orderable integer key: the k−1
    * split points `b_1 ≤ … ≤ b_{k−1}` where `b_i` is the `ceil(i·n/k)`-th
    * smallest key value (duplicates counted), so shard `i` holds the keys

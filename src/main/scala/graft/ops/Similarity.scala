@@ -443,22 +443,13 @@ object Similarity {
   }
 
   /**
-   * IVF (inverted-file) coarse quantizer index: centroids are a
-   * deterministic sample of the corpus (every `corpusSize/nCentroids`-th
-   * id — no RNG, reproducible on any layout; swap in k-means centroids
-   * when a trained codebook exists). Every vector is assigned to its
-   * nearest centroid via a broadcast of the (small) centroid set + the
-   * codegen'd float kernel, `min_by` picking the best — one pass over the
-   * corpus, no corpus shuffle until the groupBy on centroid id.
-   * Returns (idCol, vecCol, centroid_id).
+   * IVF (inverted-file) coarse quantizer index against an explicit
+   * centroid set (centroid_id, cv) — a trained codebook
+   * ([[kmeansCentroids]]) or the deterministic every-`modulus`-th sample.
+   * Every vector is assigned to its nearest centroid via a broadcast of
+   * the (small) centroid set + the codegen'd float kernel — one pass over
+   * the corpus, no corpus shuffle. Returns (idCol, vecCol, centroid_id).
    */
-  def ivfIndex(df: DataFrame, idCol: String, vecCol: String, nCentroids: Int,
-      modulus: Long): DataFrame =
-    ivfIndexWith(df, idCol, vecCol, centroids(df, idCol, vecCol, nCentroids, modulus))
-
-  /** IVF index against an EXPLICIT centroid set (centroid_id, cv) — the
-    * hook for a trained codebook ([[kmeansCentroids]]) instead of the
-    * deterministic sample. */
   def ivfIndexWith(df: DataFrame, idCol: String, vecCol: String, cents: DataFrame): DataFrame = {
     // an empty codebook would broadcast an empty array whose argmax is a
     // silent null centroid_id on every row — fail loudly instead (the
@@ -483,20 +474,6 @@ object Similarity {
       .drop("__cents")
   }
 
-  /**
-   * Distributed Lloyd's k-means over an embedding column — trains the IVF
-   * codebook when a better-than-sampled one is wanted. Assignment uses
-   * the DOT metric (the same metric the IVF search probes with — i.e.
-   * spherical k-means for normalized embeddings). Initialization is
-   * the deterministic every-`modulus`-th sample (reproducible, no RNG);
-   * each iteration is (a) the shuffle-free broadcast-argmax assignment of
-   * [[ivfIndexWith]] and (b) an element-wise mean per cluster via a
-   * posexplode + (cluster, dim) aggregation — the only shuffle, carrying
-   * (cluster, dim, partial sum) after map-side combine. Clusters that
-   * lose all members keep their previous centroid. Returns
-   * (centroid_id, cv) with centroid ids 0..k-1 (re-labeled from the
-   * seeds, stable across iterations).
-   */
   /** Trainer iteration boundary: codebooks are BROADCAST-SIZED by
     * contract (k·dim floats — the artifact [[IndexStore]] writes
     * `coalesce(1)`), so each Lloyd round collects the new centroid rows
@@ -513,6 +490,20 @@ object Similarity {
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
+  /**
+   * Distributed Lloyd's k-means over an embedding column — trains the IVF
+   * codebook when a better-than-sampled one is wanted. Assignment uses
+   * the DOT metric (the same metric the IVF search probes with — i.e.
+   * spherical k-means for normalized embeddings). Initialization is
+   * the deterministic every-`modulus`-th sample (reproducible, no RNG);
+   * each iteration is (a) the shuffle-free broadcast-argmax assignment of
+   * [[ivfIndexWith]] and (b) an element-wise mean per cluster via a
+   * posexplode + (cluster, dim) aggregation — the only shuffle, carrying
+   * (cluster, dim, partial sum) after map-side combine. Clusters that
+   * lose all members keep their previous centroid. Returns
+   * (centroid_id, cv) with centroid ids 0..k-1 (re-labeled from the
+   * seeds, stable across iterations).
+   */
   def kmeansCentroids(df: DataFrame, idCol: String, vecCol: String, k: Int,
       iters: Int, modulus: Long): DataFrame = {
     val spark = df.sparkSession
@@ -547,11 +538,6 @@ object Similarity {
     local(spark, centRows, schema)
   }
 
-  /**
-   * IVF ANN top-k: search only vectors sharing the query's `nprobe`
-   * closest centroid cells. The cell join shuffles on centroid_id —
-   * bounded fan-out, no N×Q scan. Recall grows with nprobe.
-   */
   /** Deterministic sampled centroid set: every `modulus`-th id, first
     * `nCentroids` BY ID ORDER — a bare `limit` would be partition-layout-
     * dependent, which breaks reproducibility (and the oracle). */
@@ -562,6 +548,11 @@ object Similarity {
       .orderBy(col("centroid_id"))
       .limit(nCentroids)
 
+  /**
+   * IVF ANN top-k: search only vectors sharing the query's `nprobe`
+   * closest centroid cells. The cell join shuffles on centroid_id —
+   * bounded fan-out, no N×Q scan. Recall grows with nprobe.
+   */
   def ivfTopK(df: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       k: Int, nCentroids: Int, modulus: Long, nprobe: Int = 2): DataFrame =
     ivfTopKWith(df, queries, idCol, vecCol, k,

@@ -29,8 +29,8 @@ import org.apache.spark.sql.functions._
  * no overflow), so the only float op is one literal-by-integer division
  * — bit-identical across IEEE-754 engines. The small-range (linear
  * counting) correction needs `ln`, whose last ulp is libm-specific, so
- * the correction lives in [[hllCorrected]] for callers and specs; the
- * oracle-checked surface is registers + exact scaled sum + raw estimate.
+ * it is left to callers; the oracle-checked surface is registers +
+ * exact scaled sum + raw estimate.
  */
 object Sketches {
 
@@ -48,10 +48,8 @@ object Sketches {
     alpha * M * M * math.pow(2.0, 55)
   }
 
-  /** The (bucket, rho) expression pair of one value — the single
-    * definition both the batch register builder and the streaming twin
-    * ([[graft.streaming.EventPipeline.hllRegistersStream]]) aggregate
-    * over, so the two paths cannot drift. */
+  /** The (bucket, rho) expression pair of one value, which the register
+    * builders aggregate over. */
   def hllBucketRho(valueCol: Column): (Column, Column) = {
     val h = Sampling.keyHash(valueCol)
     val rest = shiftright(h, P)
@@ -111,17 +109,6 @@ object Sketches {
   /** [[hllEstimateFromRegisters]] over a single frame's registers. */
   def hllEstimate(df: DataFrame, strataCol: String, valueCol: Column): DataFrame =
     hllEstimateFromRegisters(hllRegisters(df, strataCol, valueCol), strataCol)
-
-  /** Standard small-range correction (linear counting when the raw
-    * estimate is under 2.5·m and empty registers remain). Uses `ln`, so
-    * it is spec-tested (error bound vs exact distinct) rather than
-    * hash-checked. */
-  def hllCorrected(df: DataFrame, strataCol: String, valueCol: Column): DataFrame =
-    hllEstimate(df, strataCol, valueCol)
-      .withColumn("estimate",
-        when(col("raw_estimate") <= 2.5 * M && col("n_zero_registers") > 0,
-          lit(M.toDouble) * log(lit(M.toDouble) / col("n_zero_registers").cast("double")))
-          .otherwise(col("raw_estimate")))
 
   /**
    * Sliding-window distinct estimate: registers are built ONCE per

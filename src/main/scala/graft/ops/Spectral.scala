@@ -125,9 +125,6 @@ object Spectral {
   private def l1(a: Array[JBD]): JBI =
     a.iterator.map(_.toBigInteger.abs).foldLeft(BiZero)(_.add(_))
 
-  /** `iters` power-iteration rounds from the all-ones start. Returns the
-    * final unnormalized iterate and the rescaled vector that produced it
-    * (None when iters = 1: the implicit all-ones v0). */
   /** `iters` power rounds from the all-ones start; the trace rides the
     * first pass (it is v-independent). Returns (final unnormalized
     * iterate, the rescaled v that produced it — None when iters = 1 —

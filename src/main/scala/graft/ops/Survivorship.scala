@@ -43,22 +43,11 @@ object Survivorship {
 
   /** One golden row per `keyCol`: for each of `valueCols` the value of
     * the highest-`rank` record where that field is non-null (null only
-    * if ALL contributors are null), plus `n_records` merged. */
-  def golden(records: DataFrame, keyCol: String, rank: Column,
-      valueCols: Seq[String]): DataFrame = {
-    require(valueCols.nonEmpty, "no value columns")
-    records.groupBy(col(keyCol))
-      .agg(max_by(col(valueCols.head), when(col(valueCols.head).isNotNull, rank))
-             .as(valueCols.head),
-        valueCols.tail.map(c =>
-          max_by(col(c), when(col(c).isNotNull, rank)).as(c)) :+
-          count(lit(1)).as("n_records"): _*)
-  }
-
-  /** [[golden]] plus per-field provenance: for each value column an
-    * extra `<c>_src` column carrying `sourceCol` of the record that
-    * supplied the surviving value — the audit trail a data steward
-    * asks for first ("where did this phone number come from?"). */
+    * if ALL contributors are null), plus `n_records` merged, plus
+    * per-field provenance: for each value column an extra `<c>_src`
+    * column carrying `sourceCol` of the record that supplied the
+    * surviving value — the audit trail a data steward asks for first
+    * ("where did this phone number come from?"). */
   def goldenWithProvenance(records: DataFrame, keyCol: String, rank: Column,
       valueCols: Seq[String], sourceCol: String): DataFrame = {
     require(valueCols.nonEmpty, "no value columns")

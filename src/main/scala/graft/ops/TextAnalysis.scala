@@ -282,20 +282,6 @@ object TextAnalysis {
   val GopherStopwords: Seq[String] =
     Seq("the", "be", "to", "of", "and", "that", "have", "with")
 
-  /**
-   * Gopher/C4-style heuristic document filters (Rae et al. 2021 §A1.1,
-   * Raffel et al. 2020 §2.2 — re-derived, not copied): per-document
-   * structural signals and one conjunctive `keep` verdict. Everything is
-   * a per-row projection over codegen'd built-ins — no UDF, no shuffle,
-   * linear at any scale — and every float is a ratio of exact integers,
-   * so the DuckDB oracle reproduces each column bit for bit.
-   *
-   * Signals: word count and mean word length (bounds catch OCR noise and
-   * minified blobs), fraction of bullet-point lines and of
-   * ellipsis-terminated lines (boilerplate lists / truncated crawls),
-   * `#`/`…` symbol-per-word ratio (markup residue), and presence of ≥ 2
-   * distinct common stopwords (a cheap "is this prose" gate).
-   */
   /** Sorted token n-grams of `t` (space-joined); [] when fewer than
     * `n` tokens. Sorting is the trick that lets duplicate statistics
     * fall out of adjacent-run lengths with NO per-doc group-by — see
@@ -512,6 +498,20 @@ object TextAnalysis {
       .limit(topK)
   }
 
+  /**
+   * Gopher/C4-style heuristic document filters (Rae et al. 2021 §A1.1,
+   * Raffel et al. 2020 §2.2 — re-derived, not copied): per-document
+   * structural signals and one conjunctive `keep` verdict. Everything is
+   * a per-row projection over codegen'd built-ins — no UDF, no shuffle,
+   * linear at any scale — and every float is a ratio of exact integers,
+   * so the DuckDB oracle reproduces each column bit for bit.
+   *
+   * Signals: word count and mean word length (bounds catch OCR noise and
+   * minified blobs), fraction of bullet-point lines and of
+   * ellipsis-terminated lines (boilerplate lists / truncated crawls),
+   * `#`/`…` symbol-per-word ratio (markup residue), and presence of ≥ 2
+   * distinct common stopwords (a cheap "is this prose" gate).
+   */
   def gopherFilters(df: DataFrame, textCol: String, idCol: String,
       minWords: Int = 10, maxWords: Int = 1000000): DataFrame = {
     val t = col(textCol)

@@ -144,20 +144,6 @@ object Vocab {
   }
 
   /**
-   * Exact greedy BPE segmentation via the native codegen kernel
-   * (`graft.functions.BpeSegment` → `TextOps.bpeApply`): the canonical
-   * sequential leftmost-first semantics for ANY merge list, including
-   * the self-merges [[segment]] rejects — the portable-vs-native
-   * duality this repo uses everywhere (md5 vs xxhash64 fingerprints):
-   * [[segment]] is oracle-mirrorable SQL, this is the full-semantics
-   * fast path, spec-checked against a reference implementation and
-   * against [[segment]] on their shared domain. Returns array<string>.
-   */
-  def segmentExact(word: org.apache.spark.sql.Column,
-      merges: Seq[(String, String)]): org.apache.spark.sql.Column =
-    graft.functions.TextFunctions.bpe_segment(word, merges)
-
-  /**
    * Per-document subtoken accounting under a FIXED merge list — the
    * "how many tokens will this corpus cost under my learned vocab"
    * estimator. Output: `(idCol, n_words, n_chars, n_subtokens)` (docs

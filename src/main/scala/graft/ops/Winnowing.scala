@@ -87,14 +87,6 @@ object Winnowing {
       .select(col(idCol), col("n_grams"), col("n_fp"), col("fp_milli"))
 
   /**
-   * Cross-document overlap: pairs sharing at least `minShared` distinct
-   * winnowed hashes, hub hashes (selected in more than `maxDf`
-   * documents) dropped before pairing — a fingerprint every document
-   * carries identifies nothing and would quadratically explode the
-   * bucket join, exactly the [[SetSimilarity]]/[[Dedup]] cap rationale.
-   * Output: `(id_a, id_b, n_shared)`.
-   */
-  /**
    * Winnow-based benchmark contamination: per corpus document, how many
    * of its winnowed fingerprints appear among the BENCHMARK's winnowed
    * fingerprints. The cheap arm of [[Decontaminate.contaminationStats]]:
@@ -120,6 +112,14 @@ object Winnowing {
       .withColumn("hit_milli", expr("(n_hit_fp * 1000) div n_fp"))
   }
 
+  /**
+   * Cross-document overlap: pairs sharing at least `minShared` distinct
+   * winnowed hashes, hub hashes (selected in more than `maxDf`
+   * documents) dropped before pairing — a fingerprint every document
+   * carries identifies nothing and would quadratically explode the
+   * bucket join, exactly the [[SetSimilarity]]/[[Dedup]] cap rationale.
+   * Output: `(id_a, id_b, n_shared)`.
+   */
   def overlapPairs(df: DataFrame, textCol: String, idCol: String,
       k: Int = 5, w: Int = 4, minShared: Int = 2, maxDf: Int = 64): DataFrame = {
     val fp = fingerprints(df, textCol, idCol, k, w)

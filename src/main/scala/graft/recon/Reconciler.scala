@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
  * Contract: the internal ("a") and external ("b") DataFrames carry disjoint
  * column names (external columns are `ext_`-prefixed at source prep,
  * reference: src/data_extractor.py:104-110), so joins never collide and no
- * key coalescing happens.
+ * key coalescing happens; [[reconcilePass]] checks it.
  */
 final class Reconciler(val conf: ReconConfig) extends Serializable {
   import Reconciler.keepFirstBy
@@ -198,8 +198,10 @@ final class Reconciler(val conf: ReconConfig) extends Serializable {
    * (min_by + max_by + count per internal id, map-side combined) — not a
    * keep-first window plus a duplicate probe plus a keep-last pass, which
    * would re-execute the match join three times.
-   */
-  /**
+   *
+   * `a` and `b` must carry disjoint column names; a shared name fails
+   * here, on the driver, before any job runs.
+   *
    * @param truncate materialize the first/last aggregation and the
    *   pre-tolerance remanents once ([[Checkpoints.cut]]). The aggregation
    *   feeds the matched output AND the displaced-external branch, and each
@@ -209,6 +211,9 @@ final class Reconciler(val conf: ReconConfig) extends Serializable {
    */
   def reconcilePass(a: DataFrame, b: DataFrame, extOrder: Column,
       truncate: Boolean = false): ReconResult = {
+    val shared = a.columns.intersect(b.columns)
+    require(shared.isEmpty, "internal and external frames must carry disjoint column " +
+      s"names; shared: ${shared.mkString(", ")}")
     def cut(df: DataFrame): DataFrame = if (truncate) Checkpoints.cut(df) else df
     val exact = matchRecords(a, b)
     val others = exact.columns.filterNot(_ == conf.idField)

@@ -63,33 +63,6 @@ object Sinks {
         .unionByName(existing, allowMissingColumns = true)
 
   /**
-   * Bucketed table write: pre-shuffles rows into `numBuckets` by the join
-   * key and records the layout in the catalog, so every later equi-join or
-   * aggregation on that key runs with NO exchange — the 100 TB answer to
-   * "this join shuffles both sides every run". Pair with an identically
-   * bucketed other side for a fully co-located sort-merge join.
-   */
-  def writeBucketed(df: DataFrame, table: String, path: String,
-      bucketKeys: Seq[String], numBuckets: Int): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .option("path", path)
-      .bucketBy(numBuckets, bucketKeys.head, bucketKeys.tail: _*)
-      .sortBy(bucketKeys.head, bucketKeys.tail: _*)
-      .format("parquet")
-      .saveAsTable(table)
-
-  /**
-   * Hive-style partitioned parquet write: one directory per value of
-   * `partCols` (e.g. processing date). Readers filtering on a partition
-   * column prune whole directories at planning time (`PartitionFilters` in
-   * the scan — zero I/O for excluded partitions), which is how a 100 TB
-   * table serves day-window queries (the reference's TIMESTAMP_FROM/TO
-   * windows, second_conciliate.py:57-58) without touching the other days.
-   */
-  def writePartitioned(df: DataFrame, path: String, partCols: Seq[String]): Unit =
-    df.write.mode(SaveMode.Overwrite).partitionBy(partCols: _*).parquet(path)
-
-  /**
    * One-row run summary (A1/S9, reference: second_conciliate.py:450-483):
    * sums + counts of the matched and unmatched sets, as a single appendable
    * row. Aggregation is map-side partial + single reduce — no full shuffle.

@@ -177,44 +177,6 @@ object Sources {
   }
 
   /**
-   * Normalize MongoDB extended-JSON wrapper structs to scalar columns:
-   * `{"$numberLong": "123"}` → long, `{"$oid": "..."}` → string,
-   * `{"$numberInt"|"$numberDouble"|"$numberDecimal": ...}` → numeric,
-   * `{"$date": {"$numberLong": ms}}` → epoch-ms long. The reference's raw
-   * Mongo dumps use this encoding (e.g. `create_timestamp: {"$numberLong":
-   * ...}` in files/2024-05-01_sales_v_for_test.json; typed at
-   * src/expression_builder.py:35-38) — apply after `spark.read.json` on an
-   * export, before [[typedScan]]-style projection. Pure projection: no
-   * shuffle, stays in codegen, scales with splits.
-   */
-  def normalizeExtendedJson(df: DataFrame): DataFrame = {
-    def onlyField(s: StructType, name: String) = s.fieldNames.sameElements(Array(name))
-    val cols = df.schema.fields.map { f =>
-      f.dataType match {
-        case s: StructType if onlyField(s, "$numberLong") =>
-          col(f.name).getField("$numberLong").cast(LongType).as(f.name)
-        case s: StructType if onlyField(s, "$numberInt") =>
-          col(f.name).getField("$numberInt").cast(IntegerType).as(f.name)
-        case s: StructType if onlyField(s, "$numberDouble") =>
-          col(f.name).getField("$numberDouble").cast(DoubleType).as(f.name)
-        case s: StructType if onlyField(s, "$numberDecimal") =>
-          col(f.name).getField("$numberDecimal").cast(DecimalType(38, 10)).as(f.name)
-        case s: StructType if onlyField(s, "$oid") =>
-          col(f.name).getField("$oid").as(f.name)
-        case s: StructType if onlyField(s, "$date") =>
-          (s.fields.head.dataType match {
-            case d: StructType if onlyField(d, "$numberLong") =>
-              col(f.name).getField("$date").getField("$numberLong").cast(LongType)
-            case _ =>
-              unix_millis(col(f.name).getField("$date").cast(TimestampType))
-          }).as(f.name)
-        case _ => col(f.name)
-      }
-    }
-    df.select(cols.toIndexedSeq: _*)
-  }
-
-  /**
    * Remanent re-read (S2, reference: `$lookup`+`$unwind` at
    * src/data_extractor.py:52-83): prior-run REMANENT rows joined back to the
    * full transaction table on the id. The 1:1 `$lookup`+`$unwind` collapses

@@ -1,74 +1,19 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-
-final case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
-    event_type: String, value: Double)
-
-/** Streaming inter-arrival moment state: events not yet final (over the
-  * watermark), the last EMITTED event time in micros (Long.MinValue =
-  * none), the gap count, Σgap (micros, long — per-entity micros fit),
-  * and Σgap² carried as a decimal STRING (gap² overflows int64 at
-  * realistic spans; a string field keeps the product encoder simple and
-  * the arithmetic exact via BigInt at update time). */
-final case class GapState(pending: Seq[Event], lastUs: Long, n: Long,
-    sg: Long, sg2: String)
-
-/** One emitted regularity reading — the streaming twin of
-  * [[graft.ops.Profiling.arrivalRegularity]]'s CV² (the distinct-gap
-  * fraction needs unbounded state and stays batch-only). */
-final case class GapMoments(user_id: Long, n_gaps: Long, cv2_milli: Option[Long])
-
-final case class SessionSummary(user_id: Long, session_start: Long,
-    session_end: Long, n_events: Long, total_value: Double)
-
-final case class SessionState(start: Long, last: Long, n: Long, total: Double)
-
-/** Per-user funnel progress: first-touch epoch-ms per stage
-  * (`Long.MaxValue` = not seen) — order-independent, so batch and
-  * streaming replays of the same events converge to the same state. */
-final case class FunnelState(signup: Long, click: Long, purchase: Long)
-
-/** Watermark-ordered rolling-feature state: events not yet final
-  * (their event time is still over the watermark), the last
-  * `window−1` EMITTED cents (oldest first), the last emitted event
-  * time (`Long.MinValue` = none yet) and the per-user sequence count. */
-final case class RollingState(pending: Seq[Event], tail: Seq[Long],
-    lastMs: Long, seq: Long)
-
-/** One emitted rolling-feature row — the streaming twin of
-  * [[graft.ops.History.rollingFeatures]]'s output (ts as epoch-ms). */
-final case class RollingFeature(user_id: Long, event_id: Long, ms: Long,
-    value_cents: Long, prev_cents: Option[Long], roll_cents: Long,
-    gap_ms: Option[Long], seq: Long)
-
-/** stage: 0 = no signup, 1 = signed up, 2 = clicked after signup,
-  * 3 = purchased after that click. */
-final case class FunnelUserStage(user_id: Long, stage: Int)
-
-/** Watermark-ordered per-user cap state: events not yet final plus the
-  * SATURATING emitted counter — once a user hits the cap the pending
-  * buffer is dropped, so a hot key's state is O(1), not O(events). */
-final case class CapState(pending: Seq[Event], n: Long)
-
-/** One event kept by the per-user cap (ts as epoch-ms). */
-final case class CappedEvent(user_id: Long, event_id: Long, ms: Long,
-    keep_rank: Long)
 
 /**
- * Structured-Streaming pipeline over the `events` table. The reference has
- * no streaming surface (SURVEY §2.8) — this is the training-data-pipeline
- * extension: the same transformations run in batch (for the oracle) and as
- * a `readStream` (watermark + windowed state), because both are plain
- * `DataFrame => DataFrame` over an event-time column.
+ * Batch event-time transformations over the `events` table: windowed
+ * counts, sessions, attribution, funnels and per-user caps. The reference
+ * has no streaming surface (SURVEY §2.8), and neither does this object:
+ * each operator is a plain `DataFrame => DataFrame` over an event-time
+ * column, run by a registered query and checked by its oracle.
  */
 object EventPipeline {
 
-  /** Tumbling-window counts/sums per event type. Batch form — used by the
-    * oracle checks; identical logic runs under readStream. */
+  /** Tumbling-window counts/sums per event type. */
   def tumblingAgg(events: DataFrame, windowMs: Long): DataFrame = {
     // same exact floor alignment as hoppingAgg: pmod is non-negative for
     // negative epoch-ms, and no double quotient (exact past 2^53)
@@ -107,51 +52,6 @@ object EventPipeline {
         sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
   }
 
-  /** [[hoppingAgg]] as a streaming query (watermark + sliding window). */
-  def hoppingAggStream(spark: SparkSession, sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType, windowSec: Int, slideSec: Int): DataFrame =
-    spark.readStream.schema(schema).parquet(sourceDir)
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), s"$windowSec seconds", s"$slideSec seconds"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
-
-  /** Same aggregation as a streaming query with watermarking. */
-  def tumblingAggStream(spark: SparkSession, sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType, windowSec: Int): DataFrame =
-    spark.readStream.schema(schema).parquet(sourceDir)
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), s"$windowSec seconds"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
-
-  /**
-   * Streaming per-window distinct-user HLL registers — the live twin
-   * of [[graft.ops.Sketches.hllRegisters]] keyed by tumbling window.
-   * Both paths aggregate the SAME (bucket, rho) expressions
-   * ([[graft.ops.Sketches.hllBucketRho]]), and max-rho is exactly the
-   * state a streaming aggregation keeps: ≤ 64 small integers per open
-   * window regardless of how many users the window sees — the
-   * "approx distinct per window on an unbounded stream in bounded
-   * state" shape. Folding registers to an estimate is a deterministic
-   * function of the emitted rows ([[graft.ops.Sketches
-   * .hllEstimateFromRegisters]]) and happens downstream, keeping this
-   * query a single stateful operator.
-   *
-   * Output: `(window_start, bucket, rho)`, one row per non-empty
-   * register per window.
-   */
-  def hllRegistersStream(spark: SparkSession, sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType, windowSec: Int): DataFrame = {
-    val (bucket, rho) = graft.ops.Sketches.hllBucketRho(col("user_id").cast("string"))
-    spark.readStream.schema(schema).parquet(sourceDir)
-      .withWatermark("ts", "10 minutes")
-      .select(col("ts"), bucket.as("bucket"), rho.as("rho"))
-      .groupBy(window(col("ts"), s"$windowSec seconds"), col("bucket"))
-      .agg(max(col("rho")).as("rho"))
-      .select(col("window.start").as("window_start"), col("bucket"), col("rho"))
-  }
-
   /**
    * Rendezvous shard routing, batch form: per tumbling window × shard,
    * event count and exact cents mass — the fan-out accounting a
@@ -170,22 +70,6 @@ object EventPipeline {
       .groupBy(col("window_start"), col("shard"))
       .agg(count(lit(1)).as("n_events"),
         sum(expr("cast(floor(value * 100) as bigint)")).as("cents"))
-
-  /** [[shardRouteCounts]] under `readStream`: the HRW routing column
-    * rides the stream as a stateless projection; state is one windowed
-    * count/sum aggregation — ≤ windows·nShards open groups. */
-  def shardRouteStream(spark: SparkSession, sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType, nShards: Int,
-      windowSec: Int): DataFrame =
-    spark.readStream.schema(schema).parquet(sourceDir)
-      .withWatermark("ts", "10 minutes")
-      .withColumn("shard",
-        graft.ops.Sharding.rendezvousShard(col("user_id"), nShards))
-      .groupBy(window(col("ts"), s"$windowSec seconds"), col("shard"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(expr("cast(floor(value * 100) as bigint)")).as("cents"))
-      .select(unix_millis(col("window.start")).as("window_start"),
-        col("shard"), col("n_events"), col("cents"))
 
   /**
    * Local-DP ingest accounting, batch form: every event's type passes
@@ -207,22 +91,6 @@ object EventPipeline {
       .withColumn("window_start", col("__ms") - pmod(col("__ms"), lit(windowMs)))
       .groupBy(col("window_start"), col("reported"))
       .agg(count(lit(1)).as("n_reported"))
-
-  /** [[rrRouteCounts]] under `readStream`: the randomized response rides
-    * the stream as a stateless projection (the true category never
-    * reaches the state store, let alone the sink); state is one windowed
-    * count — ≤ windows·|categories| open groups. */
-  def rrRouteStream(spark: SparkSession, sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType, categories: Seq[String],
-      pMilli: Int, salt: String, windowSec: Int): DataFrame =
-    graft.ops.Privacy.randomizedResponse(
-        spark.readStream.schema(schema).parquet(sourceDir)
-          .withWatermark("ts", "10 minutes"),
-        "event_type", "event_id", categories, pMilli, salt)
-      .groupBy(window(col("ts"), s"$windowSec seconds"), col("reported"))
-      .agg(count(lit(1)).as("n_reported"))
-      .select(unix_millis(col("window.start")).as("window_start"),
-        col("reported"), col("n_reported"))
 
   /**
    * Gap-based sessionization, batch form: a new session starts when the
@@ -296,11 +164,6 @@ object EventPipeline {
    * iff their gap is STRICTLY under `gapMs` (each event opens
    * `[ts, ts+gap)`; an event landing exactly at a window's end starts a
    * new session), and `session_end` extends `gapMs` past the last event.
-   * The same `groupBy(session_window(...))` runs unchanged under
-   * `readStream` + watermark ([[sessionWindowStream]]), where Spark
-   * merges session state incrementally per key — the reason to prefer
-   * the native operator at 100 TB: state-store session merge instead of
-   * a whole-corpus window sort.
    */
   def sessionWindowAgg(events: DataFrame, gapMs: Long): DataFrame =
     events
@@ -312,42 +175,10 @@ object EventPipeline {
         unix_millis(col("session_window.end")).as("session_end"),
         col("n_events"), col("total_value"))
 
-  /** [[sessionWindowAgg]] as a streaming query (watermark + native
-    * session-window state merge). */
-  def sessionWindowStream(spark: SparkSession, sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType, gapSec: Int): DataFrame =
-    spark.readStream.schema(schema).parquet(sourceDir)
-      .withWatermark("ts", "10 minutes")
-      .groupBy(col("user_id"), session_window(col("ts"), s"$gapSec seconds"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
-      .select(col("user_id"),
-        unix_millis(col("session_window.start")).as("session_start"),
-        unix_millis(col("session_window.end")).as("session_end"),
-        col("n_events"), col("total_value"))
-
-  /**
-   * Streaming exact dedup: watermark + dropDuplicates on the id column —
-   * Spark keeps per-key state only within the watermark horizon, so state
-   * is bounded while duplicates inside the lateness window are removed.
-   * The streaming counterpart of Dedup.exactDedup for at-least-once
-   * sources.
-   */
-  def streamingDedup(events: DataFrame, idCols: Seq[String], watermarkDelay: String): DataFrame =
-    // dedup on the id columns ALONE (a duplicate id arriving with a
-    // different timestamp must still be dropped); WithinWatermark keeps the
-    // per-key state bounded by the watermark horizon even though no
-    // event-time column is part of the key
-    events.withWatermark("ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark(idCols)
-
   /**
    * Click→purchase attribution pairs: every (click, purchase) of the
    * same user with the purchase inside `[click, click + windowMs]`.
-   * An equi-join on the user key with a time-band post-filter — the
-   * batch twin of [[attributionStream]], and the shape Spark's
-   * stream-stream join requires (equality key for state partitioning,
-   * interval condition for state EVICTION).
+   * An equi-join on the user key with a time-band post-filter.
    */
   def attribution(events: DataFrame, windowMs: Long): DataFrame = {
     val clicks = events.where(col("event_type") === "click")
@@ -364,117 +195,7 @@ object EventPipeline {
         col("click_ms"), col("purchase_ms"))
   }
 
-  /**
-   * [[attribution]] as a genuine STREAM-STREAM inner join: both sides
-   * watermarked, joined on the user key plus the time band. The interval
-   * condition is what lets Spark BOUND the join state — a buffered click
-   * can only ever match purchases up to `windowSec` later, so once the
-   * purchase watermark passes `click_ts + windowSec` the click's state
-   * row is evicted; without the band (or the watermarks) the state store
-   * would grow with the full history of both streams. Append output:
-   * pairs emit once, when both sides are present and the match is
-   * watermark-final.
-   */
-  def attributionStream(spark: SparkSession, sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType, windowSec: Int): DataFrame = {
-    val src = spark.readStream.schema(schema).parquet(sourceDir)
-    val clicks = src.where(col("event_type") === "click")
-      .select(col("user_id"), col("event_id").as("click_id"),
-        col("ts").cast("timestamp").as("click_ts"))
-      .withWatermark("click_ts", "10 minutes")
-    val purchases = src.where(col("event_type") === "purchase")
-      .select(col("user_id").as("__pu"), col("event_id").as("purchase_id"),
-        col("ts").cast("timestamp").as("purchase_ts"))
-      .withWatermark("purchase_ts", "10 minutes")
-    clicks.join(purchases,
-        col("user_id") === col("__pu") &&
-          col("purchase_ts") >= col("click_ts") &&
-          col("purchase_ts") <= col("click_ts") + expr(s"INTERVAL $windowSec SECONDS"))
-      .select(col("user_id"), col("click_id"), col("purchase_id"),
-        unix_millis(col("click_ts")).as("click_ms"),
-        unix_millis(col("purchase_ts")).as("purchase_ms"))
-  }
-
-  /**
-   * Stateful streaming sessionizer: per-user state via
-   * flatMapGroupsWithState with a processing-time timeout — a session is
-   * emitted when a later event closes it OR when the timeout fires with no
-   * new events (so the last open session per user is eventually flushed
-   * and its state removed, instead of living forever). The custom-state
-   * analog of [[sessionize]].
-   *
-   * Scale contract: each invocation buffers and heap-sorts ONE user's
-   * rows from ONE micro-batch (`rows.toSeq.sortBy`) — fine at normal
-   * micro-batch sizes, but a pathological single-user flood inside one
-   * batch degrades to executor memory rather than spilling. The batch
-   * [[sessionize]] runs the same semantics through a spilling window
-   * sort and is the path for unbounded per-user volume; cap batch size
-   * (`maxOffsetsPerTrigger` or source equivalent) if a hot key can
-   * realistically exceed executor heap within a single batch.
-   */
-  /**
-   * Streaming twin of [[graft.ops.History.rollingFeatures]]: per-user
-   * lag / bounded rolling sum / gap / sequence features computed online.
-   * Rolling features are ORDER-DEFINED (lag and gap change meaning if a
-   * late event slots in after its successors were emitted), so this is
-   * a watermark-ordered replay: arrivals buffer in state, and an event's
-   * features emit only once the watermark passes its event time — no
-   * earlier event can still arrive (late-beyond-watermark rows are
-   * dropped by the watermark filter upstream, counted in
-   * `numRowsDroppedByWatermark`). Emissions are therefore final
-   * (append-mode correct) and equal the batch form restricted to the
-   * watermark-final prefix — the spec pins that equality through
-   * checkpointed restarts with out-of-order arrivals.
-   *
-   * State per user is the out-of-order horizon's events plus a
-   * `window−1` tail — bounded by the watermark delay × event rate, the
-   * same contract as every watermarked stateful op. An event-time
-   * timeout re-wakes the group when the watermark passes its earliest
-   * held event, so buffered rows flush even if the user goes quiet.
-   */
-  def rollingFeaturesStream(events: Dataset[Event], window: Int,
-      watermarkDelay: String = "10 minutes"): Dataset[RollingFeature] = {
-    import events.sparkSession.implicits._
-    require(window >= 1, s"window must be >= 1, got $window")
-    val tailKeep = math.max(1, window - 1)
-
-    def update(userId: Long, rows: Iterator[Event],
-        state: GroupState[RollingState]): Iterator[RollingFeature] = {
-      val prior = state.getOption.getOrElse(RollingState(Seq.empty, Seq.empty, Long.MinValue, 0L))
-      // merge state + batch, order by event time (tie: event id) — the
-      // same total order as the batch twin's window
-      val pending = (prior.pending ++ rows).sortBy(e => (e.ts.getTime, e.event_id))
-      val wm = state.getCurrentWatermarkMs()
-      val (ready, hold) = pending.partition(_.ts.getTime <= wm)
-      var tail = prior.tail
-      var lastMs = prior.lastMs
-      var seq = prior.seq
-      val out = ready.map { e =>
-        val c = math.floor(e.value * 100).toLong
-        val ms = e.ts.getTime
-        val prev = tail.lastOption
-        val roll = tail.takeRight(window - 1).sum + c
-        val gap = if (lastMs == Long.MinValue) None else Some(ms - lastMs)
-        seq += 1
-        tail = (tail :+ c).takeRight(tailKeep)
-        lastMs = ms
-        RollingFeature(userId, e.event_id, ms, c, prev, roll, gap, seq)
-      }
-      state.update(RollingState(hold, tail, lastMs, seq))
-      // hold rows are strictly over the watermark, so the timestamp is
-      // legal; when the watermark passes it this group re-fires with no
-      // input rows and the partition above flushes what became final
-      if (hold.nonEmpty) state.setTimeoutTimestamp(hold.head.ts.getTime)
-      out.iterator
-    }
-
-    events.withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[RollingState, RollingFeature](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
-  }
-
-  /** Batch arm of the per-user event cap: the first `cap` events per
+  /** Per-user event cap: the first `cap` events per
     * user in (ts, event_id) order — the ingestion-side quota that stops
     * a runaway producer from dominating a user's training trace (the
     * event-stream sibling of [[graft.ops.Sampling.capPerStratum]],
@@ -490,169 +211,13 @@ object EventPipeline {
       .select("user_id", "event_id", "ms", "keep_rank")
   }
 
-  /** Streaming twin of [[userCap]]: same watermark-ordered discipline
-    * as [[rollingFeaturesStream]] (an event is emitted only once the
-    * watermark proves nothing can still slot in before it, so
-    * keep_rank is the TRUE time order, not arrival order). The emitted
-    * counter saturates at `cap` and then drops the pending buffer —
-    * a capped user costs constant state forever after. Spec-pinned
-    * equal to the batch arm over the surviving events. */
-  def userCapStream(events: Dataset[Event], cap: Int,
-      watermarkDelay: String = "10 minutes"): Dataset[CappedEvent] = {
-    import events.sparkSession.implicits._
-    require(cap >= 1, s"cap must be >= 1: $cap")
-
-    def update(userId: Long, rows: Iterator[Event],
-        state: GroupState[CapState]): Iterator[CappedEvent] = {
-      val prior = state.getOption.getOrElse(CapState(Seq.empty, 0L))
-      if (prior.n >= cap) {
-        // saturated: nothing more can ever be emitted for this user
-        state.update(CapState(Seq.empty, prior.n))
-        return Iterator.empty
-      }
-      val pending = (prior.pending ++ rows).sortBy(e => (e.ts.getTime, e.event_id))
-      val wm = state.getCurrentWatermarkMs()
-      val (ready, hold) = pending.partition(_.ts.getTime <= wm)
-      var n = prior.n
-      val out = ready.flatMap { e =>
-        if (n >= cap) None
-        else { n += 1; Some(CappedEvent(userId, e.event_id, e.ts.getTime, n)) }
-      }
-      val keep = if (n >= cap) Seq.empty else hold
-      state.update(CapState(keep, n))
-      if (keep.nonEmpty) state.setTimeoutTimestamp(keep.head.ts.getTime)
-      out.iterator
-    }
-
-    events.withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[CapState, CappedEvent](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
-  }
-
-  /**
-   * Streaming arrival-regularity maintenance — the stateful twin of
-   * [[graft.ops.Profiling.arrivalRegularity]]'s CV² score: per user,
-   * the inter-arrival moments (n, Σg, Σg²) update incrementally as
-   * events finalize under the watermark (the same hold-until-watermark
-   * discipline as [[userCapStream]], so out-of-order-but-within-
-   * watermark events land in their true gap positions), and each
-   * finalized event emits the user's current reading. State is O(1)
-   * per user plus the in-flight pending buffer; Σg² rides as an exact
-   * decimal string (int64 overflows — see [[GapState]]), the quotient
-   * is the same cross-multiplied integer expression as the batch op,
-   * so the final emission per user equals the batch score bit for bit
-   * (spec-pinned).
-   */
-  def gapMomentsStream(events: Dataset[Event],
-      watermarkDelay: String = "10 minutes"): Dataset[GapMoments] = {
-    import events.sparkSession.implicits._
-
-    def update(userId: Long, rows: Iterator[Event],
-        state: GroupState[GapState]): Iterator[GapMoments] = {
-      val prior = state.getOption.getOrElse(
-        GapState(Seq.empty, Long.MinValue, 0L, 0L, "0"))
-      val pending = (prior.pending ++ rows)
-        .sortBy(e => (e.ts.getTime, e.event_id))
-      val wm = state.getCurrentWatermarkMs()
-      val (ready, hold) = pending.partition(_.ts.getTime <= wm)
-      var last = prior.lastUs
-      var n = prior.n
-      var sg = prior.sg
-      var sg2 = BigInt(prior.sg2)
-      val out = ready.flatMap { e =>
-        // exact micros ≡ unix_micros: getTime carries whole millis,
-        // getNanos the sub-second remainder
-        val t = e.ts.getTime * 1000L + (e.ts.getNanos / 1000L) % 1000L
-        val emitted = if (last != Long.MinValue) {
-          val g = t - last
-          n += 1; sg += g; sg2 += BigInt(g) * BigInt(g)
-          val cv2 =
-            if (sg > 0) Some(((BigInt(1000) * (BigInt(n) * sg2 - BigInt(sg) * BigInt(sg)))
-              / (BigInt(sg) * BigInt(sg))).toLong)
-            else None
-          Some(GapMoments(userId, n, cv2))
-        } else None
-        last = t
-        emitted
-      }
-      state.update(GapState(hold, last, n, sg, sg2.toString))
-      if (hold.nonEmpty) state.setTimeoutTimestamp(hold.head.ts.getTime)
-      out.iterator
-    }
-
-    events.withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[GapState, GapMoments](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
-  }
-
-  def sessionizeStream(events: Dataset[Event], gapMs: Long): Dataset[SessionSummary] = {
-    import events.sparkSession.implicits._
-
-    def update(userId: Long, rows: Iterator[Event],
-        state: GroupState[SessionState]): Iterator[SessionSummary] = {
-      if (state.hasTimedOut) {
-        // gap elapsed in processing time with no new events: flush + clear
-        val out = state.getOption
-          .map(s => SessionSummary(userId, s.start, s.last, s.n, s.total)).iterator
-        state.remove()
-        return out
-      }
-      val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      var cur = state.getOption
-      val out = scala.collection.mutable.ListBuffer.empty[SessionSummary]
-      sorted.foreach { e =>
-        val t = e.ts.getTime
-        cur match {
-          case Some(s) if t - s.last > gapMs =>
-            out += SessionSummary(userId, s.start, s.last, s.n, s.total)
-            cur = Some(SessionState(t, t, 1L, e.value))
-          case Some(s) =>
-            cur = Some(SessionState(s.start, t, s.n + 1L, s.total + e.value))
-          case None =>
-            cur = Some(SessionState(t, t, 1L, e.value))
-        }
-      }
-      cur.foreach { s =>
-        state.update(s)
-        state.setTimeoutDuration(gapMs)
-      }
-      out.iterator
-    }
-
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionSummary](
-        OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout)(update)
-  }
-
-  /**
-   * Per-user funnel stage, batch form: one `min(CASE)` aggregation for
-   * the first-touch time of each stage, stage derived by strict
-   * event-time ordering (the same rule as the `events_funnel` oracle
-   * query). One shuffle on user_id.
-   */
-  def funnelStages(events: DataFrame): DataFrame = {
-    def firstMs(tpe: String) =
-      min(when(col("event_type") === tpe, unix_millis(col("ts").cast("timestamp"))))
-    events.groupBy(col("user_id")).agg(
-      firstMs("signup").as("t_signup"),
-      firstMs("click").as("t_click"),
-      firstMs("purchase").as("t_purchase"))
-      .withColumn("stage",
-        when(col("t_signup").isNull, 0)
-          .when(col("t_click").isNull || col("t_click") <= col("t_signup"), 1)
-          .when(col("t_purchase").isNull || col("t_purchase") <= col("t_click"), 2)
-          .otherwise(3))
-  }
-
   /**
    * TIME-BOUNDED conversion funnel: per user, the FIRST signup, then the
    * first click strictly after it and within `windowMs`, then the first
    * purchase strictly after that click and within `windowMs` — the
-   * "converted within a day" product question, which [[funnelStages]]'s
-   * global first-touch comparison can't answer (a click three weeks
-   * after signup still counted there).
+   * "converted within a day" product question, which a global
+   * first-touch comparison can't answer (a click three weeks after
+   * signup would still count there).
    *
    * Shape: two anchored passes — aggregate the anchor time per user,
    * equi-join it back on user_id, and take the CONDITIONAL min over
@@ -684,40 +249,4 @@ object EventPipeline {
         sum(when(col("t_purchase").isNotNull, 1L).otherwise(0L)).as("n_converted"))
   }
 
-  /**
-   * Stateful streaming funnel: per-user first-touch times via
-   * `mapGroupsWithState` (update mode). The state is three min-folds —
-   * commutative and idempotent — so any arrival order and any batch
-   * split produce the batch [[funnelStages]] answer once the same
-   * events have been seen; state is three longs per live user.
-   */
-  def funnelStream(events: Dataset[Event]): Dataset[FunnelUserStage] = {
-    import events.sparkSession.implicits._
-
-    def update(userId: Long, rows: Iterator[Event],
-        state: GroupState[FunnelState]): FunnelUserStage = {
-      var s = state.getOption
-        .getOrElse(FunnelState(Long.MaxValue, Long.MaxValue, Long.MaxValue))
-      rows.foreach { e =>
-        val t = e.ts.getTime
-        e.event_type match {
-          case "signup"   => if (t < s.signup) s = s.copy(signup = t)
-          case "click"    => if (t < s.click) s = s.copy(click = t)
-          case "purchase" => if (t < s.purchase) s = s.copy(purchase = t)
-          case _          => ()
-        }
-      }
-      state.update(s)
-      val stage =
-        if (s.signup == Long.MaxValue) 0
-        else if (s.click == Long.MaxValue || s.click <= s.signup) 1
-        else if (s.purchase == Long.MaxValue || s.purchase <= s.click) 2
-        else 3
-      FunnelUserStage(userId, stage)
-    }
-
-    events.groupByKey(_.user_id)
-      .mapGroupsWithState[FunnelState, FunnelUserStage](
-        GroupStateTimeout.NoTimeout)(update)
-  }
 }

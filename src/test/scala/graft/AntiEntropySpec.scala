@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{AntiEntropy, SnapshotDiff}
+import graft.ops.AntiEntropy
 
 class AntiEntropySpec extends SparkSuite {
   import spark.implicits._
@@ -14,7 +14,7 @@ class AntiEntropySpec extends SparkSuite {
     assert(AntiEntropy.diffDigests(d, d).count() == 0L)
   }
 
-  test("planted drift surfaces only in the touched buckets; repair stage finds the rows") {
+  test("planted drift surfaces only in the touched buckets") {
     val corrupt = table.where($"id" =!= 13L)
       .withColumn("grade", when($"id" === 77L, lit("X")).otherwise($"grade"))
     val da = AntiEntropy.bucketDigests(table, Seq("id"), Seq("id", "name", "grade"), 16)
@@ -22,16 +22,6 @@ class AntiEntropySpec extends SparkSuite {
     val bad = AntiEntropy.diffDigests(da, db)
     val n = bad.count()
     assert(n >= 1L && n <= 2L, s"2 drifted rows touch at most 2 of 16 buckets, got $n")
-
-    // row-level repair restricted to the drifted buckets recovers the
-    // exact planted changes
-    val rowsA = AntiEntropy.bucketRows(table, Seq("id"), 16, bad).drop("bucket")
-    val rowsB = AntiEntropy.bucketRows(corrupt, Seq("id"), 16, bad).drop("bucket")
-    val verdict = SnapshotDiff.diff(rowsA, rowsB, Seq("id"))
-      .as[(Long, String, Long)].collect().toSet
-    assert(verdict == Set((13L, "removed", 0L), (77L, "changed", 1L)))
-    // and the repair scan reads a fraction of the table
-    assert(rowsA.count() < 60L)
   }
 
   test("null and empty-string values digest differently (sentinel injectivity)") {

@@ -411,13 +411,12 @@ class CurationOpsSpec extends SparkSuite {
     }
     // the native kernel agrees with segment on the shared (a != b) domain
     val exact = df.select(col("id"),
-        concat_ws(" ", Vocab.segmentExact(col("w"), merges)).as("s"))
+        concat_ws(" ", graft.functions.TextFunctions.bpe_segment(col("w"), merges)).as("s"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(exact == got, "native and regex segmentation must agree for distinct pairs")
   }
 
-  test("BPE segmentExact handles self-merges with canonical greedy semantics") {
-    import graft.ops.Vocab
+  test("BPE bpe_segment kernel handles self-merges with canonical greedy semantics") {
     def ref(word: String, merges: Seq[(String, String)]): Seq[String] = {
       var syms = word.map(_.toString).toList
       merges.foreach { case (a, b) =>
@@ -440,7 +439,7 @@ class CurationOpsSpec extends SparkSuite {
       "eraaaa", "aaaer", "a", "ra")
     val df = words.zipWithIndex.map { case (w, i) => (i.toLong, w) }.toDF("id", "w")
     val got = df.select(col("id"),
-        concat_ws(" ", Vocab.segmentExact(col("w"), merges)).as("s"))
+        concat_ws(" ", graft.functions.TextFunctions.bpe_segment(col("w"), merges)).as("s"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     words.zipWithIndex.foreach { case (w, i) =>
       assert(got(i.toLong) == ref(w, merges).mkString(" "),

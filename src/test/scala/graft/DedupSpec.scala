@@ -228,17 +228,6 @@ class DedupSpec extends SparkSuite {
     assert(capped.count() == 0)
   }
 
-  test("embeddingNearDups thresholds on float cosine") {
-    val vecs = Seq(
-      (1L, Array(1.0f, 0.0f)),
-      (2L, Array(0.999f, 0.04f)),
-      (3L, Array(0.0f, 1.0f))
-    ).toDF("id", "vec")
-    val pairs = Dedup.embeddingNearDups(vecs, "id", "vec", threshold = 0.9d)
-      .select("id1", "id2").as[(Long, Long)].collect().toSet
-    assert(pairs == Set((1L, 2L)))
-  }
-
   test("embeddingIncrementalNearDups equals the cross-batch slice of the full run") {
     import graft.ops.Similarity
     val rnd = new scala.util.Random(13)

@@ -28,14 +28,4 @@ class EncodeSpec extends SparkSuite {
     assert(dict.map(_._2).toSeq == vals.sorted)
     assert(dict.map(_._1).toSeq == (0L until 500L))
   }
-
-  test("decode inverts encode") {
-    val df = Seq("x", "y", "x").toDF("s")
-    val dict = Encode.dictionary(df, "s")
-    val round = Encode.dictionaryDecode(
-      Encode.dictionaryEncode(df, "s", dict).select("s_code"),
-      "s_code", dict, "s_back")
-      .select("s_back").as[String].collect().sorted.toSeq
-    assert(round == Seq("x", "x", "y"))
-  }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.recon.{FieldTypes, KeyPair, MongoPipelines, ReconConfig, SkewJoin}
+import graft.recon.SkewJoin
 import graft.ops.Similarity
 
 class ExtensionsSpec extends SparkSuite {
@@ -205,25 +205,6 @@ class ExtensionsSpec extends SparkSuite {
     assert(err.getMessage.contains("array<float>"))
   }
 
-  test("MongoPipelines emits valid JSON stages mirroring the reference") {
-    val conf = ReconConfig(
-      keys = Seq(KeyPair("importe", "approved_transaction_amount")),
-      types = FieldTypes(longFields = Set("create_timestamp"),
-        doubleFields = Set("approved_transaction_amount")))
-    val p = MongoPipelines.scanPipeline(conf,
-      fields = Seq("_id", "approved_transaction_amount", "create_timestamp"),
-      statusIn = Seq("APPROVED"), statusField = "transaction_status_type",
-      tsField = "create_timestamp", fromMs = 1714521600000L, toMs = 1714523400000L)
-    assert(p.contains("$match") && p.contains("$project"))
-    assert(p.contains("{$in: [\"APPROVED\"]}"))
-    assert(p.contains("\"create_timestamp\": {$gte: 1714521600000, $lt: 1714523400000}"))
-    assert(p.contains("\"_id\": {$toString: \"$_id\"}"))         // default stringify
-    assert(p.contains("\"approved_transaction_amount\": 1"))      // typed passthrough
-    assert(MongoPipelines.mergeStage("final", keepExisting = true).contains("keepExisting"))
-    assert(MongoPipelines.lookupUnwind("card_transaction", "_id", "transaction")
-      .contains("$unwind"))
-  }
-
   test("saltedEquiJoin matches plain join results on skewed data") {
     // 900 rows of one hot key + 100 spread
     val skewed = ((1 to 900).map(i => ("hot", i.toLong)) ++
@@ -250,22 +231,5 @@ class ExtensionsSpec extends SparkSuite {
     assert(top.length == 3)
     // nearest angular neighbors of 10 are 9/11
     assert(Set(top(0)._1, top(1)._1).subsetOf(Set(9L, 11L)))
-  }
-
-  test("streamingDedup drops duplicate ids within the watermark") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sdedup").toFile
-    val df = Seq(
-      (1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:01"), 1L, "click", 1.0),
-      (1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:01"), 1L, "click", 1.0),
-      (2L, java.sql.Timestamp.valueOf("2024-01-01 00:00:02"), 1L, "view", 2.0)
-    ).toDF("event_id", "ts", "user_id", "event_type", "value")
-    df.write.mode("overwrite").parquet(dir.getAbsolutePath)
-    val src = spark.readStream.schema(df.schema).parquet(dir.getAbsolutePath)
-    val q = graft.streaming.EventPipeline.streamingDedup(src, Seq("event_id"), "1 minute")
-      .writeStream.format("memory").queryName("dedup_out")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    assert(spark.table("dedup_out").count() == 2)
   }
 }

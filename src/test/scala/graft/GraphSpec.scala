@@ -322,7 +322,7 @@ class GraphSpec extends SparkSuite {
     assert(unweighted == Map(1L -> 2L, 2L -> 2L))
     assert(weighted == unweighted)
     def qnum(labels: Map[Long, Long]): Long =
-      Graph.modularityNumExact(edges, labels.toSeq.toDF("node", "label")).longValueExact
+      GraphOracles.modularityNumExact(edges, labels.toSeq.toDF("node", "label")).longValueExact
     assert(qnum(Map(1L -> 1L, 2L -> 2L)) == -2L)
     assert(qnum(unweighted) == 0L)
   }
@@ -359,7 +359,7 @@ class GraphSpec extends SparkSuite {
     val qs = ls.map { l =>
       val m = byLevel(l)
       assert(m.keySet == ((1L to 4L) ++ (11L to 14L)).toSet, s"level $l incomplete")
-      Graph.modularityNumExact(edges, m.toSeq.toDF("node", "label"))
+      GraphOracles.modularityNumExact(edges, m.toSeq.toDF("node", "label"))
     }
     qs.sliding(2).foreach {
       case Seq(a, b) => assert(b.compareTo(a) > 0, s"level gain not positive: $a -> $b")
@@ -476,7 +476,7 @@ class GraphSpec extends SparkSuite {
     val und = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (2L, 5L))
     val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
     for (win <- Seq(1, 2, 3)) {
-      val viaJoin = Graph.walkContexts(
+      val viaJoin = GraphOracles.walkContexts(
         Graph.randomWalks(edges, nWalks = 2, len = 3, symmetric = true), win)
         .as[(Long, Long, Long)].collect().toSet
       val viaPaths = Graph.walkContextsFromPaths(
@@ -501,21 +501,21 @@ class GraphSpec extends SparkSuite {
     val walks = Seq(
       (1L, 0L, 0L, 1L), (1L, 0L, 1L, 2L), (1L, 0L, 2L, 3L), (1L, 0L, 3L, 2L))
       .toDF("start", "walk", "step", "node")
-    val out = Graph.walkContexts(walks, window = 1)
+    val out = GraphOracles.walkContexts(walks, window = 1)
       .as[(Long, Long, Long)].collect().toSet
     // adjacent pairs only, both directions: (1,2),(2,1),(2,3),(3,2)x2 dirs
     assert(out == Set(
       (1L, 2L, 1L), (2L, 1L, 1L),
       (2L, 3L, 2L), (3L, 2L, 2L))) // 2-3 adjacency occurs twice (steps 1-2, 2-3)
     // window 2 adds the step-distance-2 pairs, including the 2..2 revisit
-    val m = Graph.walkContexts(walks, window = 2)
+    val m = GraphOracles.walkContexts(walks, window = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(m((1L, 3L)) == 1L && m((3L, 1L)) == 1L)
     assert(m((2L, 2L)) == 2L) // revisit within window: both directions
     // a second walk never pairs with the first
     val two = walks.union(
       Seq((9L, 1L, 0L, 7L), (9L, 1L, 1L, 8L)).toDF("start", "walk", "step", "node"))
-    val sep = Graph.walkContexts(two, window = 3)
+    val sep = GraphOracles.walkContexts(two, window = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(!sep.contains((1L, 7L)) && !sep.contains((3L, 8L)))
     assert(sep.contains((7L, 8L)))

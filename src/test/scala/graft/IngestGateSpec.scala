@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.ops.{IndexStore, IngestGate}
 
-/** The near-dup ingest gate: ledger-driven exactly-once micro-batches,
-  * index-vs-batch and in-batch screening, crash-replay idempotency. */
+/** The near-dup ingest gate: index-vs-batch and in-batch screening, and
+  * decisions that replay bit-identically. */
 class IngestGateSpec extends SparkSuite {
   import spark.implicits._
 
@@ -45,222 +45,7 @@ class IngestGateSpec extends SparkSuite {
     assert(out(13L) == ((13L, 0L, 0L, 1L)), s"13 is novel: ${out(13L)}")
   }
 
-  test("runOnce: exactly-once ledgered batches; admitted docs become the next batch's index") {
-    val idx = tmpDir("gate_idx2")
-    val data = tmpDir("gate_data")
-    val ledger = tmpDir("gate_ledger") + "/ledger"
-    val out = tmpDir("gate_out")
-    writeIndex(idx)
-    // batch 1: one novel doc + one seed near-dup
-    Seq(
-      (20L, "red orange yellow green blue indigo violet ultraviolet infrared"),
-      (21L, "one two three four five six seven eight nine ten eleven TWELVE2"))
-      .toDF("doc_id", "text").write.parquet(s"$data/b1")
-    val id1 = IngestGate.runOnce(spark, data, ledger, "text", "doc_id", idx, out)
-    assert(id1.contains(0L))
-    val d1 = IngestGate.decisions(spark, out)
-      .select("doc_id", "admitted").as[(Long, Long)].collect().toMap
-    assert(d1 == Map(20L -> 1L, 21L -> 0L))
-    // no new files → no batch
-    assert(IngestGate.runOnce(spark, data, ledger, "text", "doc_id", idx, out).isEmpty)
-    // batch 2: a copy of batch-1-ADMITTED doc 20 must now be rejected
-    // (proves the merge made batch 1 visible), plus one novel doc
-    Seq(
-      (30L, "red orange yellow green blue indigo violet ultraviolet infrared"),
-      (31L, "entirely fresh content regarding mountains and quiet snowfall at dawn"))
-      .toDF("doc_id", "text").write.parquet(s"$data/b2")
-    val id2 = IngestGate.runOnce(spark, data, ledger, "text", "doc_id", idx, out)
-    assert(id2.contains(1L))
-    val d2 = IngestGate.decisions(spark, out)
-      .where(col("batch_id") === 1L)
-      .select("doc_id", "n_index_matches", "admitted")
-      .as[(Long, Long, Long)].collect().map(r => r._1 -> r).toMap
-    assert(d2(30L)._2 >= 1L && d2(30L)._3 == 0L, s"30 should hit admitted doc 20: ${d2(30L)}")
-    assert(d2(31L)._3 == 1L)
-    // REJECTED docs never entered the index: 21 and 30 are absent
-    val indexed = IndexStore.loadMinHashSignatures(spark, idx)
-      .select("doc").as[Long].collect().toSet
-    assert(indexed == Set(1L, 2L, 20L, 31L), s"index holds $indexed")
-  }
-
-  test("maintain: the streaming twin gates file micro-batches exactly-once") {
-    import org.apache.spark.sql.streaming.Trigger
-    val idx = tmpDir("gate_idx_s")
-    val src = tmpDir("gate_src_s")
-    val out = tmpDir("gate_out_s")
-    writeIndex(idx)
-    val b1 = Seq(
-      (20L, "red orange yellow green blue indigo violet ultraviolet infrared"),
-      (21L, "one two three four five six seven eight nine ten eleven twelve"))
-      .toDF("doc_id", "text")
-    val b2 = Seq(
-      (30L, "red orange yellow green blue indigo violet ultraviolet infrared"),
-      (31L, "entirely fresh content regarding mountains and quiet snowfall at dawn"))
-      .toDF("doc_id", "text")
-    b1.coalesce(1).write.parquet(s"$src/p1")
-    Thread.sleep(50) // distinct mtimes → deterministic file order
-    b2.coalesce(1).write.parquet(s"$src/p2")
-    val stream = spark.readStream.schema(b1.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$src/p*")
-    val q = IngestGate.maintain(stream, "text", "doc_id", idx, out)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_gate_ck").toString)
-      .start()
-    q.awaitTermination(120000L)
-    val d = IngestGate.decisions(spark, out)
-      .select("doc_id", "admitted").as[(Long, Long)].collect().toMap
-    assert(d.keySet == Set(20L, 21L, 30L, 31L))
-    assert(d(21L) == 0L, "seed copy must be rejected") // exact seed-2 text
-    assert(d(31L) == 1L, "novel doc must be admitted")
-    // 20 and 30 are copies of each other across micro-batches: exactly
-    // ONE is admitted regardless of which file streamed first
-    assert(d(20L) + d(30L) == 1L, s"exactly one of the copies survives: $d")
-    val indexed = IndexStore.loadMinHashSignatures(spark, idx)
-      .select("doc").as[Long].collect().toSet
-    assert(indexed.size == 4 && indexed.contains(31L) &&
-      (indexed.contains(20L) ^ indexed.contains(30L)), s"index holds $indexed")
-  }
-
-  test("maintain + ledger: in-stream compaction every 2 batches; torn flip→delete heals while live") {
-    import org.apache.spark.sql.streaming.Trigger
-    import graft.ops.Ingest
-    val idx = tmpDir("gate_idx_lc")
-    val src = tmpDir("gate_src_lc")
-    val out = tmpDir("gate_out_lc")
-    val ledger = tmpDir("gate_led_lc") + "/ledger"
-    val ck = java.nio.file.Files.createTempDirectory("graft_gate_lc_ck").toString
-    writeIndex(idx)
-    def runAvailable(): Unit = {
-      val stream = spark.readStream
-        .schema(Seq((0L, "")).toDF("doc_id", "text").schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$src/p*")
-      val q = IngestGate.maintain(stream, "text", "doc_id", idx, out,
-          ledgerPath = Some(ledger), compactEvery = 2)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ck)
-        .start()
-      q.awaitTermination(120000L)
-    }
-    Seq((20L, "red orange yellow green blue indigo violet ultraviolet infrared"),
-      (21L, "one two three four five six seven eight nine ten eleven twelve"))
-      .toDF("doc_id", "text").coalesce(1).write.parquet(s"$src/p1")
-    Thread.sleep(50)
-    Seq((30L, "red orange yellow green blue indigo violet ultraviolet infrared"),
-      (31L, "entirely fresh content regarding mountains and quiet snowfall at dawn"))
-      .toDF("doc_id", "text").coalesce(1).write.parquet(s"$src/p2")
-    runAvailable()
-    // two micro-batches ran, so the every-2nd fold fired: the ledger is
-    // ONE promoted snapshot, nothing raw left to fold
-    assert(Ingest.compactLedger(spark, ledger) == 0, "batch-2 fold must have run in-stream")
-    val led1 = Ingest.ledger(spark, ledger).as[(String, Long)].collect()
-    assert(led1.length == 2 && led1.map(_._1).distinct.length == 2,
-      s"one ledger row per streamed file: ${led1.toSeq}")
-    // --- the torn compaction, while the stream is live -----------------
-    // batch 3 commits its file; compaction then crashes BETWEEN the
-    // pointer flip and the raw-file delete (simulated: publish the
-    // snapshot, delete nothing) → duplicate rows in the ledger view
-    Thread.sleep(50)
-    Seq((40L, "entirely fresh content regarding mountains and quiet snowfall at DAWN2"),
-      (41L, "novel musings on rivers winding through ancient forest valleys slowly"))
-      .toDF("doc_id", "text").coalesce(1).write.parquet(s"$src/p3")
-    // same provenance format the stream ledgers (input_file_name), so
-    // the replayed batch-3 commit recognizes the path and no-ops
-    val p3file = spark.read.parquet(s"$src/p3")
-      .select(input_file_name()).distinct().collect().map(_.getString(0)).toSeq
-    assert(Ingest.commitIdempotent(spark, ledger, p3file, batchId = 2L) == 1)
-    graft.recon.Publish.publish(
-      Ingest.ledger(spark, ledger).coalesce(1), Ingest.ledgerCompactRoot(ledger))
-    val torn = Ingest.ledger(spark, ledger)
-    assert(torn.count() > torn.dropDuplicates(Seq("file_path", "batch_id")).count(),
-      "the crash window must show duplicate ledger rows")
-    // the stream RESUMES over the torn ledger: batch 3 replays (its
-    // commit no-ops — already ledgered), batch 4 commits, and the
-    // every-2nd fold at batch 4 heals the duplicates in-stream
-    Thread.sleep(50)
-    Seq((50L, "novel musings on rivers winding through ancient forest valleys SLOWLY2"),
-      (51L, "final fresh treatise concerning deserts dunes and distant caravan routes"))
-      .toDF("doc_id", "text").coalesce(1).write.parquet(s"$src/p4")
-    runAvailable()
-    val healed = Ingest.ledger(spark, ledger).as[(String, Long)].collect()
-    assert(healed.length == 4 && healed.map(_._1).distinct.length == 4,
-      s"post-heal ledger must hold each of the 4 files exactly once: ${healed.toSeq}")
-    assert(Ingest.compactLedger(spark, ledger) == 0, "batch-4 fold must have healed in-stream")
-    // decisions replayed bit-identically through the torn window: the
-    // same admission pattern the non-ledgered maintain run produces
-    val d = IngestGate.decisions(spark, out)
-      .select("doc_id", "admitted").as[(Long, Long)].collect().toMap
-    assert(d.keySet == Set(20L, 21L, 30L, 31L, 40L, 41L, 50L, 51L))
-    assert(d(21L) == 0L, "seed copy rejected")
-    assert(d(20L) + d(30L) == 1L, "one of the cross-batch copies survives")
-    assert(d(31L) == 1L && d(40L) == 0L, "31 admitted; 40 duplicates it")
-    assert(d(41L) == 1L && d(50L) == 0L, "41 admitted; 50 duplicates it")
-    assert(d(51L) == 1L, "novel doc admitted")
-  }
-
-  test("ledger compaction mid-stream: gate decisions identical to the uncompacted control") {
-    import graft.ops.Ingest
-    // two pipelines fed the IDENTICAL batch sequence; pipeline A compacts
-    // its ledger between batches, pipeline B never does — every decision
-    // row must match exactly (replay equivalence), and the compacted
-    // ledger must keep the same membership
-    val batches = Seq(
-      Seq((20L, "red orange yellow green blue indigo violet ultraviolet infrared"),
-        (21L, "one two three four five six seven eight nine ten eleven TWELVE2")),
-      Seq((30L, "red orange yellow green blue indigo violet ultraviolet infrared"),
-        (31L, "entirely fresh content regarding mountains and quiet snowfall at dawn")),
-      Seq((40L, "entirely fresh content regarding mountains and quiet snowfall at DAWN2"),
-        (41L, "novel musings on rivers winding through ancient forest valleys slowly")))
-    def runPipeline(tag: String, compactAfter: Set[Int]): (String, String) = {
-      val idx = tmpDir(s"cmp_idx_$tag"); val data = tmpDir(s"cmp_data_$tag")
-      val ledger = tmpDir(s"cmp_led_$tag") + "/ledger"
-      val out = tmpDir(s"cmp_out_$tag")
-      writeIndex(idx)
-      batches.zipWithIndex.foreach { case (docs, i) =>
-        docs.toDF("doc_id", "text").write.parquet(s"$data/b$i")
-        assert(IngestGate.runOnce(spark, data, ledger, "text", "doc_id", idx, out)
-          .contains(i.toLong))
-        if (compactAfter(i)) {
-          val before = Ingest.ledger(spark, ledger)
-            .as[(String, Long)].collect().toSet
-          assert(Ingest.compactLedger(spark, ledger) > 0)
-          val after = Ingest.ledger(spark, ledger)
-            .as[(String, Long)].collect().toSet
-          assert(after == before, "compaction must preserve ledger membership")
-          // the fold actually folded: one promoted snapshot, no raw parts
-          assert(Ingest.compactLedger(spark, ledger) == 0, "second fold must no-op")
-        }
-      }
-      (ledger, out)
-    }
-    val (ledA, outA) = runPipeline("a", compactAfter = Set(0, 1))
-    val (_, outB) = runPipeline("b", compactAfter = Set.empty)
-    val decA = IngestGate.decisions(spark, outA)
-      .select("batch_id", "doc_id", "n_index_matches", "n_batch_matches", "admitted")
-      .as[(Long, Long, Long, Long, Long)].collect().toSet
-    val decB = IngestGate.decisions(spark, outB)
-      .select("batch_id", "doc_id", "n_index_matches", "n_batch_matches", "admitted")
-      .as[(Long, Long, Long, Long, Long)].collect().toSet
-    assert(decA == decB, "compaction must not change any gate decision")
-    // commit guard still sees compacted paths as ingested
-    val somePath = Ingest.ledger(spark, ledA).select("file_path")
-      .as[String].head()
-    intercept[IllegalArgumentException](
-      Ingest.commit(spark, ledA, Seq(somePath), batchId = 99L))
-    // crash-window simulation: snapshot promoted but raw files NOT yet
-    // deleted → duplicate rows; membership probes unaffected, and the
-    // next compaction folds the duplicates away
-    graft.recon.Publish.publish(
-      Ingest.ledger(spark, ledA).coalesce(1), Ingest.ledgerCompactRoot(ledA))
-    val dupLedger = Ingest.ledger(spark, ledA)
-    val distinctRows = dupLedger.dropDuplicates(Seq("file_path", "batch_id")).count()
-    assert(dupLedger.count() > distinctRows, "the crash window must show duplicates")
-    assert(Ingest.compactLedger(spark, ledA) > 0)
-    val healed = Ingest.ledger(spark, ledA)
-    assert(healed.count() == distinctRows, "re-compaction must fold duplicates away")
-  }
-
-  test("crash replay is idempotent: re-merge no-ops, decisions replay identically") {
+  test("gateBatch replays identically once the index holds the batch's admitted docs") {
     val idx = tmpDir("gate_idx3")
     writeIndex(idx)
     val batch = Seq(
@@ -269,15 +54,16 @@ class IngestGateSpec extends SparkSuite {
       .toDF("doc_id", "text")
     val before = IngestGate.gateBatch(batch, "text", "doc_id", idx)
       .collect().map(_.toSeq).toSet
-    val admitted = batch.where(col("doc_id") === 40L)
-    // the crash window: merge succeeded, ledger commit didn't — the
-    // replayed run re-merges and re-gates
-    assert(IndexStore.mergeIntoMinHashIndexIdempotent(admitted, "text", "doc_id", idx) == 1L)
-    assert(IndexStore.mergeIntoMinHashIndexIdempotent(admitted, "text", "doc_id", idx) == 0L)
-    assert(IndexStore.loadMinHashSignatures(spark, idx).count() == 3L) // no double-append
-    // decisions replay BIT-IDENTICALLY even though doc 40 now sits in the
-    // index: the probe excludes the batch's own ids from the seen side
-    val after = IngestGate.gateBatch(batch, "text", "doc_id", idx)
+    assert(before.map(r => r(0) -> r(3)) == Set(40L -> 1L, 41L -> 0L))
+    // the replay window: admitted doc 40 already sits in the index
+    val idxAfter = tmpDir("gate_idx3_after")
+    IndexStore.writeMinHashIndex(
+      seedDocs.toDF("doc_id", "text").unionByName(batch.where(col("doc_id") === 40L)),
+      "text", "doc_id", idxAfter, shingleN = 3, k = 32, bands = 8)
+    assert(IndexStore.loadMinHashSignatures(spark, idxAfter).count() == 3L)
+    // decisions replay BIT-IDENTICALLY: the probe excludes the batch's
+    // own ids from the seen side
+    val after = IngestGate.gateBatch(batch, "text", "doc_id", idxAfter)
       .collect().map(_.toSeq).toSet
     assert(after == before)
   }

@@ -12,17 +12,7 @@ class LinkageSpec extends SparkSuite {
     val b = Seq((1L, "ann", "X", 100L), (2L, "rob", "X", 205L),
         (3L, "cat", "Y", 900L), (4L, "dan", "X", 100L))
       .toDF("id", "nm", "blk", "v")
-    Linkage.blockPairs(a, b, Seq("blk"))
-  }
-
-  test("blockPairs: equi-blocked cross product with a_/b_ prefixes, block key shared") {
-    val p = pairs()
-    assert(p.columns.sorted.toSeq ==
-      Seq("a_id", "a_nm", "a_v", "b_id", "b_nm", "b_v", "blk"))
-    // block X: 2 a-rows x 3 b-rows; block Y: 1 x 1
-    assert(p.count() == 7)
-    assert(p.where(col("blk") === "Y").count() == 1)
-    intercept[IllegalArgumentException](Linkage.blockPairs(pairs(), pairs(), Nil))
+    Linkage.blockPairsAll(a, b, Seq("blk"))
   }
 
   test("blockPairsAll prefixes everything; blockPairsMulti unions passes and dedups") {

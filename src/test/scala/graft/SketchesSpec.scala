@@ -21,19 +21,6 @@ class SketchesSpec extends SparkSuite {
     assert(math.abs(est - n) / n < 0.4, s"estimate $est too far from $n")
   }
 
-  test("hllCorrected linear-counts tiny cardinalities accurately") {
-    val df = (1 to 20).map(i => ("g", s"v$i")).toDF("g", "v")
-    val est = Sketches.hllCorrected(df, "g", col("v"))
-      .collect().head.getAs[Double]("estimate")
-    // small-range correction: low-variance but still hash-driven — 20
-    // values land in 14–20 of 64 buckets depending on collisions
-    assert(math.abs(est - 20) <= 8, s"corrected estimate $est for true 20")
-    val raw = Sketches.hllEstimate(df, "g", col("v"))
-      .collect().head.getAs[Double]("raw_estimate")
-    assert(math.abs(est - 20) < math.abs(raw - 20),
-      "correction must improve on the raw estimate in the small range")
-  }
-
   test("hllEstimate strata are independent") {
     val df = ((1 to 100).map(i => ("a", s"x$i")) ++ (1 to 3).map(i => ("b", s"x$i")))
       .toDF("g", "v")
@@ -420,70 +407,6 @@ class SketchesSpec extends SparkSuite {
     assert(ll < hh)
     // and interleaving weights both dimensions: far in y beats near in x
     assert(morton(0, 128, 8) > morton(127, 0, 8))
-  }
-
-  test("zorderBy preserves rows and clusters both dimensions") {
-    val rnd = new scala.util.Random(11)
-    val df = Seq.fill(1000)((rnd.nextInt(256).toLong, rnd.nextInt(256).toLong))
-      .zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) }
-      .toDF("id", "x", "y")
-    val z = graft.ops.Layout.zorderBy(df, col("x"), col("y"), 8, 4)
-    assert(z.count() == 1000)
-    assert(z.columns.toSeq == Seq("id", "x", "y"), "layout key must not leak")
-    // per-partition bounding boxes should be far tighter than the full
-    // 256×256 domain — the whole point of the curve
-    val spans = z.select(spark_partition_id().as("p"), col("x"), col("y"))
-      .groupBy("p")
-      .agg((max("x") - min("x")).as("sx"), (max("y") - min("y")).as("sy"))
-      .select(((col("sx") + 1) * (col("sy") + 1)).cast("double").as("area"))
-      .as[Double].collect()
-    // a random layout gives every partition the full ~65536 domain; the
-    // curve keeps most partitions inside one quadrant (~16384) with at
-    // most the range-boundary straddler wider
-    assert(spans.forall(_ < 256.0 * 256.0 * 0.75) &&
-      spans.sum / spans.length < 256.0 * 256.0 * 0.45,
-      s"partition bounding boxes not clustered: ${spans.mkString(",")}")
-  }
-
-  test("zorderBy layout prunes files for a 2-D range predicate; scattered layout can't") {
-    // the payoff proof: write the same rows z-ordered and scattered,
-    // read back each FILE's min/max on both dimensions (what a parquet
-    // footer exposes to scan pruning), and count files whose bounding
-    // box intersects a small 2-D query box — intersecting files must be
-    // read, the rest are pruned without touching data
-    val rnd = new scala.util.Random(13)
-    val df = Seq.fill(4000)((rnd.nextInt(256).toLong, rnd.nextInt(256).toLong))
-      .zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) }
-      .toDF("id", "x", "y")
-    val base = java.nio.file.Files.createTempDirectory("graft_zprune")
-    val zDir = s"$base/z"; val sDir = s"$base/s"
-    graft.ops.Layout.zorderBy(df, col("x"), col("y"), 8, 16)
-      .write.parquet(zDir)
-    df.repartition(16).write.parquet(sDir) // round-robin scatter
-    // query box: x ∈ [32,63], y ∈ [96,127] — 1/64 of the 256×256 domain
-    def intersecting(dir: String): (Long, Long) = {
-      val boxes = spark.read.parquet(dir)
-        .groupBy(input_file_name().as("f"))
-        .agg(min("x").as("lx"), max("x").as("hx"),
-          min("y").as("ly"), max("y").as("hy"))
-      val total = boxes.count()
-      val hit = boxes.where(col("hx") >= 32 && col("lx") <= 63 &&
-        col("hy") >= 96 && col("ly") <= 127).count()
-      (hit, total)
-    }
-    val (zHit, zTotal) = intersecting(zDir)
-    val (sHit, sTotal) = intersecting(sDir)
-    assert(sHit == sTotal,
-      s"scattered layout should be unprunable here, pruned ${sTotal - sHit}/$sTotal")
-    assert(zHit * 4 <= zTotal,
-      s"z-order should confine the box to ≤ 1/4 of files: $zHit/$zTotal intersect")
-    // and the pruned-file read still returns exactly the right rows
-    val want = df.where(col("x").between(32, 63) && col("y").between(96, 127))
-      .select("id").as[Long].collect().toSet
-    val got = spark.read.parquet(zDir)
-      .where(col("x").between(32, 63) && col("y").between(96, 127))
-      .select("id").as[Long].collect().toSet
-    assert(got == want)
   }
 
   // ---- chunking ----------------------------------------------------------

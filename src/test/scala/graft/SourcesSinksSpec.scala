@@ -100,21 +100,6 @@ class SourcesSinksSpec extends SparkSuite {
     assert(got.where(col("rn") =!= col("key") + 1).count() == 0)
   }
 
-  test("normalizeExtendedJson unwraps mongo export wrapper structs") {
-    val lines = Seq(
-      """{"_id":{"$oid":"662f9a1b8c"},"ts":{"$numberLong":"1714521600000"},"n":{"$numberInt":"7"},"amt":{"$numberDouble":"12.5"},"when":{"$date":{"$numberLong":"1714521600123"}},"name":"a","plain":3}""",
-      """{"_id":{"$oid":"662f9a1b8d"},"ts":{"$numberLong":"1714525200000"},"n":{"$numberInt":"8"},"amt":{"$numberDouble":"0.25"},"when":{"$date":{"$numberLong":"1714525200456"}},"name":"b","plain":4}""")
-    val raw = spark.read.json(lines.toDS())
-    val out = Sources.normalizeExtendedJson(raw)
-    val t = out.schema.fields.map(f => f.name -> f.dataType.typeName).toMap
-    assert(t("_id") == "string" && t("ts") == "long" && t("n") == "integer"
-      && t("amt") == "double" && t("when") == "long")
-    val row = out.where(col("name") === "a")
-      .select(col("_id"), col("ts"), col("n"), col("amt"), col("when"), col("plain"))
-      .as[(String, Long, Int, Double, Long, Long)].head()
-    assert(row == (("662f9a1b8c", 1714521600000L, 7, 12.5d, 1714521600123L, 3L)))
-  }
-
   test("remanentLookup semi-joins ids back to the ledger") {
     val tx = Seq(("a1", 1), ("a2", 2), ("a3", 3)).toDF("_id", "v")
     val rem = Seq("a2", "a3", "a3", "zz").toDF("_id")
@@ -182,37 +167,6 @@ class SourcesSinksSpec extends SparkSuite {
       .as[(String, Long, Long)].collect().sortBy(_._2)
     assert(perFile.length == 4)
     assert(perFile.sliding(2).forall { case Array(a, b) => a._3 < b._2; case _ => true })
-  }
-
-  test("partitioned write prunes non-matching partitions at the scan") {
-    val dir = Files.createTempDirectory("graft_part").toFile
-    val out = new java.io.File(dir, "byday").getAbsolutePath
-    val df = spark.range(0, 1000)
-      .select(col("id"), (col("id") % 10).as("day"), (col("id") * 2).as("v"))
-    Sinks.writePartitioned(df, out, Seq("day"))
-    val read = spark.read.parquet(out).where(col("day") === 3)
-    assert(read.count() == 100)
-    val scan = read.queryExecution.executedPlan.collectLeaves().head.toString
-    assert(scan.contains("PartitionFilters") && scan.contains("day"),
-      s"expected partition pruning on day:\n$scan")
-    // only the day=3 directory is ever touched
-    val files = read.select(input_file_name()).distinct().as[String].collect()
-    assert(files.nonEmpty && files.forall(_.contains("day=3")), files.mkString(","))
-  }
-
-  test("bucketed tables join without a shuffle exchange") {
-    val wh = Files.createTempDirectory("graft_bucket").toFile.getAbsolutePath
-    val a = spark.range(0, 1000).select(col("id"), (col("id") * 2).as("va"))
-    val b = spark.range(0, 1000).select(col("id"), (col("id") * 3).as("vb"))
-    Sinks.writeBucketed(a, "bk_a", s"$wh/bk_a", Seq("id"), 4)
-    Sinks.writeBucketed(b, "bk_b", s"$wh/bk_b", Seq("id"), 4)
-    val joined = spark.table("bk_a").join(spark.table("bk_b"), Seq("id"))
-    assert(joined.count() == 1000)
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"bucketed join should not shuffle:\n$plan")
-    spark.sql("DROP TABLE IF EXISTS bk_a")
-    spark.sql("DROP TABLE IF EXISTS bk_b")
   }
 
   test("jsonl round-trips types, unicode, and nulls under the writer's schema") {

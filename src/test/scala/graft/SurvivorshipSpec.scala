@@ -18,7 +18,9 @@ class SurvivorshipSpec extends SparkSuite {
   private def rk = Survivorship.rankKey(col("priority"), col("recency"), col("id"))
 
   test("per-field best non-null wins independently; all-null stays null") {
-    val g = Survivorship.golden(feeds, "entity", rk, Seq("name", "phone"))
+    val g = Survivorship.goldenWithProvenance(feeds, "entity", rk, Seq("name", "phone"),
+        "source")
+      .select("entity", "name", "phone", "n_records")
       .as[(Long, Option[String], Option[String], Long)].collect().toSet
     // entity 1: name from crm (csv's higher priority has null name),
     // phone from csv (highest priority with non-null phone)
@@ -41,8 +43,9 @@ class SurvivorshipSpec extends SparkSuite {
       (1L, 1L, 5L, 1L, "old"), (1L, 1L, 9L, 2L, "new"),
       (2L, 1L, 1L, 1L, "lo"), (2L, 1L, 1L, 2L, "hi")
     ).toDF("entity", "priority", "recency", "id", "v")
-    val g = Survivorship.golden(df, "entity",
-        Survivorship.rankKey(col("priority"), col("recency"), col("id")), Seq("v"))
+    val g = Survivorship.goldenWithProvenance(df.withColumn("source", lit("s")), "entity",
+        Survivorship.rankKey(col("priority"), col("recency"), col("id")), Seq("v"), "source")
+      .select("entity", "v", "n_records")
       .as[(Long, String, Long)].collect().toSet
     assert(g == Set((1L, "new", 2L), (2L, "hi", 2L)))
   }
@@ -50,8 +53,9 @@ class SurvivorshipSpec extends SparkSuite {
   test("rankKey fails loudly on out-of-range components") {
     val df = Seq((1L, -1L, 0L, 0L, "x")).toDF("entity", "priority", "recency", "id", "v")
     val e = intercept[Exception] {
-      Survivorship.golden(df, "entity",
-        Survivorship.rankKey(col("priority"), col("recency"), col("id")), Seq("v")).collect()
+      Survivorship.goldenWithProvenance(df.withColumn("source", lit("s")), "entity",
+        Survivorship.rankKey(col("priority"), col("recency"), col("id")), Seq("v"), "source")
+        .collect()
     }
     assert(e.getMessage.contains("out of range"))
   }
