@@ -34,10 +34,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (es: Seq[Expression]) => FloatVecCosine(es(0), es(1))))
     ext.injectFunction((FunctionIdentifier("vec_lsh_bucket"),
       info("vec_lsh_bucket", "vec_lsh_bucket(v, h) - h-bit sign-random-projection LSH bucket"),
-      (es: Seq[Expression]) => FloatVecLshBucket(es.head, es(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => other.eval().asInstanceOf[Int]
-      })))
+      (es: Seq[Expression]) => FloatVecLshBucket(es.head, IntArg.of(es(1)))))
     ext.injectFunction((FunctionIdentifier("vec_maxabs"),
       info("vec_maxabs", "vec_maxabs(v) - max absolute component (int8 quantization scale)"),
       (es: Seq[Expression]) => FloatVecMaxAbs(es.head)))

@@ -2,17 +2,15 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One driver-checkable query: a Spark implementation plus (when
-  * SQL-expressible) its exact DuckDB oracle. Registries of these feed
-  * [[SparkEntry.queries]] / [[SparkEntry.oracleSql]]. */
+/** One oracle-checked query: a Spark implementation plus its exact
+  * DuckDB oracle. Registries of these feed [[SparkEntry.queries]] /
+  * [[SparkEntry.oracleSql]]. */
 final case class QuerySpec(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: String)
 
 object QuerySpec {
   def apply(name: String, sql: String)(fn: (SparkSession, String) => DataFrame): QuerySpec =
-    QuerySpec(name, fn, Some(sql))
-  def rowsOnly(name: String)(fn: (SparkSession, String) => DataFrame): QuerySpec =
-    QuerySpec(name, fn, None)
+    QuerySpec(name, fn, sql)
 }

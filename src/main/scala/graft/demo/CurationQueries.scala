@@ -37,8 +37,6 @@ private[graft] object TmpDirs {
       }: Unit
     }
   }
-
-  private[graft] def pendingCount: Int = pending.size()
 }
 
 /**

@@ -1547,10 +1547,8 @@ object LshOracleSql {
        |  FROM scored)
        |WHERE rank <= $k""".stripMargin
 
-  def topkSql(h: Int, k: Int, maxBucket: Int): String =
-    idxCte(h) + topkBody(k, maxBucket)
-
-  /** [[topkSql]] with h auto-derived from the corpus count. */
+  /** Top-k neighbors per vector within its bucket, h auto-derived from
+    * the corpus count. */
   def topkSqlAuto(hMax: Int, targetBucket: Int, k: Int, maxBucket: Int): String =
     idxCteAuto(hMax, targetBucket) + topkBody(k, maxBucket)
 
@@ -1590,11 +1588,7 @@ object LshOracleSql {
        |  AND list_dot_product(a.embedding, b.embedding) >= $threshold""".stripMargin
 
   /** Bucket-candidate near-dup pairs verified with exact float dot —
-    * ≡ Dedup.embeddingNearDupsLsh. */
-  def nearDupSql(h: Int, threshold: Double, maxBucket: Int): String =
-    idxCte(h) + nearDupBody(threshold, maxBucket)
-
-  /** [[nearDupSql]] with h auto-derived from the corpus count. */
+    * ≡ Dedup.embeddingNearDupsLsh; h auto-derived from the corpus count. */
   def nearDupSqlAuto(hMax: Int, targetBucket: Int, threshold: Double, maxBucket: Int): String =
     idxCteAuto(hMax, targetBucket) + nearDupBody(threshold, maxBucket)
 
@@ -1618,12 +1612,8 @@ object LshOracleSql {
        |  WHERE s.n <= $maxBucket)
        |WHERE score >= $threshold""".stripMargin
 
-  /** Cosine variant of [[nearDupSql]] ≡ embeddingNearDupsLsh(cosine=true)
+  /** Cosine variant of [[nearDupSqlAuto]] ≡ embeddingNearDupsLsh(cosine=true)
     * — the right threshold semantics for UN-normalized embeddings. */
-  def nearDupCosineSql(h: Int, threshold: Double, maxBucket: Int): String =
-    idxCte(h) + nearDupCosineBody(threshold, maxBucket)
-
-  /** [[nearDupCosineSql]] with h auto-derived from the corpus count. */
   def nearDupCosineSqlAuto(hMax: Int, targetBucket: Int, threshold: Double, maxBucket: Int): String =
     idxCteAuto(hMax, targetBucket) + nearDupCosineBody(threshold, maxBucket)
 

@@ -98,30 +98,6 @@ case class HammingDistance64(left: Expression, right: Expression) extends Binary
     copy(left = l, right = r)
 }
 
-/** Exact greedy BPE segmentation of a string → array<string> of symbols
-  * (native stateful kernel — any merge list including self-merges; the
-  * oracle-portable regex path lives in `Vocab.segment` and is restricted
-  * to distinct-symbol pairs). The merge list is an expression parameter
-  * embedded as a codegen reference object, not a column. */
-case class BpeSegment(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"bpe_segment requires string, got ${other.catalogString}")
-  }
-  @transient private lazy val mergesArr: Array[Array[String]] =
-    merges.map(m => Array(m._1, m._2)).toArray
-  override protected def nullSafeEval(v: Any): Any =
-    TextOps.bpeApply(v.asInstanceOf[UTF8String], mergesArr)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bpeMerges", mergesArr, "java.lang.String[][]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextOps.bpeApply($c, $ref)")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
 /** Consistent-hash ring successor of a 60-bit key hash → shard id
   * ([[TextOps.ringSuccessor]]): binary search over the sorted vnode hash
   * array embedded as codegen reference objects — O(log V) per key, so
@@ -195,18 +171,8 @@ object TextFunctions {
     column(MinWindowMd5(expression(text), window))
   def hamming64(a: Column, b: Column): Column =
     column(HammingDistance64(expression(a), expression(b)))
-  def bpe_segment(word: Column, merges: Seq[(String, String)]): Column =
-    column(BpeSegment(expression(word), merges))
   def word_shingles(tokens: Column, n: Int): Column =
     column(WordShingles(expression(tokens), n))
   def ring_pick(keyHash: Column, hashes: Array[Long], shards: Array[Long]): Column =
     column(RingPick(expression(keyHash), hashes.toSeq, shards.toSeq))
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("simhash64", es => SimHash64(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("simhash64_md5",
-      es => SimHash64(es.head, portable = true), "scala_udf")
-    reg.createOrReplaceTempFunction("hamming64", es => HammingDistance64(es(0), es(1)), "scala_udf")
-  }
 }

@@ -161,47 +161,6 @@ object TextOps {
   /** Hamming distance between two 64-bit signatures. */
   def hamming64(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 
-  /**
-   * Exact greedy BPE apply: split the word into code points, then for
-   * each merge (a, b) in order run ONE left-to-right pass replacing
-   * every leftmost-first non-overlapping adjacent (a, b) with the
-   * concatenated symbol — the canonical sequential semantics, including
-   * self-merges over runs (`(a,a)` on "aaaa" → [aa, aa]), which the
-   * regex formulation (`Vocab.segment`) cannot express. Stateful scan,
-   * O(word × merges); shared by interpreted eval and generated code.
-   */
-  def bpeApply(word: UTF8String, merges: Array[Array[String]]): ArrayData = {
-    val s = word.toString
-    var syms = new java.util.ArrayList[String](math.max(s.length, 1))
-    var i = 0
-    while (i < s.length) {
-      val cc = Character.charCount(s.codePointAt(i))
-      syms.add(s.substring(i, i + cc))
-      i += cc
-    }
-    var mi = 0
-    while (mi < merges.length) {
-      val a = merges(mi)(0)
-      val b = merges(mi)(1)
-      val ab = a + b
-      val out = new java.util.ArrayList[String](syms.size())
-      var j = 0
-      while (j < syms.size()) {
-        if (j + 1 < syms.size() && syms.get(j) == a && syms.get(j + 1) == b) {
-          out.add(ab); j += 2
-        } else {
-          out.add(syms.get(j)); j += 1
-        }
-      }
-      syms = out
-      mi += 1
-    }
-    val arr = new Array[Any](syms.size())
-    var k = 0
-    while (k < syms.size()) { arr(k) = UTF8String.fromString(syms.get(k)); k += 1 }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(arr)
-  }
-
   private val SpaceSep = UTF8String.fromString(" ")
 
   /**

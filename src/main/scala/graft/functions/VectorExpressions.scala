@@ -148,7 +148,8 @@ case class FloatVecLshBucket(child: Expression, h: Int)
     copy(child = newChild)
 }
 
-/** Column-API entry points (and SQL registration) for the vector kernels. */
+/** Column-API entry points for the vector kernels (SQL registration is
+  * [[graft.GraftExtensions]]). */
 object VectorFunctions {
   import org.apache.spark.sql.GraftInternals.{column, expression}
 
@@ -158,20 +159,4 @@ object VectorFunctions {
   def vec_maxabs(a: Column): Column = column(FloatVecMaxAbs(expression(a)))
   def vec_quant8(a: Column): Column = column(FloatVecQuant8(expression(a)))
   def vec_qdot(a: Column, b: Column): Column = column(ByteVecDot(expression(a), expression(b)))
-
-  /** Register `vec_dot` / `vec_cosine` / `vec_lsh_bucket` for spark.sql use. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => FloatVecDot(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_cosine", exprs => FloatVecCosine(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_lsh_bucket", exprs => FloatVecLshBucket(exprs(0), IntArg.of(exprs(1))), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_maxabs", exprs => FloatVecMaxAbs(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_quant8", exprs => FloatVecQuant8(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_qdot", exprs => ByteVecDot(exprs(0), exprs(1)), "scala_udf")
-  }
 }

@@ -106,7 +106,7 @@ object Profiling {
    * the exact integer result) are layout-independent and match any other
    * engine ranking the same way. Ranks come from
    * [[graft.recon.Sources.withRowIndexRanged]] (range-partitioned
-   * per-partition row_number + partition-count offsets), so no
+   * per-partition running count + partition-count offsets), so no
    * single-partition window ever touches the per-key frame; the rank
    * moment goes through DECIMAL(38,0) so Σ i·x_i cannot overflow at any
    * plausible key cardinality. The two aggregates over the ranked frame

@@ -1,6 +1,7 @@
 package graft.recon
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -81,99 +82,73 @@ object Sources {
 
   /**
    * Row-provenance index (P9, reference: with_row_index(offset=1) at
-   * src/data_extractor.py:98-99). Spark has no implicit row order, so this
-   * is the two-pass partition-offset scheme over the *current* partition
-   * order — but expressed IN-PLAN, fully lazily (an earlier rdd.zipWithIndex
-   * form ran its partition-size count job at plan-construction time, a
-   * BUILD-phase action every caller paid even if the frame was never used):
-   *   - `monotonically_increasing_id()` = pid·2³³ + position-in-partition,
-   *     so the local position falls out by subtracting the pid mask;
-   *   - per-partition row counts come from a tiny groupBy(partition id)
-   *     aggregate, cumulative offsets from a window over that aggregate
-   *     (single partition, but bounded by the PARTITION count — ~10⁶ rows
-   *     of 16 bytes even at 100 TB, not a whole-input funnel);
-   *   - offsets broadcast-join back on pid, index = offset + local.
+   * src/data_extractor.py:98-99): `offset` on the first row of the
+   * *current* partition order, then +1 per row — the running count of
+   * [[withPartitionPrefix]], fully lazy (no plan-construction action).
    * Exact, distributed, deterministic as long as the source's
    * partition/row order is (true for file sources with a fixed listing).
    */
-  def withRowIndex(df: DataFrame, name: String, offset: Long = 1L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // the counts branch and the stamping branch MUST observe the same
-    // partitioning: a re-executed exchange re-samples its range
-    // boundaries (RangePartitioner seeds from the RDD id), so two
-    // independent executions of a repartitionByRange input would count
-    // one layout and stamp another (caught by the oracle: interleaved
-    // indexes). The lazy lineage cut pins ONE materialization both
-    // branches read; being lazy, it costs nothing at plan construction.
-    val pinned = Checkpoints.cut(df)
-    val base = pinned
-      .withColumn("__rid_pid", spark_partition_id().cast(LongType))
-      .withColumn("__rid_mid", monotonically_increasing_id())
-    val counts = base.groupBy(col("__rid_pid")).agg(count(lit(1)).as("__rid_n"))
-    val w = Window.orderBy(col("__rid_pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = counts
-      .withColumn("__rid_off", coalesce(sum(col("__rid_n")).over(w), lit(0L)))
-      .select(col("__rid_pid"), col("__rid_off"))
-    base.join(broadcast(offsets), Seq("__rid_pid"))
-      .withColumn(name,
-        (col("__rid_off") + (col("__rid_mid") - shiftleft(col("__rid_pid"), 33))
-          + lit(offset)).cast(LongType))
-      .select((df.columns.map(col) :+ col(name)).toIndexedSeq: _*)
-  }
+  def withRowIndex(df: DataFrame, name: String, offset: Long = 1L): DataFrame =
+    withPartitionPrefix(df, name, lit(1L), offset - 1L)
 
   /**
    * Distributed deterministic row index by explicit sort keys — ≡
-   * `row_number() OVER (ORDER BY keys)` but with no single-partition
-   * stamping task: range-repartition on the keys (partitions are ordered
-   * ranges), sort within each partition, then assign indexes via the
-   * two-pass partition-offset scheme of [[withRowIndex]]. Every stage is
-   * distributed; the only extra cost over a global window is the
-   * partition-size count job. Keys should totally order the rows — ties
-   * that straddle a range boundary get an arbitrary (but still unique,
+   * `row_number() OVER (ORDER BY keys)` (shifted by `offset − 1`) but
+   * with no single-partition stamping task: [[withRowIndex]] over the
+   * [[ranged]] layout. Keys should totally order the rows — ties that
+   * straddle a range boundary get an arbitrary (but still unique,
    * strictly increasing) relative order, same as `row_number` itself.
    */
-  def withRowIndexRanged(df: DataFrame, name: String, order: Seq[Column], offset: Long = 1L): DataFrame = {
-    val n = df.sparkSession.sparkContext.defaultParallelism
-    withRowIndex(df.repartitionByRange(n, order: _*).sortWithinPartitions(order: _*), name, offset)
-  }
+  def withRowIndexRanged(df: DataFrame, name: String, order: Seq[Column], offset: Long = 1L): DataFrame =
+    withRowIndex(ranged(df, order), name, offset)
 
   /**
-   * Distributed running sum of `value` in `order` — ≡ `SUM(value) OVER
-   * (ORDER BY keys ROWS UNBOUNDED PRECEDING)` but with no
-   * single-partition stamping task: range-repartition on the keys, a
-   * per-partition prefix sum (window partitioned by the bounded
-   * `spark_partition_id`), then per-partition totals cumulated into
-   * broadcast offsets — the [[withRowIndex]] two-pass scheme generalized
-   * from counting to summing. Keys should totally order the rows: a tie
-   * straddling a range boundary gets an arbitrary relative order, so its
-   * prefix value (not the total) would differ between engines. The
-   * repartitioned input is lineage-cut so the prefix branch and the
-   * totals branch observe ONE partitioning (a re-executed range exchange
-   * re-samples its boundaries).
+   * Distributed running sum of `value` (integral; a null adds 0) in
+   * `order` — ≡ `SUM(value) OVER (ORDER BY keys ROWS UNBOUNDED
+   * PRECEDING)` but with no single-partition stamping task:
+   * [[withPartitionPrefix]] over the [[ranged]] layout. Keys should
+   * totally order the rows: a tie straddling a range boundary gets an
+   * arbitrary relative order, so its prefix value (not the total) would
+   * differ between engines.
    */
-  def withRunningSumRanged(df: DataFrame, name: String, value: Column,
-      order: Seq[Column]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val n = df.sparkSession.sparkContext.defaultParallelism
-    val pinned = Checkpoints.cut(
-      df.repartitionByRange(n, order: _*).sortWithinPartitions(order: _*))
-    val base = pinned
-      .withColumn("__rs_pid", spark_partition_id().cast(LongType))
-      .withColumn("__rs_val", value)
-    val local = base.withColumn("__rs_loc",
-      sum(col("__rs_val")).over(
-        Window.partitionBy(col("__rs_pid")).orderBy(order: _*)
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val offsets = base.groupBy(col("__rs_pid"))
-      .agg(sum(col("__rs_val")).as("__rs_t"))
-      .withColumn("__rs_off", coalesce(
-        sum(col("__rs_t")).over(Window.orderBy(col("__rs_pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__rs_pid"), col("__rs_off"))
-    local.join(broadcast(offsets), Seq("__rs_pid"))
-      .withColumn(name, col("__rs_off") + col("__rs_loc"))
-      .select((df.columns.map(col) :+ col(name)).toIndexedSeq: _*)
+  def withRunningSumRanged(df: DataFrame, name: String, value: Column, order: Seq[Column]): DataFrame =
+    withPartitionPrefix(ranged(df, order), name, value, 0L)
+
+  /** `df` range-partitioned on `order` (partitions are ordered ranges)
+    * and sorted within each partition: partition order then row order
+    * IS the global order. */
+  private def ranged(df: DataFrame, order: Seq[Column]): DataFrame = df.repartitionByRange(
+    df.sparkSession.sparkContext.defaultParallelism, order: _*).sortWithinPartitions(order: _*)
+
+  /**
+   * The two-pass partition-offset scheme behind every row index and
+   * running sum: `name` = `shift` + the inclusive prefix sum of `value`
+   * over `df`'s partition order, then row order.
+   *   - row side: a per-partition running sum
+   *     ([[graft.functions.PartitionRunningSum]], one codegen'd
+   *     projection — no shuffle, no sort) plus the partition id;
+   *   - totals: one `groupBy(partition id)` aggregate, at most one row
+   *     per partition, whose exclusive cumulative sum (a window over
+   *     the partition count, not the row count) is broadcast back and
+   *     joined on the partition id.
+   * Both branches MUST observe the same partitioning: a re-executed
+   * exchange re-samples its range boundaries (RangePartitioner seeds
+   * from the RDD id), so two independent executions of a
+   * repartitionByRange input would total one layout and stamp another
+   * (caught by the oracle: interleaved indexes). The lazy lineage cut
+   * pins ONE materialization both branches read; being lazy, it costs
+   * nothing at plan construction.
+   */
+  private def withPartitionPrefix(df: DataFrame, name: String, value: Column, shift: Long): DataFrame = {
+    val pinned = Checkpoints.cut(df)
+    val offsets = pinned.withColumn("__pp_pid", spark_partition_id())
+      .groupBy(col("__pp_pid")).agg(sum(value).as("__pp_t"))
+      .select(col("__pp_pid"), (coalesce(sum(col("__pp_t")).over(Window.orderBy(col("__pp_pid"))
+        .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)) + shift).as("__pp_off"))
+    pinned.select(col("*"), spark_partition_id().as("__pp_pid"),
+        graft.functions.PartitionFunctions.partition_running_sum(value).as("__pp_sum"))
+      .join(broadcast(offsets), Seq("__pp_pid"))
+      .select((df.columns.map(col) :+ (col("__pp_off") + col("__pp_sum")).as(name)).toIndexedSeq: _*)
   }
 
   /**

@@ -74,9 +74,10 @@ object PlanAudit {
     }
     // a window whose input is an aggregate GROUPED ON
     // spark_partition_id() is bounded by the partition count, not the
-    // row count — the lazy row-index offsets (Sources.withRowIndex)
-    // are exactly this shape. Resolve the grouping attribute through
-    // child Projects to the SparkPartitionID expression.
+    // row count — the partition offsets behind every row index and
+    // running sum (Sources.withPartitionPrefix) are exactly this shape.
+    // Resolve the grouping attribute through child Projects to the
+    // SparkPartitionID expression.
     def groupsOnPartitionId(p: org.apache.spark.sql.execution.SparkPlan): Boolean = {
       import org.apache.spark.sql.catalyst.expressions.{Attribute, SparkPartitionID}
       def producesPid(pl: org.apache.spark.sql.execution.SparkPlan,

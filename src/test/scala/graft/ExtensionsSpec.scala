@@ -7,9 +7,19 @@ import graft.ops.Similarity
 class ExtensionsSpec extends SparkSuite {
   import spark.implicits._
 
+  /** Register [[GraftExtensions]]' SQL functions on the shared session —
+    * the same builders a `withExtensions` session gets (a session of its
+    * own would need its own SparkContext). */
+  private def registerGraftFunctions(): Unit = {
+    val ext = new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit =
+        spark.sessionState.functionRegistry.registerFunction(f._1, f._2, f._3)
+    }
+    new GraftExtensions().apply(ext)
+  }
+
   test("custom expressions are SQL-callable with implicit input casts") {
-    graft.functions.VectorFunctions.register(spark)
-    graft.functions.TextFunctions.register(spark)
+    registerGraftFunctions()
     val r = spark.sql(
       "SELECT vec_dot(array(cast(1.0 as float), cast(2.0 as float)), " +
         "array(cast(3.0 as float), cast(0.5 as float))) AS d, " +
@@ -20,6 +30,9 @@ class ExtensionsSpec extends SparkSuite {
       "SELECT vec_lsh_bucket(array(cast(1.0 as float), cast(-2.0 as float)), 8) AS b")
       .as[Long].head()
     assert(b >= 0L && b < 256L)
+    // a BIGINT width is the same bucket, not a ClassCastException
+    assert(spark.sql("SELECT vec_lsh_bucket(array(cast(1.0 as float), " +
+      "cast(-2.0 as float)), CAST(8 AS BIGINT)) AS b").as[Long].head() == b)
     // the quantization trio: scale, codes, integer dot — end-to-end in SQL
     val q = spark.sql(
       "WITH v AS (SELECT array(cast(0.5 as float), cast(-1.0 as float)) AS x) " +
@@ -162,7 +175,7 @@ class ExtensionsSpec extends SparkSuite {
   }
 
   test("portable md5 kernels agree with their SQL-callable forms") {
-    graft.functions.TextFunctions.register(spark)
+    registerGraftFunctions()
     // md5-token simhash: SQL call == Column API == python-validated kernel
     val viaSql = spark.sql("SELECT simhash64_md5(array('the','cat')) AS s").as[Long].head()
     val viaCol = Seq(Tuple1(Seq("the", "cat"))).toDF("t")

@@ -104,8 +104,8 @@ class SimplicityGuardSpec extends AnyFunSuite {
     out.toString
   }
 
-  test("every def under graft.{ops,recon,streaming} has a non-comment reference " +
-      "in src/main or reconbench/src") {
+  test("every def under graft.{ops,recon,streaming,functions,demo} has a " +
+      "non-comment reference in src/main or reconbench/src") {
     // callers: the library and the reconciliation benchmark, never the specs
     val callers: Map[Path, String] = (scalaFiles(root) ++ scalaFiles(Paths.get("reconbench/src")))
       .map(p => p -> code(new String(Files.readAllBytes(p), "UTF-8"))).toMap
@@ -117,7 +117,8 @@ class SimplicityGuardSpec extends AnyFunSuite {
     // package-private defs; `override`s are called through their parent
     val defs = for {
       (p, src) <- callers.toSeq
-      if Seq("graft/ops", "graft/recon", "graft/streaming").exists(d => p.startsWith(root.resolve(d)))
+      if Seq("graft/ops", "graft/recon", "graft/streaming", "graft/functions", "graft/demo")
+        .exists(d => p.startsWith(root.resolve(d)))
       (owner, ln, inObject, name) <- {
         var owner = ""
         var scopes = List.empty[(Int, String)] // (indent, kind), innermost first

@@ -100,6 +100,36 @@ class SourcesSinksSpec extends SparkSuite {
     assert(got.where(col("rn") =!= col("key") + 1).count() == 0)
   }
 
+  test("row index with offset 0 over empty partitions equals row_number() - 1") {
+    // 5 rows in 16 contiguous slices: 11 partitions of the cut are empty
+    val sliced = spark.range(0, 5, 1, 16).toDF("k")
+    assert(sliced.rdd.getNumPartitions == 16)
+    assert(Sources.withRowIndex(sliced, "rn", offset = 0L)
+      .select("k", "rn").as[(Long, Long)].collect().toMap == (0L until 5L).map(k => k -> k).toMap)
+    // fewer rows than range partitions, and 5 rows over 16 partitions
+    val few = Seq(30L, 10L, 20L).toDF("k")
+    assert(spark.sparkContext.defaultParallelism > 3)
+    val five = Seq(50L, 40L, 30L, 20L, 10L).toDF("k").repartition(16)
+    for (df <- Seq(few, five)) {
+      val got = Sources.withRowIndexRanged(df, "rn", Seq(col("k")), offset = 0L)
+        .select("k", "rn").as[(Long, Long)].collect().toMap
+      val want = df.select(col("k"),
+          (row_number().over(org.apache.spark.sql.expressions.Window.orderBy(col("k"))) - 1)
+            .cast("long").as("rn"))
+        .as[(Long, Long)].collect().toMap
+      assert(got == want)
+    }
+  }
+
+  test("withRowIndex: re-executing one frame restarts every task from zero") {
+    // 16 partitions on a 4-core session: threads run several tasks each
+    val idx = Sources.withRowIndex(spark.range(0, 4000, 1, 16).toDF("k"), "rn", offset = 0L)
+      .select("k", "rn").as[(Long, Long)]
+    val first = idx.collect().toMap
+    assert(idx.collect().toMap == first)
+    assert(first.forall { case (k, rn) => k == rn })
+  }
+
   test("remanentLookup semi-joins ids back to the ledger") {
     val tx = Seq(("a1", 1), ("a2", 2), ("a3", 3)).toDF("_id", "v")
     val rem = Seq("a2", "a3", "a3", "zz").toDF("_id")
